@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,6 +43,42 @@ object AnnIndex {
 
   private def asDouble(c: org.apache.spark.sql.Column) = c.cast("array<double>")
 
+  private val Codes = Subtree("codes", "cell")
+  private val Vectors = Subtree("vectors", "cell")
+
+  private object Store extends StoreLifecycle[Meta](Seq(Codes, Vectors)) {
+    // an index saved before the keepVectors field existed has no such
+    // column in its meta parquet; default it to false instead of
+    // letting encoder resolution fail every entry point on old indexes
+    override protected def metaFrame(raw: DataFrame): DataFrame =
+      if (raw.columns.contains("keepVectors")) raw
+      else raw.withColumn("keepVectors", lit(false))
+
+    /** Sweeps `cell=<cid>` dirs whose cid is absent from the centroids
+      * file. A [[resplitCell]] crash between the centroid swap and the
+      * old-dir delete leaves the retired cell on disk forever: probes
+      * never read it (cid is gone from the centroids), but indexStats
+      * would double-count the split vectors and compactCells keeps
+      * compacting a dead partition. Runs AFTER the `.old-` restore so a
+      * dead cell parked in backup is restored first and then swept by
+      * the same rule. Orphan sub-cell dirs from a resplit that crashed
+      * BEFORE its centroid swap are swept by the same rule (their cids
+      * are not in the centroids either), which is exactly the scrub the
+      * retry would do. (Readers ignore retired dirs without deleting:
+      * probe's scan is pruned to centroid-listed cells, indexStats
+      * filters its listing to live cids — so a reader concurrent with an
+      * in-flight resplit can never sweep the fresh sub-cells out from
+      * under the coming centroid swap.) One KB centroid read. */
+    override protected def healStore(spark: SparkSession, fs: FileSystem,
+                                     dir: String): Unit =
+      if (fs.exists(new Path(s"$dir/centroids"))) {
+        val liveCids = readCentroids(spark, s"$dir/centroids").map(_._1).toSet
+        subtrees.foreach(s => PartitionedStore.partitions(fs, root(dir, s), "cell")
+          .filterNot(pd => liveCids(pd.getName.stripPrefix("cell=").toLong))
+          .foreach(fs.delete(_, true)))
+      }
+  }
+
   /** Build an IVF-flat index from `corpus` (centroids = the first
     * `cells` corpus vectors, the deterministic convention shared with
     * ivfTopK) and save it under `dir`, replacing any prior index.
@@ -61,29 +98,10 @@ object AnnIndex {
   def ivfIndexSave(corpus: DataFrame, idCol: String, vecCol: String,
                    cells: Int, dir: String, trainIters: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    val cent =
-      if (trainIters > 0)
-        trainedCentroids(corpus, idCol, vecCol, cells, trainIters)
-      else
-        collectCentroids(corpus, idCol, vecCol, cells)
-          .map { case (cid, v) => (cid, v.toArray) }
-    writeMeta(spark, dir, "ivf_flat", cells, 0, 0, 0, residual = false,
-      keepVectors = false)
+    val cent = cellCentroids(corpus, idCol, vecCol, cells, trainIters)
     writeCentroids(spark, s"$dir/centroids", cent.map { case (c, v) => (c, v.toSeq) })
-    ivfAssign(corpus, idCol, vecCol, cent)
-      .select(col("neighbor_id").as("id"), col("__cv").as("vec"),
-        col("__cid").as("cell"))
-      // cluster by cell before the partitioned write: one writer (and
-      // one file) per cell instead of tasks × cells small files; at
-      // real scale spark.sql.files.maxRecordsPerFile bounds file size
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-    // tombstones cleared LAST: a crash before this line leaves the
-    // NEW store over-masked by the old generation's tombstones (the
-    // retried save clears them) — fails closed; clearing first would
-    // leave a crash window where the OLD store serves with its
-    // right-to-erasure deletions silently resurrected (review r17)
-    clearTombstones(spark, dir)
+    Store.save(spark, dir, Meta("ivf_flat", cells, 0, 0, 0, residual = false,
+      keepVectors = false), Seq(Codes -> assignedRows(corpus, idCol, vecCol, cent)))
   }
 
   /** Build an IVF-PQ index (optionally residual-quantized) and save it
@@ -109,91 +127,61 @@ object AnnIndex {
     // (the ivfIndexSave arm, same integer-micro determinism — s18b
     // gates the lossy layout's trained twin; in residual mode the
     // codebook seeds residualize against the TRAINED cells)
-    val cellCent =
-      if (trainIters > 0)
-        trainedCentroids(corpus, idCol, vecCol, cells, trainIters)
-      else
-        collectCentroids(corpus, idCol, vecCol, cells)
-          .map { case (cid, v) => (cid, v.toArray) }
+    val cellCent = cellCentroids(corpus, idCol, vecCol, cells, trainIters)
     val codeSeeds = ivfpqCodeSeeds(
       collectCentroids(corpus, idCol, vecCol, codebook), cellCent, residual)
-    writeMeta(spark, dir, "ivf_pq", cells, m, codeSeeds.size, dim, residual,
-      keepVectors)
-    writeCentroids(spark, dir + "/centroids", cellCent.map { case (c, v) => (c, v.toSeq) })
-    writeCentroids(spark, dir + "/codebook", codeSeeds)
-    ivfpqEncode(corpus, idCol, vecCol, cellCent, codeSeeds, m, dim, residual)
-      .select(col("neighbor_id").as("id"), col("__b").as("b"),
-        col("__cid").as("code"), col("__cell").as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-    if (keepVectors)
-      ivfAssign(corpus, idCol, vecCol, cellCent)
-        .select(col("neighbor_id").as("id"), col("__cv").as("vec"),
-          col("__cid").as("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
-    clearTombstones(spark, dir) // LAST — the ivfIndexSave fails-closed note
+    val meta = Meta("ivf_pq", cells, m, codeSeeds.size, dim, residual, keepVectors)
+    writeCentroids(spark, s"$dir/centroids", cellCent.map { case (c, v) => (c, v.toSeq) })
+    writeCentroids(spark, s"$dir/codebook", codeSeeds)
+    Store.save(spark, dir, meta,
+      Seq(Codes -> pqRows(corpus, idCol, vecCol, cellCent, codeSeeds, meta)) ++
+        (if (keepVectors) Seq(Vectors -> assignedRows(corpus, idCol, vecCol, cellCent))
+         else Nil))
   }
 
-  /** The shared encode half of the ingest paths: the batch encoded
-    * against the SAVED centroids/codebook (no rebuild, no re-read of
-    * existing codes), as (id, …, cell) rows ready for a partitioned
-    * write. */
-  private def encodeBatch(spark: SparkSession, dir: String, batch: DataFrame,
-                          idCol: String, vecCol: String): DataFrame = {
-    val meta = readMeta(spark, dir)
-    val cellCent = readCentroids(spark, s"$dir/centroids")
-    meta.kind match {
-      case "ivf_flat" =>
-        ivfAssign(batch, idCol, vecCol, cellCent)
-          .select(col("neighbor_id").as("id"), col("__cv").as("vec"),
-            col("__cid").as("cell"))
-      case "ivf_pq" =>
-        val codeSeeds = readCentroids(spark, s"$dir/codebook")
-          .map { case (c, v) => (c, v.toSeq) }
-        ivfpqEncode(batch, idCol, vecCol, cellCent, codeSeeds,
-          meta.m, meta.dim, meta.residual)
-          .select(col("neighbor_id").as("id"), col("__b").as("b"),
-            col("__cid").as("code"), col("__cell").as("cell"))
-    }
-  }
+  /** The coarse cells of a new index: the first `cells` corpus vectors
+    * (the deterministic first-C convention), tightened by `trainIters`
+    * distributed Lloyd steps when positive. */
+  private def cellCentroids(corpus: DataFrame, idCol: String, vecCol: String,
+                            cells: Int, trainIters: Int): Seq[(Long, Array[Double])] =
+    if (trainIters > 0) trainedCentroids(corpus, idCol, vecCol, cells, trainIters)
+    else collectCentroids(corpus, idCol, vecCol, cells)
+      .map { case (cid, v) => (cid, v.toArray) }
+
+  /** (id, vec, cell) rows: each vector under its nearest centroid —
+    * the ivf_flat codes and the raw-vector sidecar share this layout. */
+  private def assignedRows(df: DataFrame, idCol: String, vecCol: String,
+                           cent: Seq[(Long, Array[Double])]): DataFrame =
+    ivfAssign(df, idCol, vecCol, cent)
+      .select(col("neighbor_id").as("id"), col("__cv").as("vec"),
+        col("__cid").as("cell"))
+
+  /** (id, b, code, cell) rows: the ivf_pq codes of each vector. */
+  private def pqRows(df: DataFrame, idCol: String, vecCol: String,
+                     cent: Seq[(Long, Array[Double])],
+                     codeSeeds: Seq[(Long, Seq[Double])], meta: Meta): DataFrame =
+    ivfpqEncode(df, idCol, vecCol, cent, codeSeeds, meta.m, meta.dim, meta.residual)
+      .select(col("neighbor_id").as("id"), col("__b").as("b"),
+        col("__cid").as("code"), col("__cell").as("cell"))
+
+  private def readCodebook(spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
+    readCentroids(spark, s"$dir/codebook").map { case (c, v) => (c, v.toSeq) }
 
   /** Encode a delta batch against the SAVED centroids/codebook (no
     * rebuild, no re-read of existing codes) and append it to the
-    * inverted file — the incremental-ingest path. The batch must not
-    * repeat ids already indexed (same contract as any append-only
-    * store; dedup upstream with d10/d13 if ingest can replay). For a
-    * source that RETRIES batches (Structured Streaming foreachBatch),
-    * use [[addBatchTagged]], whose replay converges to exactly one
-    * copy. */
+    * inverted file — the incremental-ingest path: [[addBatchTagged]]
+    * under a fresh tag. The batch must not repeat ids already indexed
+    * (same contract as any append-only store; dedup upstream with
+    * d10/d13 if ingest can replay). For a source that RETRIES batches
+    * (Structured Streaming foreachBatch), use [[addBatchTagged]] with
+    * the source's own tag, whose replay converges to exactly one copy. */
   def addBatch(spark: SparkSession, dir: String, batch: DataFrame,
-               idCol: String, vecCol: String): Unit = {
-    // heal BEFORE writing: a compact crash mid-swap leaves cell=X only
-    // as .old-X, and an append would recreate a live cell=X holding
-    // just the new rows — the next read-side recovery would then drop
-    // .old-X and every pre-compaction vector of that cell with it
-    recoverMaintenance(spark, dir, sweepRetired = true)
-    encodeBatch(spark, dir, batch, idCol, vecCol)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-    if (readMeta(spark, dir).keepVectors)
-      assignedVectors(spark, dir, batch, idCol, vecCol)
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
-  }
+               idCol: String, vecCol: String): Unit =
+    addBatchTagged(spark, dir, batch, idCol, vecCol, Store.freshTag())
 
-  /** The raw-vector sidecar rows of a batch — same cell assignment as
-    * the codes (shared nearest-centroid kernel and convention). */
-  private def assignedVectors(spark: SparkSession, dir: String, batch: DataFrame,
-                              idCol: String, vecCol: String): DataFrame = {
-    val cellCent = readCentroids(spark, s"$dir/centroids")
-    ivfAssign(batch, idCol, vecCol, cellCent)
-      .select(col("neighbor_id").as("id"), col("__cv").as("vec"),
-        col("__cid").as("cell"))
-  }
-
-  /** Replay-idempotent addBatch: the encoded batch is staged under
-    * `dir/.staging-<tag>`, then each file is MOVED into its cell
+  /** Replay-idempotent addBatch ([[StoreLifecycle.ingestTagged]]): the
+    * encoded batch (and its raw-vector sidecar rows, when kept — same
+    * cell assignment) is staged, then each file is MOVED into its cell
     * directory under the deterministic name `<tag>-<i>.parquet`
     * (rename is atomic per file). Re-running with the same tag first
     * scrubs every `<tag>-*` file from the cell dirs — the leftovers of
@@ -201,33 +189,24 @@ object AnnIndex {
     * exactly one copy of the batch, no matter where the previous
     * attempt died. This is what makes [[graft.streaming.StreamOps
     * .vectorIngest]]'s exactly-once claim true across crashes in the
-    * append-to-marker window, not just across clean replays. */
+    * append-to-marker window, not just across clean replays. The entry
+    * recovery runs BEFORE writing: a compact crash mid-swap leaves
+    * cell=X only as .old-X, and a write would recreate a live cell=X
+    * holding just the new rows — the next recovery would then drop
+    * .old-X and every pre-compaction vector of that cell with it. */
   def addBatchTagged(spark: SparkSession, dir: String, batch: DataFrame,
                      idCol: String, vecCol: String, tag: String): Unit = {
-    require(tag.matches("[A-Za-z0-9_-]+"), s"tag must be a safe file prefix: $tag")
-    // same live-dir-recreation hazard as addBatch
-    recoverMaintenance(spark, dir, sweepRetired = true)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val codes = new org.apache.hadoop.fs.Path(s"$dir/codes")
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/.staging-$tag")
-    val fs = codes.getFileSystem(conf)
-    PartitionedStore.scrubTag(fs, codes, "cell", tag)
-    encodeBatch(spark, dir, batch, idCol, vecCol)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
-    PartitionedStore.moveStagedTagged(fs, staging, codes, "cell", tag)
-    if (readMeta(spark, dir).keepVectors) {
-      // the sidecar replays under the same tag: a crash between the
-      // codes move above and this one heals on the next retry (scrub
-      // is per-store, rename names deterministic)
-      val vecs = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-      val vecStaging = new org.apache.hadoop.fs.Path(s"$dir/.staging-vec-$tag")
-      PartitionedStore.scrubTag(fs, vecs, "cell", tag)
-      assignedVectors(spark, dir, batch, idCol, vecCol)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(vecStaging.toString)
-      PartitionedStore.moveStagedTagged(fs, vecStaging, vecs, "cell", tag)
+    Store.recover(spark, dir)
+    val meta = Store.readMeta(spark, dir)
+    val cellCent = readCentroids(spark, s"$dir/centroids")
+    val codes = meta.kind match {
+      case "ivf_flat" => assignedRows(batch, idCol, vecCol, cellCent)
+      case "ivf_pq" =>
+        pqRows(batch, idCol, vecCol, cellCent, readCodebook(spark, dir), meta)
     }
+    Store.ingestTagged(spark, dir, tag, Seq(Codes -> codes) ++
+      (if (meta.keepVectors) Seq(Vectors -> assignedRows(batch, idCol, vecCol, cellCent))
+       else Nil))
   }
 
   /** Probe a saved index: top-k per query row, bit-identical to the
@@ -260,13 +239,13 @@ object AnnIndex {
   private def probeImpl(spark: SparkSession, dir: String, queries: DataFrame,
                         idCol: String, vecCol: String, k: Int, nprobe: Int,
                         restrict: DataFrame => DataFrame): DataFrame = {
-    readEntry(spark, dir)
-    val meta = readMeta(spark, dir)
+    Store.readEntry(spark, dir)
+    val meta = Store.readMeta(spark, dir)
     val cellCent = readCentroids(spark, s"$dir/centroids")
     // tombstone mask FIRST (deleted rows must be invisible to every
     // probe shape, filtered included), then the caller's restrict;
     // both are pre-filters inside the pruned cell scan
-    val mask: DataFrame => DataFrame = readTombstones(spark, dir) match {
+    val mask: DataFrame => DataFrame = Store.readTombstones(spark, dir) match {
       case Some(t) => df =>
         restrict(df.join(t, df("neighbor_id") === t("__tomb_id"), "left_anti"))
       case None => restrict
@@ -280,8 +259,7 @@ object AnnIndex {
             col("cell").cast("long").as("__cid")))
         ivfProbeAssigned(assigned, queries, idCol, vecCol, cellCent, k, nprobe)
       case "ivf_pq" =>
-        val codeSeeds = readCentroids(spark, s"$dir/codebook")
-          .map { case (c, v) => (c, v.toSeq) }
+        val codeSeeds = readCodebook(spark, dir)
         val codes = mask(PartitionedStore
           .prunedRead(spark, s"$dir/codes", "cell", probedCells)
           .select(col("id").as("neighbor_id"), col("cell").cast("long").as("__cell"),
@@ -292,49 +270,27 @@ object AnnIndex {
   }
 
   /** Per-cell footprint of a saved index WITHOUT scanning data pages:
-    * row counts come straight from parquet FOOTERS over the file list
-    * the partition-dir listing yields ([[PartitionedStore
-    * .footerCounts]] — one flat Spark job, so stats planning never
-    * pays the whole-store partition-DISCOVERY job a full-tree
-    * `spark.read.parquet` launches past 32 partitions), byte/file
-    * counts from the same filesystem listing (driver-side metadata
-    * plane, the same class as Hive partition listing — KB per cell,
-    * never corpus-sized). This is the skew report that tells an
-    * operator which cells [[addBatch]] has grown past their neighbors
-    * and [[resplitCell]] should split. */
+    * row counts from parquet FOOTERS, byte/file counts from the
+    * partition-dir listing ([[StoreLifecycle.partitionStats]] — one
+    * flat Spark job, never the whole-store partition-DISCOVERY job a
+    * full-tree read launches past 32 partitions; KB per cell of
+    * driver-side metadata, never corpus-sized). This is the skew report
+    * that tells an operator which cells [[addBatch]] has grown past
+    * their neighbors and [[resplitCell]] should split. Reports PHYSICAL
+    * vectors: tombstoned ids stay counted until vacuum. */
   def indexStats(spark: SparkSession, dir: String): DataFrame = {
-    readEntry(spark, dir)
+    Store.readEntry(spark, dir)
     import spark.implicits._
     // ivf_pq stores m code rows per vector — report VECTORS, not rows
     // (still footer-count-only: rows / m is exact, no distinct needed)
-    val meta = readMeta(spark, dir)
+    val meta = Store.readMeta(spark, dir)
     val perVec = if (meta.kind == "ivf_pq") meta.m.toLong else 1L
-    val root = new org.apache.hadoop.fs.Path(s"$dir/codes")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // read path: IGNORE (don't sweep) dirs retired by a resplit — see
-    // recoverMaintenance; a cell parked in `.old-` by a crashed or
-    // in-flight compact is listed THROUGH its backup (readPartitions),
-    // never restored; the centroid read is the KB pull every probe
-    // already does
-    val liveCids = readCentroids(spark, s"$dir/centroids").map(_._1).toSet
-    val fsRows = PartitionedStore.readPartitions(fs, root, "cell")
-      .map { case (v, pd) =>
-        val cid = v.toLong
-        val files = fs.listStatus(pd)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        (cid, files.map(_.getPath.toString), files.length.toLong,
-          files.map(_.getLen).sum)
-      }
-      .filter { case (cid, _, _, _) => liveCids.contains(cid) }
-    // row counts from parquet FOOTERS over the exact file list above —
-    // one flat Spark job, no partition-discovery listing job no matter
-    // how many cells the store has grown (PartitionedStore.footerCounts)
-    val counts = PartitionedStore.footerCounts(spark,
-      fsRows.flatMap { case (cid, files, _, _) => files.map((cid.toString, _)) })
-    fsRows
-      .map { case (cid, _, nFiles, bytes) =>
-        (cid, counts.getOrElse(cid.toString, 0L) / perVec, nFiles, bytes)
-      }
+    // the Store's healStore; the centroid read is the KB pull every
+    // probe already does
+    val liveCids = readCentroids(spark, s"$dir/centroids").map(_._1.toString).toSet
+    Store.partitionStats(spark, dir, Codes, keepPart = liveCids)
+      .map { case (v, rows, nFiles, bytes) => (v.toLong, rows / perVec, nFiles, bytes) }
       .toDF("cell", "n_vectors", "n_files", "bytes")
       .orderBy("cell")
   }
@@ -366,13 +322,13 @@ object AnnIndex {
     * are removed last, so a crash mid-op leaves a probe-able index
     * whose worst case is the split cell present twice on disk (never
     * in a probe: the probe scan is pruned to centroid-listed cells) —
-    * and the next entry point's [[recoverMaintenance]] sweeps
+    * and the next write entry point's recovery sweeps
     * whichever copy the centroids no longer name, so the double-count
     * is not permanent either. */
   def resplitCell(spark: SparkSession, dir: String, cid: Long, k: Int): Unit = {
     // writes cell dirs -> same hazard as addBatch
-    recoverMaintenance(spark, dir, sweepRetired = true)
-    val meta = readMeta(spark, dir)
+    Store.recover(spark, dir)
+    val meta = Store.readMeta(spark, dir)
     require(meta.kind == "ivf_flat" || meta.keepVectors,
       "resplitCell needs raw vectors: ivf_flat stores them in the codes " +
         "table, ivf_pq only with keepVectors = true (PQ codes are lossy) — " +
@@ -398,37 +354,22 @@ object AnnIndex {
       // orphan sub-cell dirs from a crashed prior attempt (it died
       // before the centroid swap, so base is recomputed the same and a
       // plain append would double every row) were already swept by the
-      // entry recoverMaintenance: their cids are not in the centroids
-      val reassigned = ivfAssign(cellVecs, "id", "vec", subCent)
-        .select(col("neighbor_id").as("id"), col("__cv").as("vec"),
-          col("__cid").as("cell"))
+      // entry recovery: their cids are not in the centroids
+      val reassigned = assignedRows(cellVecs, "id", "vec", subCent)
       if (meta.kind == "ivf_flat")
-        reassigned
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+        PartitionedStore.writePartitioned(reassigned, "cell", "append", s"$dir/codes")
       else {
-        val codeSeeds = readCentroids(spark, s"$dir/codebook")
-          .map { case (c, v) => (c, v.toSeq) }
-        ivfpqEncode(cellVecs, "id", "vec", subCent, codeSeeds,
-            meta.m, meta.dim, meta.residual)
-          .select(col("neighbor_id").as("id"), col("__b").as("b"),
-            col("__cid").as("code"), col("__cell").as("cell"))
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-        reassigned
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
+        PartitionedStore.writePartitioned(pqRows(cellVecs, "id", "vec", subCent,
+          readCodebook(spark, dir), meta), "cell", "append", s"$dir/codes")
+        PartitionedStore.writePartitioned(reassigned, "cell", "append", s"$dir/vectors")
       }
       writeCentroids(spark, s"$dir/centroids",
         (cellCent.filterNot(_._1 == cid).map { case (c, v) => (c, v.toSeq) } ++
           subCent.map { case (c, v) => (c, v.toSeq) }).sortBy(_._1))
-      writeMeta(spark, dir, meta.kind, meta.cells + k - 1, meta.m,
-        meta.codebook, meta.dim, meta.residual, meta.keepVectors)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/codes/cell=$cid"), true)
-      if (meta.kind == "ivf_pq")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/vectors/cell=$cid"), true)
+      Store.writeMeta(spark, dir, meta.copy(cells = meta.cells + k - 1))
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new Path(s"$dir/codes/cell=$cid"), true)
+      if (meta.kind == "ivf_pq") fs.delete(new Path(s"$dir/vectors/cell=$cid"), true)
     } finally cellVecs.unpersist()
   }
 
@@ -438,205 +379,61 @@ object AnnIndex {
     * micro-batch appends at least one file to each touched cell, so
     * after thousands of batches a probe pays thousands of tiny-file
     * opens per probed cell (the classic small-files failure mode).
-    * Only the flagged cells are read and rewritten (partition-pruned
-    * scan per cell, write staged to `codes/.compact-<cell>` then
-    * swapped in), centroids/codebook/meta untouched, results
-    * bit-identical (SimilaritySpec pins probe equality). Works for
-    * both layouts — compaction moves rows, never re-encodes.
+    * Only the flagged cells are read and rewritten behind the shared
+    * rename swap ([[StoreLifecycle.compact]]); the raw-vector sidecar
+    * (when kept) accumulates ingest files at the same rate as the codes
+    * and compacts alongside them. Centroids/codebook/meta untouched,
+    * results bit-identical (SimilaritySpec pins probe equality). Works
+    * for both layouts — compaction moves rows, never re-encodes.
     * Single-writer maintenance op, same contract as addBatch.
     * Returns the compacted cell ids. */
-  def compactCells(spark: SparkSession, dir: String, minFiles: Int = 8): Seq[Long] = {
-    recoverMaintenance(spark, dir, sweepRetired = true)
-    // per-cell pruned reads, dot-prefixed staging, live→backup→live
-    // rename swap — the shared single-partition-column machinery; the
-    // raw-vector sidecar (when kept) accumulates ingest files at the
-    // same rate as the codes and compacts alongside them
-    val codes = PartitionedStore.compact(spark,
-      new org.apache.hadoop.fs.Path(s"$dir/codes"), "cell", minFiles)
-      .map(_.toLong)
-    PartitionedStore.compact(spark,
-      new org.apache.hadoop.fs.Path(s"$dir/vectors"), "cell", minFiles)
-    codes
-  }
-
-  /** A full SAVE replaces any prior index, so tombstones (committed
-    * or staged) against the old generation must not survive into the
-    * new one — without this, a rebuilt index would silently mask ids
-    * a prior generation happened to delete. */
-  private def clearTombstones(spark: SparkSession, dir: String): Unit =
-    PartitionedStore.clearTombstones(spark, dir)
+  def compactCells(spark: SparkSession, dir: String, minFiles: Int = 8): Seq[Long] =
+    Store.compact(spark, dir, minFiles).collect { case (Codes, v) => v.toLong }
 
   /** Tombstone-delete: mark `ids` deleted WITHOUT touching the
     * data-sized inverted file (the GDPR/right-to-erasure shape every
     * production vector store needs — FAISS `remove_ids`, the delta
-    * tombstones of lakehouse tables). The id list is written as a
-    * committed batch under `dir/tombstones/<tag>/`; every probe shape
+    * tombstones of lakehouse tables). The id list is committed as a
+    * batch under `dir/tombstones/<tag>/` ([[StoreLifecycle.deleteIds]]:
+    * staged, one atomic rename, replay-idempotent); every probe shape
     * ([[probe]], [[probeFiltered]], both layouts) anti-joins it
     * INSIDE the pruned cell scan before any distance work, so deleted
     * rows are invisible immediately at probe cost ∝ tombstones, and
-    * [[vacuumDeletes]] later reclaims the bytes.
-    *
-    * Crash/replay discipline (the addBatchTagged contract, applied to
-    * deletes): the batch stages under `dir/.staging-del-<tag>` and
-    * COMMITS by one atomic directory rename — a crash before the
-    * rename leaves only staging, which readers never list and which
-    * the next write entry sweeps; re-running a committed tag is a
-    * no-op, so any number of replays converges to exactly one copy.
-    * Deleting an id that was never indexed is legal (the anti-join
-    * ignores it); deleting an id twice across batches is legal (set
-    * semantics). Single-writer, like every maintenance op.
-    *
-    * Stats note: [[indexStats]] reports PHYSICAL rows — tombstoned
-    * ids stay in its counts until vacuum, exactly like the bytes they
-    * still occupy. */
+    * [[vacuumDeletes]] later reclaims the bytes. Deleting an id that
+    * was never indexed is legal (the anti-join ignores it); deleting an
+    * id twice across batches is legal (set semantics). Single-writer,
+    * like every maintenance op. */
   def deleteIds(spark: SparkSession, dir: String, ids: DataFrame,
-                idCol: String, tag: String): Unit = {
-    recoverMaintenance(spark, dir, sweepRetired = true)
-    PartitionedStore.commitTombstones(spark, dir,
-      ids.select(col(idCol).cast("long").as("__tomb_id")), tag)
-    PartitionedStore.refresh(spark, dir)
-  }
-
-  /** The committed tombstone set as one distinct-id relation, or None
-    * when nothing is tombstoned. KB-to-MB scale in practice (deletes
-    * are rare events over a corpus), but never collected — the probe
-    * mask and vacuum both consume it as a relation. */
-  private[graft] def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] =
-    PartitionedStore.readTombstones(spark, dir)
+                idCol: String, tag: String): Unit =
+    Store.deleteIds(spark, dir, ids.select(col(idCol).cast("long").as("__tomb_id")), tag)
 
   /** Physically remove tombstoned rows and retire the applied
-    * tombstone batches — the reclaim half of [[deleteIds]]. Affected
-    * cells are found by one column-pruned id scan of the inverted
-    * file (vacuum is the deliberate heavy op; the probe-time mask is
-    * the cheap path), and each is rewritten with the compactCells
-    * swap discipline (stage `.compact-<cell>`, park live as
-    * `.old-<cell>`, swap, drop backup) — so a crash at ANY point
-    * leaves every cell individually live-or-backup, [[
-    * recoverMaintenance]] heals it, and the tombstones (removed only
-    * after every cell swapped) re-apply idempotently on the retry:
-    * probes never see a deleted row, before, during, or after.
-    * Rewrites the raw-vector sidecar alongside when kept. Returns the
-    * rewritten cell ids.
+    * tombstone batches — the reclaim half of [[deleteIds]]
+    * ([[StoreLifecycle.vacuum]]). Affected cells are found by one
+    * column-pruned id scan of the inverted file (vacuum is the
+    * deliberate heavy op; the probe-time mask is the cheap path); the
+    * codes and, when kept, the raw-vector sidecar are rewritten
+    * concurrently. A crash at ANY point leaves every cell
+    * individually live-or-backup, the next write entry heals it, and
+    * the tombstones (retired only after every cell swapped) re-apply
+    * idempotently on the retry: probes never see a deleted row,
+    * before, during, or after. Returns the rewritten cell ids.
     *
     * Reader-liveness bound: a lazy probe DataFrame planned BEFORE a
-    * vacuum stays executable through the vacuum itself (retired
-    * tombstone batches are parked, not deleted, and swapped cells read
-    * through `.old-` backups) but NOT across the NEXT write op, which
-    * sweeps the parked batch files — execute (collect/count/write) any
-    * such probe before issuing another [[deleteIds]]/[[addBatchTagged]]/
+    * vacuum stays executable through the vacuum itself but NOT across
+    * the NEXT write op — execute (collect/count/write) any such probe
+    * before issuing another [[deleteIds]]/[[addBatchTagged]]/
     * [[compactCells]]/[[vacuumDeletes]]. Same contract as
-    * [[BandIndex.vacuumDeletes]].
-    *
-    * Rewrite shape: ≤ 96 touched cells run as pooled per-cell jobs
-    * (`parallelism` submitters); past that the shared plumbing
-    * switches to ONE partitioned rewrite job over the affected cells
-    * ([[PartitionedStore.rewriteExcludingAll]] — 5.2× at full touch,
-    * SCALE.md r18). */
-  def vacuumDeletes(spark: SparkSession, dir: String,
-                    parallelism: Int = 16): Seq[Long] = {
-    recoverMaintenance(spark, dir, sweepRetired = true)
-    val toms = readTombstones(spark, dir).getOrElse(return Seq.empty)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // snapshot the batches being applied: a delete committed after
-    // this listing survives this vacuum and applies at the next one
-    val applied = PartitionedStore.tombstoneBatches(fs, dir)
-    val tombIds = toms.persist()
-    try {
+    * [[BandIndex.vacuumDeletes]]. */
+  def vacuumDeletes(spark: SparkSession, dir: String): Seq[Long] =
+    Store.vacuum(spark, dir) { tombIds =>
       val affected = spark.read.parquet(s"$dir/codes")
         .select(col("id").cast("long").as("id"), col("cell").cast("long").as("cell"))
         .join(tombIds, col("id") === col("__tomb_id"), "left_semi")
-        .select("cell").distinct().collect().map(_.getLong(0)).toIndexedSeq
-      val keepVectors = readMeta(spark, dir).keepVectors
-      val rewritten =
-        (for (sub <- Seq("codes") ++ (if (keepVectors) Seq("vectors") else Nil))
-          yield PartitionedStore.rewriteExcludingAll(spark,
-            new org.apache.hadoop.fs.Path(s"$dir/$sub"), "cell",
-            affected.map(_.toString), tombIds, "id", parallelism)).flatten.distinct
-      // park, don't delete: a probe planned before this vacuum holds
-      // file paths into the batch dirs (review r17); the next write
-      // entry sweeps the parked files when no such plan can be live
-      PartitionedStore.retireTombstones(fs, applied)
-      PartitionedStore.refresh(spark, dir)
-      rewritten.map(_.toLong).sorted
-    } finally tombIds.unpersist()
-  }
-
-  /** Repair whatever a crashed maintenance pass left behind — called
-    * from every WRITE entry point (compactCells, addBatch,
-    * addBatchTagged, resplitCell) and from write entry points ONLY:
-    * single-writer means nothing can be in flight when a writer runs,
-    * so every remnant it sees really is a crash. A READER cannot make
-    * that call — an in-flight compact mid-swap looks exactly like a
-    * crashed one, and a reader "restoring" `.old-X` between the two
-    * renames makes the writer's staged→live rename fail (ADVICE r14);
-    * read entry points (probe, indexStats) therefore mutate NOTHING
-    * and read through the remnants instead ([[PartitionedStore
-    * .prunedRead]] serves an orphaned `.old-` backup's rows,
-    * [[PartitionedStore.readPartitions]] lists them). The write-side
-    * heal also matters for appends: an ingest that recreates a live
-    * `cell=X` while `.old-X` still holds the pre-compaction rows would
-    * make the next recovery delete `.old-X` — silently dropping every
-    * old vector of that cell. Three repairs, in dependency order:
-    *   1. `.old-<cid>` with no live `cell=<cid>` twin → the crash
-    *      landed between [[compactCells]]' two renames; restore it.
-    *      With a live twin the backup is stale → drop it.
-    *   2. stale `.compact-*` staging dirs → leaked cell copy from a
-    *      crash before the swap; drop.
-    *   3. `cell=<cid>` dirs whose cid is absent from the centroids
-    *      file → a [[resplitCell]] crash between the centroid swap and
-    *      the old-dir delete leaves the retired cell on disk forever:
-    *      probes never read it (cid is gone from the centroids), but
-    *      indexStats would double-count the split vectors and
-    *      compactCells keeps compacting a dead partition. Runs AFTER
-    *      the `.old-` restore so a dead cell parked in backup is
-    *      restored first and then swept by the same rule. Orphan
-    *      sub-cell dirs from a resplit that crashed BEFORE its
-    *      centroid swap are swept by the same rule (their cids are not
-    *      in the centroids either), which is exactly the scrub the
-    *      retry would do. (Readers ignore retired dirs without
-    *      deleting: probe's scan is pruned to centroid-listed cells,
-    *      indexStats filters its listing to live cids — so a reader
-    *      concurrent with an in-flight resplit can never sweep the
-    *      fresh sub-cells out from under the coming centroid swap.)
-    * Listing-only plus one KB centroid read when there is nothing to
-    * repair (the common case). */
-  private def recoverMaintenance(spark: SparkSession, dir: String,
-                                 sweepRetired: Boolean): Unit = {
-    val codesRoot = new org.apache.hadoop.fs.Path(s"$dir/codes")
-    val fs = codesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionedStore.sweepRetiredTombstones(fs, dir)
-    if (fs.exists(codesRoot)) {
-      val vecsRoot = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-      PartitionedStore.recover(fs, codesRoot, "cell")
-      PartitionedStore.recover(fs, vecsRoot, "cell")
-      val centPath = new org.apache.hadoop.fs.Path(s"$dir/centroids")
-      if (sweepRetired && fs.exists(centPath)) {
-        val liveCids = readCentroids(spark, centPath.toString).map(_._1).toSet
-        Seq(codesRoot, vecsRoot).foreach { root =>
-          PartitionedStore.partitions(fs, root, "cell").foreach { pd =>
-            val cid = pd.getName.stripPrefix("cell=").toLong
-            if (!liveCids.contains(cid)) fs.delete(pd, true)
-          }
-        }
-      }
-    }
-    // re-cache any cached plans over a store whose files a prior
-    // save / compact / resplit swapped out (PartitionedStore.refresh
-    // scaladoc). AFTER the FS repairs above: refresh re-executes
-    // cached plans lazily against the tree as it stands, and recaching
-    // against a still-parked `.old-` backup would capture an empty
-    // listing for that partition (pinned by SimilaritySpec's
-    // write-path recovery test).
-    PartitionedStore.refresh(spark, dir)
-  }
-
-  /** Read-entry prologue (probe, indexStats): NO filesystem mutation —
-    * see [[recoverMaintenance]]'s contract note. Only the driver-side
-    * catalog refresh remains (re-lists cached plans over files a prior
-    * maintenance op swapped; writes nothing). */
-  private def readEntry(spark: SparkSession, dir: String): Unit =
-    PartitionedStore.refresh(spark, dir)
+        .select("cell").distinct().collect().map(_.getLong(0).toString).toIndexedSeq
+      Seq(Codes -> affected) ++
+        (if (Store.readMeta(spark, dir).keepVectors) Seq(Vectors -> affected) else Nil)
+    }.map(_._2.toLong).distinct.sorted
 
   /** The distinct cells the query set will probe — a queries×nprobe
     * KB readback (same boundary class as the centroid pull) used to
@@ -654,29 +451,6 @@ object AnnIndex {
   private[graft] case class Meta(kind: String, cells: Int, m: Int,
                                  codebook: Int, dim: Int, residual: Boolean,
                                  keepVectors: Boolean)
-
-  private def writeMeta(spark: SparkSession, dir: String, kind: String,
-                        cells: Int, m: Int, codebook: Int, dim: Int,
-                        residual: Boolean, keepVectors: Boolean): Unit = {
-    import spark.implicits._
-    Seq(Meta(kind, cells, m, codebook, dim, residual, keepVectors)).toDF()
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): Meta =
-    // fingerprint-memoized (optimization r18): every probe/ingest/
-    // vacuum re-read this one-row parquet as a full Spark job
-    PartitionedStore.memoizedReadback(spark, s"$dir/meta") {
-      import spark.implicits._
-      // an index saved before the keepVectors field existed has no such
-      // column in its meta parquet; default it to false instead of
-      // letting encoder resolution fail every entry point on old indexes
-      val raw = spark.read.parquet(s"$dir/meta")
-      val withDefault =
-        if (raw.columns.contains("keepVectors")) raw
-        else raw.withColumn("keepVectors", lit(false))
-      withDefault.as[Meta].head()
-    }
 
   private def writeCentroids(spark: SparkSession, path: String,
                              cent: Seq[(Long, Seq[Double])]): Unit = {

@@ -1,8 +1,11 @@
 package graft.functions
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.StringType
 
 /** Shared crash-safe maintenance machinery for on-disk stores laid out
   * as a parquet tree partitioned by ONE column ([[AnnIndex]]'s
@@ -28,16 +31,18 @@ import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
   * swap is in flight and [[recover]] restores it if the swap never
   * finished; `.compact-*` / staging dirs are invisible to parquet
   * listings (dot-prefixed) and dropped on recovery.
+  *
+  * This object works on ONE tree; [[StoreLifecycle]] composes it into
+  * the whole-store operations (meta, several subtrees, tombstones) both
+  * stores share. Every fan-out runs on the one shared pool
+  * ([[parallel]]).
   */
 private[graft] object PartitionedStore {
 
   /** The live partition dirs of `root` (empty when the tree does not
     * exist yet — a store before its first write). */
   def partitions(fs: FileSystem, root: Path, partCol: String): Seq[Path] =
-    if (fs.exists(root))
-      fs.listStatus(root).filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(partCol + "=")).map(_.getPath).toSeq
-    else Seq.empty
+    readView(fs, root, partCol)._1
 
   /** ONE root listing split into the reader's view: (live partition
     * dirs, orphan `.old-<v>` backups with no live twin, keyed by
@@ -47,8 +52,8 @@ private[graft] object PartitionedStore {
     * them via [[recover]]; read entry points must not mutate, so they
     * read through the backup instead. Single listStatus call: at
     * 10⁴–10⁵ partition dirs the root listing is the dominant
-    * metadata-plane cost of a probe (ProfileBandProbe ×100), so read
-    * paths must never pay it twice for one view. */
+    * metadata-plane cost of a probe (the ×100 band-probe runs in
+    * SCALE.md), so read paths must never pay it twice for one view. */
   def readView(fs: FileSystem, root: Path, partCol: String)
   : (Seq[Path], Map[String, Path]) =
     if (!fs.exists(root)) (Seq.empty, Map.empty)
@@ -155,129 +160,49 @@ private[graft] object PartitionedStore {
     (base.toSeq ++ orphanReads).reduce(_ unionByName _)
   }
 
-  // ---- tombstone plumbing shared by the delete arms of both
-  // persisted stores (AnnIndex / BandIndex). A committed delete batch
-  // is a parquet dir of one `__tomb_id` column under
-  // `<dir>/tombstones/<tag>/`; commit is ONE atomic directory rename
-  // from `<dir>/.staging-del-<tag>` (a crash before it leaves only
-  // staging, which readers never list and the next write entry
-  // sweeps); replaying a committed tag is a no-op.
+  /** Write `df` as a tree partitioned by `partCol` under `path`,
+    * clustered by the partition column first: one writer (and one
+    * file) per partition instead of tasks × partitions small files; at
+    * real scale spark.sql.files.maxRecordsPerFile bounds file size. */
+  def writePartitioned(df: DataFrame, partCol: String, mode: String,
+                       path: String): Unit =
+    df.repartition(col(partCol)).write.mode(mode).partitionBy(partCol).parquet(path)
 
-  /** Stage-and-commit a tombstone batch. `ids` must be a one-column
-    * relation named `__tomb_id` (the caller fixes the type — it must
-    * match the store's id column). Sweeps crashed delete stagings
-    * first (single-writer: any leftover IS a crash remnant). */
-  def commitTombstones(spark: SparkSession, dir: String, ids: org.apache.spark.sql.DataFrame,
-                       tag: String): Unit = {
-    require(tag.matches("[A-Za-z0-9_-]+"), s"tag must be a safe file prefix: $tag")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(s"$dir/tombstones")
-    val fs = root.getFileSystem(conf)
-    sweepDeleteStagings(fs, new Path(dir))
-    val committed = new Path(root, tag)
-    if (fs.exists(committed)) return // replayed tag: already committed
-    val staging = new Path(s"$dir/.staging-del-$tag")
-    ids.select(col("__tomb_id")).distinct()
-      .write.mode("overwrite").parquet(staging.toString)
-    fs.delete(new Path(staging, "_SUCCESS"), false)
-    fs.mkdirs(root)
-    require(fs.rename(staging, committed),
-      s"tombstone commit rename failed for tag $tag")
+  /** Swap a staged rewrite of partition `value` in for its live dir:
+    * park live as `.old-<v>`, rename staged to live, drop the backup.
+    * A crash between the renames leaves the value individually
+    * live-or-backup for [[recover]]; staged dirs are `.compact-*`,
+    * invisible to parquet listings and dropped on recovery. */
+  private def swapIn(fs: FileSystem, root: Path, partCol: String,
+                     value: String, staged: Path): Unit = {
+    val live = new Path(root, s"$partCol=$value")
+    val backup = new Path(root, s".old-$value")
+    require(fs.rename(live, backup), s"swap: rename $live -> $backup failed")
+    require(fs.rename(staged, live), s"swap: rename $staged -> $live failed")
+    fs.delete(backup, true)
   }
-
-  /** The committed tombstone set as one distinct `__tomb_id` relation,
-    * or None when nothing is tombstoned. Never collected — probe masks
-    * and vacuums consume it as a relation. Dot-prefixed dirs (batches
-    * a finished vacuum parked via [[retireTombstones]]) are not live. */
-  def readTombstones(spark: SparkSession, dir: String): Option[org.apache.spark.sql.DataFrame] = {
-    val root = new Path(s"$dir/tombstones")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    val batches = fs.listStatus(root)
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("."))
-      .map(_.getPath.toString)
-    if (batches.isEmpty) None
-    else Some(spark.read.parquet(batches.toIndexedSeq: _*)
-      .select(col("__tomb_id")).distinct())
-  }
-
-  /** The committed (live) tombstone batch dirs — for a vacuum to
-    * snapshot at entry and retire after every affected partition
-    * swapped. */
-  def tombstoneBatches(fs: FileSystem, dir: String): Seq[Path] = {
-    val root = new Path(s"$dir/tombstones")
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root)
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("."))
-      .map(_.getPath).toIndexedSeq
-  }
-
-  /** Retire applied tombstone batches WITHOUT deleting their files: a
-    * probe DataFrame planned before the vacuum holds concrete file
-    * paths into the batch dirs, and a hard delete would fail it with
-    * FileNotFound mid-execution (the store's readers are allowed to
-    * run any time — the same reasoning as the `.old-` read-through).
-    * Each dir is renamed to the dot-prefixed `.retired-<tag>` —
-    * invisible to [[readTombstones]]/[[tombstoneBatches]] immediately
-    * — and the FILES live until [[sweepRetiredTombstones]] runs from
-    * the next WRITE entry point (single-writer: by then no plan that
-    * could reference them is in flight). */
-  def retireTombstones(fs: FileSystem, batches: Seq[Path]): Unit =
-    batches.foreach { p =>
-      val parked = new Path(p.getParent, s".retired-${p.getName}")
-      fs.delete(parked, true) // a crashed prior retire of the same tag
-      require(fs.rename(p, parked), s"tombstone retire rename $p failed")
-    }
-
-  /** Drop batches a prior vacuum parked — WRITE entry points only. */
-  def sweepRetiredTombstones(fs: FileSystem, dir: String): Unit = {
-    val root = new Path(s"$dir/tombstones")
-    if (fs.exists(root))
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(".retired-"))
-        .foreach(st => fs.delete(st.getPath, true))
-  }
-
-  /** A full SAVE replaces the store, so tombstones (committed or
-    * staged) against the old generation must not survive into the new
-    * one. */
-  def clearTombstones(spark: SparkSession, dir: String): Unit = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dirPath)) {
-      fs.delete(new Path(s"$dir/tombstones"), true)
-      sweepDeleteStagings(fs, dirPath)
-    }
-  }
-
-  private def sweepDeleteStagings(fs: FileSystem, dirPath: Path): Unit =
-    if (fs.exists(dirPath))
-      fs.listStatus(dirPath).filter(_.getPath.getName.startsWith(".staging-del-"))
-        .foreach(st => fs.delete(st.getPath, true))
 
   /** Rewrite one live partition dir without the tombstoned ids, behind
-    * the [[compact]] swap discipline (stage `.compact-<v>`, park live
-    * as `.old-<v>`, swap, drop backup) — a crash at any point leaves
-    * the partition individually live-or-backup for [[recover]], and
-    * the not-yet-retired tombstones re-apply idempotently on retry.
-    * Returns false (untouched) for a partition value with no live dir
-    * — so callers report only REAL rewrites. */
+    * the [[compact]] swap discipline ([[swapIn]]) — a crash at any
+    * point leaves the partition individually live-or-backup for
+    * [[recover]], and the not-yet-retired tombstones re-apply
+    * idempotently on retry. Returns false (untouched) for a partition
+    * value with no live dir — so callers report only REAL rewrites. */
   def rewriteExcluding(spark: SparkSession, root: Path, partCol: String,
-                       value: String, tombIds: org.apache.spark.sql.DataFrame,
+                       value: String, tombIds: DataFrame,
                        idCol: String): Boolean = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(root, s"$partCol=$value")
     if (!fs.exists(live)) return false
     val staged = new Path(root, s".compact-$value")
-    val backup = new Path(root, s".old-$value")
     // Output file count is SIZE-based, not a blanket coalesce(1):
     // vacuum is not compaction — a genuinely large partition (GBs at
     // real store scale) rewritten through one task is a single-task
-    // straggler that the submitter pool's across-partition parallelism
-    // can't help (r17 session ADVICE). Target ~128 MB of INPUT bytes
-    // per output file: small partitions still land as one file (the
-    // fixture case, and the small-files valve's preference), large
-    // ones keep task parallelism ∝ their size.
+    // straggler that across-partition parallelism can't help (r17
+    // session ADVICE). Target ~128 MB of INPUT bytes per output file:
+    // small partitions still land as one file (the fixture case, and
+    // the small-files valve's preference), large ones keep task
+    // parallelism ∝ their size.
     val liveBytes = fs.listStatus(live)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
@@ -287,41 +212,68 @@ private[graft] object PartitionedStore {
       .coalesce(outFiles)
       .write.mode("overwrite").parquet(staged.toString)
     fs.delete(new Path(staged, "_SUCCESS"), false)
-    require(fs.rename(live, backup), s"vacuum: rename $live -> $backup failed")
-    require(fs.rename(staged, live), s"vacuum: rename $staged -> $live failed")
-    fs.delete(backup, true)
+    swapIn(fs, root, partCol, value, staged)
     true
   }
 
-  /** Run `f` over `items` from a bounded submitter pool — the shared
-    * concurrency plumbing of [[compact]] and [[rewriteExcludingAll]]
-    * (each item is a tiny Spark job; sequential submission is pure
-    * job-launch latency once tens of items are in play). Preserves
-    * input order in the results. */
-  private def pooled[T, R](items: Seq[T], parallelism: Int)(f: T => R): Seq[R] = {
-    if (items.isEmpty) return Seq.empty
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, items.size)))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(items.map(it =>
-          scala.concurrent.Future(f(it)))),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+  // ---- the one thread pool of the store code. Every fan-out — twin
+  // subtree writes, twin vacuum rewrites, per-partition rewrites and
+  // compactions, per-dir listings — goes through [[parallel]]. Each
+  // item is a tiny Spark job or FS call, so sequential submission is
+  // pure job-launch latency once several are in play.
+
+  /** Cached daemon pool, created on first use: a task that blocks on
+    * nested work (band vacuum runs two [[rewriteExcludingAll]] calls at
+    * once, each of which may fan out again) gets a fresh thread instead
+    * of waiting for a slot, so nesting never deadlocks; idle threads
+    * exit after 60 s, and daemon threads never hold the JVM open. */
+  private lazy val submitters = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-store-submitter")
+    t.setDaemon(true)
+    t
   }
 
-  /** [[rewriteExcluding]] over many partition values from a bounded
-    * submitter pool (the [[compact]] pattern — each rewrite is a tiny
-    * Spark job and sequential submission is pure job-launch latency
-    * once tens of partitions are affected; the per-partition swap is
-    * unchanged, so a crash mid-pool leaves each partition individually
-    * live-or-backup for [[recover]]).
+  /** Most tasks one [[parallel]] call keeps in flight. */
+  private val maxParallel = 8
+
+  /** `f` over `items` on the shared pool, at most [[maxParallel]] at
+    * a time, results in input order. Every task runs under the
+    * caller's Spark local properties (job group, description,
+    * scheduler pool, SQL execution id) and active session, captured at
+    * submission the way Spark's own broadcast pool does — a long-lived
+    * pool thread inherits none of them at creation. Returns only after
+    * every started task stopped; the first failure is rethrown and no
+    * further items start after it. */
+  def parallel[T, R](spark: SparkSession, items: Seq[T])(f: T => R): Seq[R] = {
+    val xs = items.toIndexedSeq
+    if (xs.size <= 1) return xs.map(f)
+    val out = new Array[Any](xs.size)
+    val next = new AtomicInteger
+    val failure = new AtomicReference[Throwable]
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    Seq.fill(math.min(maxParallel, xs.size))(
+      SQLExecution.withThreadLocalCaptured(session, submitters) {
+        var i = next.getAndIncrement()
+        while (i < xs.size && failure.get == null) {
+          try out(i) = f(xs(i))
+          catch { case t: Throwable => failure.compareAndSet(null, t) }
+          i = next.getAndIncrement()
+        }
+      }).foreach(_.join())
+    Option(failure.get).foreach(t => throw t)
+    out.toSeq.asInstanceOf[Seq[R]]
+  }
+
+  /** [[rewriteExcluding]] over many partition values.
     *
-    * Past `bulkThreshold` affected partitions the per-partition shape
-    * inverts: each rewrite is ~3 driver-dispatched Spark jobs (its
-    * broadcast build, its write, its AQE stage) even when the
+    * Below `bulkThreshold` affected partitions each value is rewritten
+    * on its own from the shared pool ([[parallel]]); the per-partition
+    * swap is unchanged, so a crash mid-pool leaves each partition
+    * individually live-or-backup for [[recover]].
+    *
+    * From `bulkThreshold` affected partitions up the per-partition
+    * shape inverts: each rewrite is ~3 driver-dispatched Spark jobs
+    * (its broadcast build, its write, its AQE stage) even when the
     * partition holds a few KB, so a vacuum touching MOST of the store
     * (a fractional delete re-banded across every bucket — the ×100
     * fraction arm measured 3 993 touched = 122 s of pure job dispatch,
@@ -333,27 +285,25 @@ private[graft] object PartitionedStore {
     * behavior is identical (each partition individually live-or-backup;
     * the `.compact-bulkvac` staging dir is swept by [[recover]]).
     *
-    * Threshold MEASURED, not assumed (optimization r18,
-    * tools/ProfileMaintSmall — the r18 build session measured 299/
-    * 3 993 touched and extrapolated "pooled wins ≲ 100"): at 24
-    * touched fixture partitions bulk is already 1.6× faster (1.76 vs
-    * 2.81 s — the pooled path's ~0.11 s/partition dispatch beats the
-    * bulk scan's ~0.7 s fixed cost from ~7 partitions up), at 2
-    * touched pooled wins (0.42 vs 0.72 s). Default 8 = the measured
-    * crossover; the bounded few-partition deletes stay pooled. */
+    * Threshold MEASURED, not assumed (OPTIMIZATION_r18.md, "Bulk-
+    * maintenance threshold 96 → 8"): at 24 touched fixture partitions
+    * bulk is already 1.6× faster (1.76 vs 2.81 s — the per-partition
+    * path's ~0.11 s/partition dispatch beats the bulk scan's ~0.7 s
+    * fixed cost from ~7 partitions up), at 2 touched per-partition
+    * wins (0.42 vs 0.72 s). Default 8 = the measured crossover; only a
+    * parameter so specs can compare the two arms. */
   def rewriteExcludingAll(spark: SparkSession, root: Path, partCol: String,
                           values: Seq[String], tombIds: DataFrame,
-                          idCol: String, parallelism: Int = 8,
-                          bulkThreshold: Int = 8): Seq[String] =
+                          idCol: String, bulkThreshold: Int = 8): Seq[String] =
     if (values.size >= bulkThreshold)
       rewriteExcludingBulk(spark, root, partCol, values, tombIds, idCol)
     else
-      values.zip(pooled(values, parallelism)(v =>
+      values.zip(parallel(spark, values)(v =>
           rewriteExcluding(spark, root, partCol, v, tombIds, idCol)))
         .collect { case (v, true) => v }
 
-  /** The one-job twin of the pooled per-partition rewrite, for vacuums
-    * that touch a large share of the store (see [[rewriteExcludingAll]]).
+  /** The one-job twin of the per-partition rewrite, for vacuums that
+    * touch a large share of the store (see [[rewriteExcludingAll]]).
     * Returns the partition values actually rewritten (those with a
     * live dir). One documented difference from the per-partition path:
     * output file count per partition is sized from the AVERAGE
@@ -363,10 +313,10 @@ private[graft] object PartitionedStore {
     * the right dial. Result-level parity is exact: a partition whose
     * every row is tombstoned (absent from the staged partitionBy
     * output) falls back to the per-partition rewrite, which keeps it
-    * as an empty schema-bearing parquet dir — exactly the pooled
-    * path's shape, so an all-deleted store stays READABLE (a
-    * parquet-less tree would fail schema inference on the next
-    * full-tree read). */
+    * as an empty schema-bearing parquet dir — exactly the
+    * per-partition path's shape, so an all-deleted store stays
+    * READABLE (a parquet-less tree would fail schema inference on the
+    * next full-tree read). */
   def rewriteExcludingBulk(spark: SparkSession, root: Path, partCol: String,
                            values: Seq[String], tombIds: DataFrame,
                            idCol: String): Seq[String] = {
@@ -375,80 +325,66 @@ private[graft] object PartitionedStore {
       .map(_.getName.stripPrefix(partCol + "=")).toSet
     val affected = values.distinct.filter(live)
     if (affected.isEmpty) return Seq.empty
-    val staging = new Path(root, ".compact-bulkvac")
-    fs.delete(staging, true) // crash remnant of a prior attempt
-    // one partition-pruned scan of every affected dir; per-output-file
-    // sizing from the average affected bytes (the r17 ~128 MB/file
-    // discipline, applied at the bulk grain). Listings run from the
-    // submitter pool — thousands of SERIAL listStatus RPCs on exactly
-    // the path whose point is removing per-partition overhead would
-    // hand the win back to the metadata plane on an object store.
-    val affectedBytes = pooled(affected, 16) { v =>
+    // per-output-file sizing from the average affected bytes (the r17
+    // ~128 MB/file discipline, applied at the bulk grain). Listings run
+    // from the shared pool — thousands of SERIAL listStatus RPCs on
+    // exactly the path whose point is removing per-partition overhead
+    // would hand the win back to the metadata plane on an object store.
+    val affectedBytes = parallel(spark, affected) { v =>
       fs.listStatus(new Path(root, s"$partCol=$v"))
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .map(_.getLen).sum
     }.sum
     val splits = math.max(1L,
       (affectedBytes / affected.size + (128L << 20) - 1) / (128L << 20)).toInt
-    val emptied = bulkStageAndSwap(spark, root, partCol, affected, staging,
+    val emptied = bulkStageAndSwap(spark, root, partCol, affected,
       df => df.join(tombIds, col(idCol) === col("__tomb_id"), "left_anti")
         .withColumn("__vsplit", pmod(xxhash64(col(idCol)), lit(splits)))
         .repartition(col(partCol), col("__vsplit"))
         .drop("__vsplit"))
     // fully-tombstoned partitions (no staged output) go through the
     // per-partition rewrite, which writes the empty schema-bearing
-    // file the pooled path would — exact result parity, and the count
-    // is bounded by how many partitions were deleted WHOLE (≈0 in any
-    // real vacuum)
-    pooled(emptied, 8)(v =>
+    // file the per-partition path would — exact result parity, and the
+    // count is bounded by how many partitions were deleted WHOLE (≈0
+    // in any real vacuum)
+    parallel(spark, emptied)(v =>
       rewriteExcluding(spark, root, partCol, v, tombIds, idCol))
     affected
   }
 
   /** Shared core of the bulk maintenance paths ([[rewriteExcludingBulk]]
-    * and [[compact]]'s bulk arm): ONE pruned read of the affected
-    * partitions, the caller's transform, one staged `partitionBy`
-    * write, then the per-partition live→backup→live rename swap.
-    * Returns the affected values with NO staged output (every row
-    * transformed away) — the caller decides what an empty partition
-    * becomes. A crash at any point leaves each partition individually
-    * live-or-backup for [[recover]], which also sweeps the
-    * `.compact-*` staging.
+    * and [[compact]]'s bulk arm): ONE read of the affected live
+    * partitions, the caller's transform, one staged `partitionBy` write
+    * to `.compact-bulkvac`, then the per-partition [[swapIn]]. Returns
+    * the affected values with NO staged output (every row transformed
+    * away) — the caller decides what an empty partition becomes. A
+    * crash at any point leaves each partition individually
+    * live-or-backup for [[recover]], which also sweeps the staging.
     *
-    * Partition-column TYPE INFERENCE is off for the read: the staged
-    * partitionBy re-RENDERS the inferred values as dir names, and
-    * inference does not round-trip every name (a hex bucket "1e5"
-    * infers as double 100000.0 → staged dir `bucket=100000.0` ≠ live
-    * `bucket=1e5` → the swap would drop the partition as fully
-    * deleted). With inference off the column is the dir-name STRING
-    * and partitionBy writes it back byte-identically. Session conf,
-    * saved/restored — safe under the store's single-writer contract
-    * (no concurrent query planning in this session during
-    * maintenance). */
+    * The partition column is read as the dir-name STRING (a
+    * user-specified schema disables type inference for it): the staged
+    * partitionBy re-RENDERS the read values as dir names, and inference
+    * does not round-trip every name (a hex bucket "1e5" infers as
+    * double 100000.0 → staged dir `bucket=100000.0` ≠ live `bucket=1e5`
+    * → the swap would drop the partition as fully deleted). The schema
+    * lives on the read, not in a session conf, so concurrent bulk
+    * calls (twin subtrees from the shared pool) cannot interfere. */
   private def bulkStageAndSwap(spark: SparkSession, root: Path,
                                partCol: String, affected: Seq[String],
-                               staging: Path,
                                transform: DataFrame => DataFrame): Seq[String] = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val inferWas = spark.conf.get(inferKey)
-    spark.conf.set(inferKey, "false")
-    try
-      transform(prunedRead(spark, root.toString, partCol, affected))
-        .write.partitionBy(partCol).mode("overwrite").parquet(staging.toString)
-    finally spark.conf.set(inferKey, inferWas)
+    val staging = new Path(root, ".compact-bulkvac")
+    fs.delete(staging, true) // crash remnant of a prior attempt
+    val dirs = affected.map(v => s"$root/$partCol=$v")
+    val schema = spark.read.parquet(dirs.head).schema.add(partCol, StringType)
+    transform(spark.read.schema(schema).option("basePath", root.toString)
+        .parquet(dirs: _*))
+      .write.partitionBy(partCol).mode("overwrite").parquet(staging.toString)
     fs.delete(new Path(staging, "_SUCCESS"), false)
     val (have, emptied) = affected.partition(v =>
       fs.exists(new Path(staging, s"$partCol=$v")))
-    have.foreach { v =>
-      val liveDir = new Path(root, s"$partCol=$v")
-      val backup = new Path(root, s".old-$v")
-      require(fs.rename(liveDir, backup),
-        s"bulk maintenance: rename $liveDir -> $backup failed")
-      require(fs.rename(new Path(staging, s"$partCol=$v"), liveDir),
-        s"bulk maintenance: rename -> $liveDir failed")
-      fs.delete(backup, true)
-    }
+    have.foreach(v =>
+      swapIn(fs, root, partCol, v, new Path(staging, s"$partCol=$v")))
     fs.delete(staging, true)
     emptied
   }
@@ -486,65 +422,41 @@ private[graft] object PartitionedStore {
   /** Compact every partition holding >= `minFiles` parquet files back
     * to one file — the valve against the classic small-files failure
     * mode (every ingest batch appends at least one file per touched
-    * partition). Reads ONLY the flagged partitions (pruned per-dir
-    * scans), swaps each behind live→backup, staged→live renames so a
-    * crash at any point leaves the rows reachable, and returns the
-    * compacted partition VALUES. Caller runs [[recover]] first. */
+    * partition). Reads ONLY the flagged partitions, swaps each in
+    * behind [[swapIn]] so a crash at any point leaves the rows
+    * reachable, and returns the compacted partition VALUES. Caller runs
+    * [[recover]] first. Below `bulkThreshold` flagged partitions each
+    * is rewritten on its own from the shared pool; from there up, one
+    * bulk rewrite (the [[rewriteExcludingAll]] crossover). */
   def compact(spark: SparkSession, root: Path, partCol: String,
-              minFiles: Int, parallelism: Int = 8,
-              bulkThreshold: Int = 8): Seq[String] = {
+              minFiles: Int, bulkThreshold: Int = 8): Seq[String] = {
     require(minFiles >= 2, "need minFiles >= 2")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val flagged = partitions(fs, root, partCol).filter { pd =>
       fs.listStatus(pd)
         .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")) >= minFiles
-    }
+    }.map(_.getName.stripPrefix(partCol + "="))
     if (flagged.isEmpty) return Seq.empty
     // past bulkThreshold flagged partitions, per-partition compaction
     // jobs hit the same dispatch wall the vacuum's bulk arm removes
     // (SCALE.md r18 — heavy micro-batch ingest flags HUNDREDS): one
-    // pruned read + one staged partitionBy write + the same swap.
+    // read + one staged partitionBy write + the same swap.
     // repartition by the partition column alone lands each value in
     // one task → exactly one output file per partition, compaction's
     // contract. Compaction drops no rows, so no partition can come
     // back empty (the emptied return is a no-op by construction).
-    if (flagged.size >= bulkThreshold) {
-      val values = flagged.map(_.getName.stripPrefix(partCol + "="))
-      val staging = new Path(root, ".compact-bulkvac")
-      fs.delete(staging, true)
-      bulkStageAndSwap(spark, root, partCol, values, staging,
-        _.repartition(col(partCol)))
-      return values
-    }
-    def compactOne(pd: Path): String = {
-      val v = pd.getName.stripPrefix(partCol + "=")
-      val backup = new Path(root, s".old-$v")
-      val staged = new Path(root, s".compact-$v")
-      spark.read.parquet(pd.toString).coalesce(1)
-        .write.mode("overwrite").parquet(staged.toString)
-      // drop the _SUCCESS marker so the swapped dir holds data files only
-      fs.delete(new Path(staged, "_SUCCESS"), false)
-      require(fs.rename(pd, backup), s"compact: rename $pd -> $backup failed")
-      require(fs.rename(staged, pd), s"compact: rename $staged -> $pd failed")
-      fs.delete(backup, true)
-      v
-    }
-    // each partition's rewrite is a tiny Spark job; run them from a
-    // bounded submitter pool — after heavy micro-batch ingest HUNDREDS
-    // of partitions are flagged and sequential submission is pure
-    // job-launch latency (the swap itself stays per-partition, so the
-    // crash-safety story is unchanged; a crash mid-pool leaves each
-    // partition individually live-or-backup and recover() heals)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, flagged.size)))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = flagged.map(pd => scala.concurrent.Future(compactOne(pd)))
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+    if (flagged.size >= bulkThreshold)
+      bulkStageAndSwap(spark, root, partCol, flagged, _.repartition(col(partCol)))
+    else
+      parallel(spark, flagged) { v =>
+        val staged = new Path(root, s".compact-$v")
+        spark.read.parquet(s"$root/$partCol=$v").coalesce(1)
+          .write.mode("overwrite").parquet(staged.toString)
+        // drop the _SUCCESS marker so the swapped dir holds data files only
+        fs.delete(new Path(staged, "_SUCCESS"), false)
+        swapIn(fs, root, partCol, v, staged)
+      }
+    flagged
   }
 
   /** Parquet footer row counts for an EXPLICIT file list, summed per

@@ -459,4 +459,73 @@ class BandIndexSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
   }
+
+  test("store calls run every job under the caller's job group, nested fan-out included") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .filter(col("doc_id") < 40)
+    val dir = java.nio.file.Files.createTempDirectory("graft_band_pool").toString
+    // 256 postings buckets over a few hundred postings: many buckets
+    // hold a single doc, so deleting one bucket's docs empties it
+    BandIndex.save(docs.filter(col("doc_id") < 30), "doc_id", "text",
+      shingleN = 3, numHashes = 64, bands = 16, dir = dir, prefixLen = 2)
+    val batch = docs.filter(col("doc_id") >= 30)
+      .select((col("doc_id") + 50000L).as("doc_id"), col("text"))
+
+    val group = "store-pool-test"
+    val groups = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    }
+    val sc = spark.sparkContext
+    // listener events arrive in order: once a sentinel job is seen,
+    // every job started before it has been recorded
+    def drain(sentinel: String): Unit = {
+      sc.setJobGroup(sentinel, sentinel, interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(groups.contains(sentinel), "listener never drained")
+    }
+    var emptied = ""
+    sc.addSparkListener(listener)
+    try {
+      drain("before")
+      groups.clear()
+      // a fresh thread, so a deadlock fails the test instead of hanging it
+      Await.result(Future {
+        sc.setJobGroup(group, "band ingest + vacuum", interruptOnCancel = false)
+        try {
+          BandIndex.addBatchTagged(spark, dir, batch, "doc_id", "text", tag = "p1")
+          val byBucket = spark.read.parquet(s"$dir/bands").select("id", "bucket")
+            .collect().groupBy(_.getString(1))
+            .map { case (b, rs) => b -> rs.map(_.getLong(0)).toSet }
+          emptied = byBucket.minBy { case (b, ids) => (ids.size, b) }._1
+          // plus one doc from another shingle bucket: then the shingle
+          // rewrite fans out too, and both vacuum branches wait on
+          // nested work at once (what deadlocks a small fixed pool)
+          val sbucket = spark.read.parquet(s"$dir/shingles").select("id", "sbucket")
+            .collect().map(r => r.getLong(0) -> r.get(1).toString).toMap
+          val del = byBucket(emptied) + sbucket.collectFirst {
+            case (id, sb) if !byBucket(emptied).exists(sbucket(_) == sb) => id }.get
+          assert(byBucket.count(_._2.exists(del)) >= 8,
+            "fixture: the vacuum must take the bulk arm (>= 8 touched buckets)")
+          BandIndex.deleteIds(spark, dir,
+            spark.range(1).select(explode(typedLit(del.toSeq)).as("doc_id")), "doc_id", "d1")
+          BandIndex.vacuumDeletes(spark, dir)
+        } finally sc.clearJobGroup()
+      }(scala.concurrent.ExecutionContext.global), 5.minutes)
+      drain("after")
+    } finally sc.removeSparkListener(listener)
+    val calls = groups.toArray.map(_.toString).toSeq.filterNot(_ == "after")
+    assert(calls.nonEmpty && calls.forall(_ == group),
+      s"jobs outside the caller's group: ${calls.filterNot(_ == group)}")
+    // the fully tombstoned bucket went through the nested per-bucket
+    // rewrite, which keeps it as an empty schema-bearing dir
+    assert(spark.read.parquet(s"$dir/bands/bucket=$emptied").count() == 0)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }

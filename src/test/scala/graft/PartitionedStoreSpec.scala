@@ -125,7 +125,7 @@ class PartitionedStoreSpec extends AnyFunSuite {
     val values = (0 until 8).map(_.toString)
     val retPer = PartitionedStore.rewriteExcludingAll(spark,
       new org.apache.hadoop.fs.Path(perDir), "cell", values,
-      tombs(del: _*), "id", parallelism = 4, bulkThreshold = Int.MaxValue)
+      tombs(del: _*), "id", bulkThreshold = Int.MaxValue)
     val retBulk = PartitionedStore.rewriteExcludingBulk(spark,
       new org.apache.hadoop.fs.Path(bulkDir), "cell", values,
       tombs(del: _*), "id")
@@ -205,7 +205,7 @@ class PartitionedStoreSpec extends AnyFunSuite {
         PartitionedStore.rewriteExcludingAll(spark,
           new org.apache.hadoop.fs.Path(dir), "cell",
           (0 until 8).map(_.toString),
-          tombs(del: _*), "id", parallelism = 2, bulkThreshold = threshold)
+          tombs(del: _*), "id", bulkThreshold = threshold)
         // the listener bus is async with no public flush (the
         // indexStats test's caveat) — poll until the count stabilizes
         var last = -1
@@ -244,7 +244,7 @@ class PartitionedStoreSpec extends AnyFunSuite {
       val dir = mk()
       val done = PartitionedStore.compact(spark,
         new org.apache.hadoop.fs.Path(dir), "cell", minFiles = 2,
-        parallelism = 2, bulkThreshold = threshold)
+        bulkThreshold = threshold)
       assert(done.toSet == (0 until 4).map(_.toString).toSet)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)

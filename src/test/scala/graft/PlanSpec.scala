@@ -123,7 +123,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("jaccardPairs verify arm: auto bound broadcasts on a big heap; an explicit tiny cap forces SHUFFLE_HASH") {
     // pins resolveVerifyBroadcastBytes at both sides of the bound
-    // (r15 item 6): default 0 resolves to maxMemory/4 -- far above
+    // (r15 item 6): default 0 resolves to min(maxMemory/4, 8 GiB) -- far above
     // the fixture's hashed-set estimate, so the broadcast arm is
     // picked with NO flag; an explicit 1-byte cap must flip the SAME
     // pipeline to the shuffle-hash arm (and never to a sort-merge of
@@ -132,8 +132,8 @@ class PlanSpec extends AnyFunSuite {
     import graft.functions.DedupFunctions
     val docs = spark.read.parquet(s"$d/documents.parquet")
       .filter(length(col("text")) >= 5).limit(200)
-    assert(DedupFunctions.resolveVerifyBroadcastBytes(0L) >=
-      Runtime.getRuntime.maxMemory() / 4 - 1)
+    assert(DedupFunctions.resolveVerifyBroadcastBytes(0L) ==
+      math.min(Runtime.getRuntime.maxMemory() / 4, 8L << 30))
     assert(DedupFunctions.resolveVerifyBroadcastBytes(123L) == 123L)
     def verifyJoins(bytes: Long): String = {
       val p = DedupFunctions.jaccardPairs(docs, "doc_id", "text",
