@@ -37,27 +37,15 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Executor-task CPU per query, alongside wall-clock: wall on this
-    // box swings up to 1.7× under co-tenant load on identical code
-    // (BENCH.md r12's three-point same-code series), while summed task
-    // CPU is nearly invariant — so round-over-round comparisons read
-    // the cpu column and wall stays the what-you'd-experience number.
-    // Driver-side time (plan, KB collects) is excluded by construction;
-    // that cost is visible as wall − cpu/parallelism, not hidden.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-      }
-    })
-    // listener delivery is async — drain the bus before reading the
-    // counter so each query's tasks land in its own window
-    // (waitUntilEmpty is private[spark] at the Scala level only)
-    val listenerBus = spark.sparkContext.getClass
-      .getMethod("listenerBus").invoke(spark.sparkContext)
-    val waitEmpty = listenerBus.getClass.getMethod("waitUntilEmpty")
-    def cpuNow(): Long = { waitEmpty.invoke(listenerBus); cpuNs.get() }
+    // Per-query counters come from PhaseTimer's one listener: wall,
+    // executor-task CPU, Spark jobs and driver time outside any job.
+    // Wall on this box swings up to 1.7× under co-tenant load on
+    // identical code (BENCH.md r12's three-point same-code series),
+    // while summed task CPU is nearly invariant — so round-over-round
+    // comparisons read the cpu column and wall stays the
+    // what-you'd-experience number; outside_jobs is the driver share
+    // of wall (planning, KB collects, FS listings and renames).
+    graft.PhaseTimer.listen(spark.sparkContext)
 
     // Warm the JVM/codegen once on the tiny SF so per-query numbers
     // measure the plan, not first-call classloading.
@@ -92,40 +80,37 @@ object Bench {
       try allByName(p)(spark, sfDir).count()
       catch { case _: Throwable => () } // prereq failures surface on the query itself
     }
-    // Per-phase wall samples for the lifecycle-bundle queries (r16
-    // judge finding #2): the bundle lambdas record their internal
-    // phases through graft.PhaseTimer; every COUNTED sample drains the
-    // record here, adds the residual "exec" phase (wall − Σ recorded:
-    // the deferred execution of the returned frame), and the snapshot
-    // JSON publishes per-phase MEDIANS next to cpu — so a bundle-level
-    // ambient swing localizes to a phase from the artifact alone.
-    val phaseSamples = scala.collection.mutable.LinkedHashMap[
-      String, scala.collection.mutable.LinkedHashMap[String, Vector[Double]]]()
-    def recordPhases(name: String, wall: Double, counted: Boolean): Unit = {
-      val ph = graft.PhaseTimer.drain(name)
-      if (ph.nonEmpty && counted) {
-        val withExec = ph :+ ("exec" -> math.max(0.0, wall - ph.map(_._2).sum))
-        val m = phaseSamples.getOrElseUpdate(name,
-          scala.collection.mutable.LinkedHashMap[String, Vector[Double]]())
-        withExec.foreach { case (p, s) => m(p) = m.getOrElse(p, Vector.empty) :+ s }
-      }
-    }
-    def runPass(counted: Boolean): Map[String, (Double, Double)] = {
-      warm(missingPrereqs)
-      val pass = queries.map { case (name, fn) =>
-        val c0 = cpuNow()
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
+    // Per-phase counters for the lifecycle-bundle queries (r16 judge
+    // finding #2): the bundle lambdas record their internal phases
+    // through graft.PhaseTimer, which closes every sample with the
+    // residual "exec" phase (query − Σ phases: the deferred execution
+    // of the returned frame); counted samples land here and the
+    // snapshot JSON publishes per-phase MEDIANS next to cpu — so a
+    // bundle-level ambient swing localizes to a phase from the
+    // artifact alone.
+    val phaseSamples = scala.collection.mutable.LinkedHashMap[String,
+      scala.collection.mutable.LinkedHashMap[String, Vector[Map[String, Double]]]]()
+    /** One timed sample of `name`, None when it threw. */
+    def sample(name: String, fn: (SparkSession, String) => DataFrame,
+               counted: Boolean): Option[Map[String, Double]] = {
+      val (ok, q, phases) = graft.PhaseTimer.measure(name) {
+        try { fn(spark, sfDir).count(); true } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
             false
         }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = (cpuNow() - c0) / 1e9
-        recordPhases(name, wall, counted && ok)
-        name -> (if (ok) (wall, cpu) else (Double.NaN, Double.NaN))
       }
+      if (ok && counted) phases.foreach { case (p, c) =>
+        val m = phaseSamples.getOrElseUpdate(name, scala.collection.mutable.LinkedHashMap())
+        m(p) = m.getOrElse(p, Vector.empty) :+ c
+      }
+      Option.when(ok)(Map("wall" -> q("wall_s"), "cpu" -> q("cpu_s"),
+        "jobs" -> q("jobs"), "outside_jobs" -> q("outside_jobs_s")))
+    }
+    def runPass(counted: Boolean): Map[String, Option[Map[String, Double]]] = {
+      warm(missingPrereqs)
+      val pass = queries.map { case (name, fn) => name -> sample(name, fn, counted) }
       SparkEntry.releaseCaches() // next pass pays its own materialization
       pass.toMap
     }
@@ -152,52 +137,39 @@ object Bench {
         else sorted.slice(sorted.size / 2 - 1, sorted.size / 2 + 2)
       (med, w.last - w.head)
     }
-    val samples = scala.collection.mutable.Map[String, Vector[Double]]()
-    // cpu samples sorted independently of wall: each is summarized by
-    // its own central-3 median (cpu spread is the ambient-resistance
-    // claim's evidence, not an afterthought)
-    val cpuSamples = scala.collection.mutable.Map[String, Vector[Double]]()
+    // A query's samples, per metric (wall, cpu, jobs, outside_jobs),
+    // each sorted independently and summarized by its own central-3
+    // median (cpu spread is the ambient-resistance claim's evidence,
+    // not an afterthought); the metrics of one rep are never paired.
+    type Samples = Map[String, Vector[Double]]
+    def add(s: Samples, m: Map[String, Double]): Samples =
+      m.map { case (k, v) => k -> (s.getOrElse(k, Vector.empty) :+ v).sorted }
+    def med(s: Samples, m: String): Double = central3(s(m))._1
+    def spread(s: Samples, m: String): Double = central3(s(m))._2
+    val samples = scala.collection.mutable.Map[String, Samples]()
     val okQueries = queries.filterNot { case (name, _) => failures.contains(name) }
     okQueries.foreach { case (name, _) =>
-      samples(name) = passes.map(_(name)._1).filterNot(_.isNaN).sorted.toVector
-      cpuSamples(name) = passes.map(_(name)._2).filterNot(_.isNaN).sorted.toVector }
+      samples(name) = passes.flatMap(_(name)).foldLeft(Map.empty: Samples)(add) }
     // The top-cost decile gets a STRICTER top-up trigger (spread ≥
     // 0.5 × median instead of ≥ median): those are the queries whose
     // round-over-round deltas the judge reads, and r9's artifact left
     // d4b with a 2.47 s spread on a 6.52 s median untouched because
     // the uniform trigger never fired for big-median queries.
-    val deciles = okQueries.map { case (name, _) => name -> central3(samples(name))._1 }
+    val deciles = okQueries.map { case (name, _) => name -> med(samples(name), "wall") }
       .sortBy(-_._2).map(_._1)
     val topDecile = deciles.take(math.max(1, (deciles.size + 9) / 10)).toSet
-    def solo(name: String, fn: (SparkSession, String) => DataFrame): Option[(Double, Double)] = {
+    def solo(name: String, fn: (SparkSession, String) => DataFrame): Option[Map[String, Double]] = {
       SparkEntry.releaseCaches()
       // rebuild the query's declared warm inputs (uncounted) so the solo
       // sample measures the same thing as an in-pass sample
       warm(SparkEntry.benchPrereqs.getOrElse(name, Nil))
-      val c0 = cpuNow()
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        recordPhases(name, wall, counted = true)
-        Some((wall, (cpuNow() - c0) / 1e9))
-      } catch {
-        case e: Throwable =>
-          graft.PhaseTimer.drain(name)
-          failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
-          None
-      }
+      sample(name, fn, counted = true)
     }
     okQueries.foreach { case (name, fn) =>
       val trig = if (topDecile.contains(name)) 0.5 else 1.0
-      var (med, sp) = central3(samples(name))
-      while (sp >= trig * med && samples(name).size < maxReps && !failures.contains(name)) {
-        solo(name, fn).foreach { case (t, c) =>
-          samples(name) = (samples(name) :+ t).sorted
-          cpuSamples(name) = (cpuSamples(name) :+ c).sorted
-          val ms = central3(samples(name)); med = ms._1; sp = ms._2
-        }
-      }
+      while (spread(samples(name), "wall") >= trig * med(samples(name), "wall") &&
+          samples(name)("wall").size < maxReps && !failures.contains(name))
+        solo(name, fn).foreach(m => samples(name) = add(samples(name), m))
     }
     // Spread-rule self-enforcement (r17 judge finding #1): the repo's
     // close discipline says a SHIPPED snapshot carries no unexplained
@@ -207,14 +179,15 @@ object Bench {
     // machine window and shipped THIRTEEN violations. Enforce it here:
     // any query still violating after the central-3 top-up gets up to
     // SPARK_GRAFT_RETAKES (default 2) solo retakes, each DROPPING the
-    // sample farthest from the median (the ambient outlier — the
-    // ProfileOutlier attribution shape: a quiet solo rep measures the
-    // query, the dropped rep measured the machine) and adding a fresh
-    // one. Retaken queries are recorded in the snapshot under
-    // "retaken" (count per query), so the artifact itself says which
-    // rows were re-measured and the honesty trail survives: a query
-    // that still violates after its retakes ships as-is with its
-    // retake count visible.
+    // sample farthest from the median (the ambient outlier: a quiet
+    // solo rep measures the query, the dropped rep measured the
+    // machine — BENCH.md's "Retake semantics") and adding a fresh one;
+    // every metric drops its own extreme, so all stay the same size.
+    // Retaken queries are recorded in the snapshot under "retaken"
+    // (count per query), so the artifact itself says which rows were
+    // re-measured and the honesty trail survives: a query that still
+    // violates after its retakes ships as-is with its retake count
+    // visible.
     val retakeCap = sys.env.getOrElse("SPARK_GRAFT_RETAKES", "2").toInt
     val retaken = scala.collection.mutable.LinkedHashMap[String, Int]()
     def rawViolates(ts: Vector[Double]): Boolean = {
@@ -223,18 +196,14 @@ object Bench {
     }
     okQueries.foreach { case (name, fn) =>
       var n = 0
-      while (!failures.contains(name) && rawViolates(samples(name)) && n < retakeCap) {
+      while (!failures.contains(name) && rawViolates(samples(name)("wall")) && n < retakeCap) {
         n += 1
-        solo(name, fn).foreach { case (t, c) =>
-          val med = samples(name)(samples(name).size / 2)
-          val drop = samples(name).maxBy(s => math.abs(s - med))
-          samples(name) = (samples(name).patch(samples(name).indexOf(drop), Nil, 1) :+ t).sorted
-          // cpu rides along: drop the cpu extreme the same way so the
-          // two sample sets stay the same size (they are sorted
-          // independently, so per-index pairing was never assumed)
-          val cmed = cpuSamples(name)(cpuSamples(name).size / 2)
-          val cdrop = cpuSamples(name).maxBy(s => math.abs(s - cmed))
-          cpuSamples(name) = (cpuSamples(name).patch(cpuSamples(name).indexOf(cdrop), Nil, 1) :+ c).sorted
+        solo(name, fn).foreach { m =>
+          samples(name) = samples(name).map { case (k, v) =>
+            val med = v(v.size / 2)
+            val drop = v.indexOf(v.maxBy(x => math.abs(x - med)))
+            k -> (v.patch(drop, Nil, 1) :+ m(k)).sorted
+          }
         }
       }
       if (n > 0) retaken(name) = n
@@ -243,47 +212,48 @@ object Bench {
       .flatMap(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString) + "\""
     def jmap(entries: Iterable[(String, String)]): String =
       entries.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    def num(x: Double): String = f"$x%.3f"
+    def counter(k: String, x: Double): String =
+      if (k == "jobs" || k == "tasks") x.toLong.toString else num(x)
     val results = queries.collect { case (name, _) if !failures.contains(name) =>
-      val ts = samples(name)
-      val (med, sp) = central3(ts)
-      (name, med, sp, ts.last - ts.head, ts.size, ts.head)
-    }
-    // Failed queries appear in "queries" as the literal string "err" —
-    // never a number — and in "errors" with the message.
-    val qs = jmap(results.map { case (k, med, _, _, _, _) => k -> f"$med%.3f" } ++
-      failures.keys.map(k => k -> "\"err\""))
-    val sp = jmap(results.map { case (k, _, s, _, _, _) => k -> f"$s%.3f" })
-    val spRaw = jmap(results.map { case (k, _, _, r, _, _) => k -> f"$r%.3f" })
-    val nSamples = jmap(results.map { case (k, _, _, _, n, _) => k -> n.toString })
-    // min-of-samples: for JIT/page-cache-dominated queries (x18b raw
-    // spread 118 s on a 6.1 s median, r9) the minimum is the best
-    // available estimate of the query's intrinsic cost — the median
-    // stays the headline, the min rides along for attribution.
-    val mins = jmap(results.map { case (k, _, _, _, _, mn) => k -> f"$mn%.3f" })
-    val cpuMed = jmap(results.map { case (k, _, _, _, _, _) =>
-      k -> f"${central3(cpuSamples(k))._1}%.3f" })
-    val cpuSpread = jmap(results.map { case (k, _, _, _, _, _) =>
-      k -> f"${central3(cpuSamples(k))._2}%.3f" })
-    val errJson = jmap(failures.map { case (k, v) => k -> jstr(v) })
-    // per-phase medians for the bundle queries: {"d16…":{"save":…,
+      name -> samples(name) }
+    def perQuery(rs: Seq[(String, Samples)])(f: Samples => String): String =
+      jmap(rs.map { case (k, s) => k -> f(s) })
+    // Per-phase medians for the bundle queries: {"d16…":{"save":…,
     // "ingest":…,…,"exec":…}} — phases in the lambda's call order, the
     // residual exec phase last; only queries that recorded phases appear.
     // Failed queries are excluded (a query that passed an early counted
     // rep but failed later has phase samples with no numeric median to
-    // sit next to), and each phase is summarized by central3 — the SAME
-    // statistic as the wall/cpu medians beside it, so a topped-up
-    // query's phase table and its wall median describe the same window.
-    val phasesJson = jmap(phaseSamples.toSeq
-      .filterNot { case (q, _) => failures.contains(q) }
-      .sortBy(_._1).map { case (q, m) =>
-        q -> jmap(m.toSeq.map { case (p, v) =>
-          p -> f"${central3(v.sorted)._1}%.3f" })
-      })
+    // sit next to), and each phase counter is summarized by central3 —
+    // the SAME statistic as the wall/cpu medians beside it, so a
+    // topped-up query's phase table and its wall median describe the
+    // same window. "phases" holds the walls, "phase_counters" the rest.
+    def perPhase(f: Vector[Map[String, Double]] => String): String =
+      jmap(phaseSamples.toSeq.filterNot { case (q, _) => failures.contains(q) }
+        .sortBy(_._1).map { case (q, m) => q -> jmap(m.toSeq.map { case (p, v) => p -> f(v) }) })
+    def phaseMed(v: Vector[Map[String, Double]], k: String): Double =
+      central3(v.map(_(k)).sorted)._1
+    def counterKeys(rs: Seq[(String, Samples)]): String =
+      s""""jobs":${perQuery(rs)(s => counter("jobs", med(s, "jobs")))},""" +
+      s""""outside_jobs":${perQuery(rs)(s => num(med(s, "outside_jobs")))},""" +
+      s""""phases":${perPhase(v => num(phaseMed(v, "wall_s")))},""" +
+      s""""phase_counters":${perPhase(v => jmap(graft.PhaseTimer.Keys.tail.map(k =>
+        k -> counter(k, phaseMed(v, k)))))}"""
+    // Failed queries appear in "queries" as the literal string "err" —
+    // never a number — and in "errors" with the message.
+    val qs = jmap(results.map { case (k, s) => k -> num(med(s, "wall")) } ++
+      failures.keys.map(k => k -> "\"err\""))
+    val errJson = jmap(failures.map { case (k, v) => k -> jstr(v) })
     val retakenJson = jmap(retaken.map { case (k, v) => k -> v.toString })
-    val total = results.map(_._2).sum
-    val totalS = f"$total%.3f"
-    val totalCpu = results.map { case (k, _, _, _, _, _) => central3(cpuSamples(k))._1 }.sum
-    val fullJson = s"""{"metric":"total","value":$totalS,"unit":"sec","cpu_total":${f"$totalCpu%.3f"},"queries":$qs,"sf":"$sfDir","reps":$reps,"warmup":$warmup,"n_ok":${results.size},"n_err":${failures.size},"errors":$errJson,"spread":$sp,"spread_raw":$spRaw,"samples":$nSamples,"min":$mins,"cpu":$cpuMed,"cpu_spread":$cpuSpread,"phases":$phasesJson,"retaken":$retakenJson}"""
+    val total = results.map { case (_, s) => med(s, "wall") }.sum
+    val totalS = num(total)
+    val totalCpu = results.map { case (_, s) => med(s, "cpu") }.sum
+    // min-of-samples: for JIT/page-cache-dominated queries (x18b raw
+    // spread 118 s on a 6.1 s median, r9) the minimum is the best
+    // available estimate of the query's intrinsic cost — the median
+    // stays the headline, the min rides along for attribution.
+    val all = perQuery(results) _
+    val fullJson = s"""{"metric":"total","value":$totalS,"unit":"sec","cpu_total":${num(totalCpu)},"queries":$qs,"sf":"$sfDir","reps":$reps,"warmup":$warmup,"n_ok":${results.size},"n_err":${failures.size},"errors":$errJson,"spread":${all(s => num(spread(s, "wall")))},"spread_raw":${all(s => num(s("wall").last - s("wall").head))},"samples":${all(s => s("wall").size.toString)},"min":${all(s => num(s("wall").head))},"cpu":${all(s => num(med(s, "cpu")))},"cpu_spread":${all(s => num(spread(s, "cpu")))},${counterKeys(results)},"retaken":$retakenJson}"""
     // Full per-query JSON: printed first AND written to a fixed path —
     // the single ~4 KB line outruns the driver's stdout tail capture
     // (BENCH_r01–r03 all recorded "parsed": null), so the durable copy
@@ -345,27 +315,14 @@ object Bench {
       // 3.4 s median in r10; extra reps shrink the central-3 window to
       // the query's intrinsic cost instead of the worst rep.
       val focusSamples = focusQueries.map { case (name, fn) =>
-        var pairs = (1 to 3).flatMap(_ => solo(name, fn)).toVector
-        def walls = pairs.map(_._1).sorted
-        while (pairs.nonEmpty && central3(walls)._2 >= 0.5 * central3(walls)._1 &&
-            pairs.size < maxReps && !failures.contains(name))
-          solo(name, fn).foreach(p => pairs = pairs :+ p)
-        name -> pairs
+        var fs = (1 to 3).flatMap(_ => solo(name, fn)).foldLeft(Map.empty: Samples)(add)
+        while (fs.nonEmpty && spread(fs, "wall") >= 0.5 * med(fs, "wall") &&
+            fs("wall").size < maxReps && !failures.contains(name))
+          solo(name, fn).foreach(m => fs = add(fs, m))
+        name -> fs
       }.filter(_._2.nonEmpty)
-      def fwalls(ps: Vector[(Double, Double)]) = ps.map(_._1).sorted
-      def fcpus(ps: Vector[(Double, Double)]) = ps.map(_._2).sorted
-      val fq = jmap(focusSamples.map { case (k, ps) => k -> f"${central3(fwalls(ps))._1}%.3f" })
-      val fsp = jmap(focusSamples.map { case (k, ps) => k -> f"${central3(fwalls(ps))._2}%.3f" })
-      val fmin = jmap(focusSamples.map { case (k, ps) => k -> f"${fwalls(ps).head}%.3f" })
-      val fcpu = jmap(focusSamples.map { case (k, ps) => k -> f"${central3(fcpus(ps))._1}%.3f" })
-      val fcpuSp = jmap(focusSamples.map { case (k, ps) => k -> f"${central3(fcpus(ps))._2}%.3f" })
-      val fPhases = jmap(phaseSamples.toSeq
-        .filterNot { case (q, _) => failures.contains(q) }
-        .sortBy(_._1).map { case (q, m) =>
-          q -> jmap(m.toSeq.map { case (p, v) =>
-            p -> f"${central3(v.sorted)._1}%.3f" })
-        })
-      val focusJson = s"""{"metric":"focus","unit":"sec","sf":"$sfDir","queries":$fq,"spread":$fsp,"min":$fmin,"cpu":$fcpu,"cpu_spread":$fcpuSp,"phases":$fPhases}"""
+      val focus = perQuery(focusSamples) _
+      val focusJson = s"""{"metric":"focus","unit":"sec","sf":"$sfDir","queries":${focus(s => num(med(s, "wall")))},"spread":${focus(s => num(spread(s, "wall")))},"min":${focus(s => num(s("wall").head))},"cpu":${focus(s => num(med(s, "cpu")))},"cpu_spread":${focus(s => num(spread(s, "cpu")))},${counterKeys(focusSamples)}}"""
       val focusPath = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_FOCUS_OUT", "/root/repo/bench_focus.json"))
       java.nio.file.Files.write(focusPath,
@@ -373,8 +330,8 @@ object Bench {
       focusSnap = Some(snapshot(focusJson, "focus"))
       println(focusJson)
     }
-    val top = jmap(results.sortBy(-_._2).take(5)
-      .map { case (k, med, _, _, _, _) => k -> f"$med%.3f" })
+    val top = jmap(results.sortBy { case (_, s) => -med(s, "wall") }.take(5)
+      .map { case (k, s) => k -> num(med(s, "wall")) })
     // the summary line names the IMMUTABLE snapshot(s), not just the
     // mutable bench_full.json path the next run overwrites — the
     // driver's BENCH_rNN.json capture of this line is then

@@ -66,9 +66,9 @@ object BandIndex {
     /** Settles any crashed [[rebucket]] from its marker: base dir still
       * live → uncommitted, scrub the op's tagged files (exactly what a
       * retry would do); base dir gone → committed, drop the `.retired-`
-      * remnant; either way drop the marker and any leaked
-      * `.staging-rebucket-*` dirs. (An unhealed rebucket never breaks a
-      * reader: probe candidates are distinct()ed, and [[stats]] skips
+      * remnant; either way drop the marker ([[StoreLifecycle.recover]]
+      * drops leaked `.staging-rebucket-*` dirs). (An unhealed rebucket
+      * never breaks a reader: probe candidates are distinct()ed, and [[stats]] skips
       * the uncommitted op's tagged files outright, both without
       * mutating anything.) */
     override protected def healStore(spark: SparkSession, fs: FileSystem,
@@ -87,9 +87,6 @@ object BandIndex {
             else if (fs.exists(retired)) fs.delete(retired, true)
             fs.delete(m.getPath, false)
           }
-        fs.listStatus(new Path(dir))
-          .filter(_.getPath.getName.startsWith(".staging-rebucket-"))
-          .foreach(st => fs.delete(st.getPath, true))
       }
     }
   }
@@ -271,10 +268,9 @@ object BandIndex {
     * Crash retries: each partition swap is individually crash-safe
     * and the anti-join re-applies idempotently, since the batches are
     * retired last. Band buckets are derivable only while the deleted
-    * docs' shingles exist, so a crash after the shingle rewrite but
-    * before the band rewrite leaves those postings unreclaimed by the
-    * retry. They are never served: a verified pair needs both docs'
-    * shingle sets.
+    * docs' shingles exist, so the vacuum records them before either
+    * rewrite starts and a retry after the shingle rewrite committed
+    * still reclaims the postings.
     *
     * Reader-liveness bound: a lazy probe DataFrame planned BEFORE a
     * vacuum stays executable through the vacuum itself but NOT across

@@ -270,7 +270,7 @@ object CurationFunctions {
     // winnowFps, the gram stream is PERSISTED and shared — pinning 32
     // partitions into the cache taxes both downstream aggregations
     // with tiny-task overhead at fixture scale (the x18b lesson,
-    // ProfileX18Sandwich), and the A/B showed no wall win for x29.
+    // OPTIMIZATION_r19.md), and the A/B showed no wall win for x29.
     val gramsPlan = docs.select(col(idCol).as("__id"), targetCond.as("__t"),
           toks.as("__tk"))
       .select(col("__id"), col("__t"),

@@ -514,7 +514,7 @@ object DedupFunctions {
     *     bound (7.9M candidates at sf0.1), unbounded slack admits the
     *     high-df cross-corpus matches and the agg input grows
     *     superlinearly; 0.05 lands within 10% of the unfiltered
-    *     optimum at LINEAR agg input (tools/ProbeSlack). Candidates
+    *     optimum at LINEAR agg input (SCALE.md round-6 re-run). Candidates
     *     at sf0.1: 7.9M → 3.6M at flat end-to-end cost — the win is
     *     the 2.2× smaller verify shuffle, the scale-dominant term.
     *
@@ -522,7 +522,7 @@ object DedupFunctions {
     * long arrays, merge-walk kernel): the exact-verify join attaches
     * both docs' sets to every candidate row, so 8-byte elements cut
     * that shuffle ~3× and the walk is primitive compares — measured
-    * 24× faster than UTF8String sets at sf0.1 (tools/ProfileD4). The
+    * 24× faster than UTF8String sets at sf0.1 (BENCH.md round 4). The
     * measure is therefore Jaccard over the hashed shingle space:
     * deterministic, engine-reproducible (the oracle computes the same
     * md5 bits), and within ~(|A|·|B|)/2⁴⁰ ≈ 10⁻⁶ per pair of true
@@ -607,7 +607,7 @@ object DedupFunctions {
         // whose row count then grows superlinearly (measured 5.1×
         // time at corpus ×3 with no row filter). slack = 0.05 keeps
         // candidate counts within 10% of the unfiltered optimum at
-        // LINEAR agg input (tools/ProbeSlack)
+        // LINEAR agg input (SCALE.md round-6 re-run)
         lit(1) + least(col("__naa") - col("__ra"), col("__nab") - col("__rb")) >=
           ceil(lit(threshold / (1 + threshold)) * (col("__naa") + col("__nab")) - lit(1e-9)) -
             ceil(lit(0.05) * (col("__naa") + col("__nab"))))
@@ -634,7 +634,7 @@ object DedupFunctions {
     // only pairs whose DETERMINISTIC overlap upper bound (see
     // StripeOverlapUpper) could still reach the threshold —
     // loosening-only, output bit-identical. MEASURED A LOSS on this
-    // corpus (ProfileD4b, idle machine, f10 = 50k docs / 36.3M
+    // corpus (SCALE.md round-8 re-run, idle machine, f10 = 50k docs / 36.3M
     // candidates: off 78.7–79.8 s, 512 bits 129.1 s, 2048 bits
     // 78.7 s): the ~280-element char-5-gram sets saturate any sketch
     // small enough to be cheaper than the arrays (512 bits → bound
@@ -1247,9 +1247,8 @@ object DedupFunctions {
       .distinct()
 
   /** The candidate stage of [[fuzzyPairs]] (pre-verify, duplicates
-    * retained): the ONE implementation of both filter arms, exposed
-    * package-private so the ProfileD18 growth-law harness measures
-    * exactly the relation the operator joins.
+    * retained): the ONE implementation of both filter arms; SCALE.md
+    * round 16 records its growth law at ×1/×10/×100.
     *
     * `blockCol` is standard ER blocking: only pairs agreeing on the
     * block key are candidates — the equality joins gain the block as
@@ -1259,7 +1258,7 @@ object DedupFunctions {
     * prefix lemma is indifferent to extra join conjuncts — adding a
     * conjunct only removes candidates that verification would reject
     * anyway, as cross-block pairs are out of scope by definition). */
-  private[graft] def fuzzyCandidates(df: DataFrame, strCol: String,
+  private def fuzzyCandidates(df: DataFrame, strCol: String,
                                      maxDist: Int, q: Int,
                                      prefixFilter: Boolean,
                                      blockCol: Option[String] = None): DataFrame = {
@@ -1296,7 +1295,7 @@ object DedupFunctions {
     // name-length rows) but the candidate join OUTPUT explodes to
     // Σ_key cnt² — AQE coalesces the small upstream shuffles to ~1
     // partition and serializes the explosion (measured at sf0.1:
-    // 70 s single-task vs 9 s at 32, ProbeD18Plan). An explicit-count
+    // 70 s single-task vs 9 s at 32, SCALE.md round 16). An explicit-count
     // repartition on the join keys is exempt from AQE coalescing and
     // spreads the probe side; the exchange itself carries only the
     // tiny relation.

@@ -29,7 +29,7 @@ object SimilarityFunctions {
   // array-level cast, NOT transform(_, _.cast): Cast is codegen'd and a
   // no-op on already-double arrays, while the lambda form is interpreted
   // per evaluation — inside an O(n²) pair scan that was the dominant
-  // cost (measured 5.0 s -> 1.5 s on the d5 scan, tools/ProfileD5)
+  // cost (d5's pair scan measured 5.0 s -> 2.3 s, BENCH.md round 2)
   private def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Sequential-fold dot product of two float-array columns. Runs as a

@@ -1,7 +1,7 @@
 package graft.functions
 
 import scala.reflect.runtime.universe.TypeTag
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -63,9 +63,13 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
 
   /** Repair whatever a crashed op left behind — WRITE entry points
     * only (see the class note). Sweeps the tombstone batches a prior
-    * vacuum parked, heals every subtree's compaction swaps
-    * ([[PartitionedStore.recover]]), runs the store's own step, then
-    * re-caches plans over the store: AFTER the FS repairs, since
+    * vacuum parked and every `.staging-*` dir (single-writer: any
+    * leftover is a crashed write — ingest stagings are safe to drop,
+    * since a replayed tag re-stages in overwrite mode, and an untagged
+    * ingest's fresh tag is never replayed), heals every subtree's
+    * compaction swaps ([[PartitionedStore.recover]]), runs the
+    * store's own step, then re-caches plans over the store: AFTER the
+    * FS repairs, since
     * refresh re-executes cached plans lazily against the tree as it
     * stands and recaching against a still-parked `.old-` backup would
     * capture an empty listing for that partition. Listing-only when
@@ -73,6 +77,7 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
   def recover(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
     sweepRetiredTombstones(fs, dir)
+    sweepStagings(fs, dir)
     subtrees.foreach(s => PartitionedStore.recover(fs, root(dir, s), s.partCol))
     healStore(spark, fs, dir)
     PartitionedStore.refresh(spark, dir)
@@ -139,7 +144,6 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     recover(spark, dir)
     val fs = fsOf(spark, dir)
     val tombs = new Path(s"$dir/tombstones")
-    sweepDeleteStagings(fs, dir)
     val committed = new Path(tombs, tag)
     if (!fs.exists(committed)) { // else a replayed tag: already committed
       val staging = new Path(s"$dir/.staging-del-$tag")
@@ -161,7 +165,13 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     * (the measured crossover). Every partition swap is individually
     * crash-safe and the anti-join re-applies idempotently on a retry,
     * because the batches are retired only after every subtree
-    * finished. Returns (subtree, value) per partition actually
+    * finished. The affected values are derived from rows the rewrites
+    * delete (band buckets from the deleted docs' shingles, ANN cells
+    * from their codes), so a retry after one subtree's rewrite
+    * committed derives too little: they are therefore recorded next
+    * to the batches before any rewrite starts, a retry unions every
+    * record with what it derives, and retiring the batches removes
+    * the records. Returns (subtree, value) per partition actually
     * rewritten — ids that were never indexed rewrite nothing and do
     * not report.
     *
@@ -176,14 +186,18 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     val fs = fsOf(spark, dir)
     // snapshot the batches being applied: a delete committed after this
     // listing survives this vacuum and applies at the next one
-    val applied = tombstoneBatches(fs, dir)
+    val listed = tombstoneListing(fs, dir)
+    val applied = batchesOf(listed)
     if (applied.isEmpty) return Seq.empty
     val tombIds = readBatches(spark, applied).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val done = PartitionedStore.parallel(spark, affected(tombIds)) { case (s, values) =>
+      val records = listed.map(_.getPath).filter(_.getName.startsWith(".affected-"))
+      val (plan, record) = recordAffected(fs, dir, records, affected(tombIds))
+      val done = PartitionedStore.parallel(spark, plan) { case (s, values) =>
         PartitionedStore.rewriteExcludingAll(spark, root(dir, s), s.partCol,
           values, tombIds, "id").map(s -> _)
       }.flatten
+      (records ++ record).foreach(fs.delete(_, false))
       applied.foreach { p =>
         val parked = new Path(p.getParent, s".retired-${p.getName}")
         fs.delete(parked, true) // a crashed prior retire of the same tag
@@ -237,18 +251,46 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     * or None when nothing is tombstoned. Never collected — probe masks
     * and vacuums consume it as a relation. */
   def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] =
-    Some(tombstoneBatches(fsOf(spark, dir), dir)).filter(_.nonEmpty)
+    Some(batchesOf(tombstoneListing(fsOf(spark, dir), dir))).filter(_.nonEmpty)
       .map(readBatches(spark, _))
 
   private def readBatches(spark: SparkSession, batches: Seq[Path]): DataFrame =
     spark.read.parquet(batches.map(_.toString): _*).select(col("__tomb_id")).distinct()
 
-  private def tombstoneBatches(fs: FileSystem, dir: String): Seq[Path] = {
+  private def tombstoneListing(fs: FileSystem, dir: String): Seq[FileStatus] = {
     val tombs = new Path(s"$dir/tombstones")
-    if (!fs.exists(tombs)) Seq.empty
-    else fs.listStatus(tombs)
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("."))
-      .map(_.getPath).toIndexedSeq
+    if (!fs.exists(tombs)) Seq.empty else fs.listStatus(tombs).toIndexedSeq
+  }
+
+  private def batchesOf(listed: Seq[FileStatus]): Seq[Path] =
+    listed.filter(st => st.isDirectory && !st.getPath.getName.startsWith("."))
+      .map(_.getPath)
+
+  /** The affected values `derived` from the tombstone set, unioned with
+    * every crashed vacuum's `records`, and the record written for
+    * them: one `<subtree>\t<value>` line each through the FS API (no
+    * Spark job), closed by an `end` line. A record without it was cut
+    * short by a crash before any rewrite started, so its retry's own
+    * derivation covers it. */
+  private def recordAffected(fs: FileSystem, dir: String, records: Seq[Path],
+                             derived: Seq[(Subtree, Seq[String])])
+      : (Seq[(Subtree, Seq[String])], Option[Path]) = {
+    val recorded = records.flatMap { p =>
+      val in = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
+      val lines = try in.getLines().toList finally in.close()
+      if (lines.lastOption.contains("end")) lines.init.map(_.split("\t", 2)) else Nil
+    }
+    val plan = (derived.map(_._1) ++ subtrees).distinct.flatMap { s =>
+      val values = (derived.filter(_._1 == s).flatMap(_._2) ++
+        recorded.collect { case Array(n, v) if n == s.name => v }).distinct
+      if (values.isEmpty && !derived.exists(_._1 == s)) None else Some(s -> values)
+    }
+    val lines = plan.flatMap { case (s, vs) => vs.map(v => s"${s.name}\t$v\n") }
+    if (lines.isEmpty) return (plan, None)
+    val record = new Path(s"$dir/tombstones/.affected-${java.util.UUID.randomUUID}")
+    val out = fs.create(record, false)
+    try out.write((lines.mkString + "end\n").getBytes("UTF-8")) finally out.close()
+    (plan, Some(record))
   }
 
   private def sweepRetiredTombstones(fs: FileSystem, dir: String): Unit = {
@@ -264,12 +306,13 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     * one. */
   private def clearTombstones(fs: FileSystem, dir: String): Unit = {
     fs.delete(new Path(s"$dir/tombstones"), true)
-    sweepDeleteStagings(fs, dir)
+    sweepStagings(fs, dir)
   }
 
-  /** Crashed delete stagings (single-writer: any leftover IS one). */
-  private def sweepDeleteStagings(fs: FileSystem, dir: String): Unit =
+  /** Crashed stagings of every kind: ingest, delete and the store's own
+    * (band rebucket). */
+  private def sweepStagings(fs: FileSystem, dir: String): Unit =
     if (fs.exists(new Path(dir)))
-      fs.listStatus(new Path(dir)).filter(_.getPath.getName.startsWith(".staging-del-"))
+      fs.listStatus(new Path(dir)).filter(_.getPath.getName.startsWith(".staging-"))
         .foreach(st => fs.delete(st.getPath, true))
 }

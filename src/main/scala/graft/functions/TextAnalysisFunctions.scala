@@ -134,7 +134,7 @@ object TextAnalysisFunctions {
     // (x18 0.97 -> 0.54 s) but pinned the SHARED PERSISTED relation at
     // 32 partitions, and every downstream consumer of the cache then
     // ran multi-stage 32-task plans over KB-sized data — x18b wall
-    // 0.99 -> 1.15-1.85 s, cpu 0.8 -> 10-23 s (ProfileX18Sandwich:
+    // 0.99 -> 1.15-1.85 s, cpu 0.8 -> 10-23 s (OPTIMIZATION_r19.md:
     // cpu ~10 s with the cache verifiably hot, so the tax is
     // tiny-task overhead, not recompute). Net over the pair the valve
     // LOSES on wall and costs 12-25x cpu; the one-pass kernel is

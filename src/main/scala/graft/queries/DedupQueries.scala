@@ -60,7 +60,7 @@ object DedupQueries {
       // relative to the stripe width, exactly the regime where the
       // sketch bound bites (unlike d4b's ~280-element char-5-gram
       // sets, where it saturates and is OFF). Measured 0.3–0.5 s
-      // faster at sf0.1 (tools/ProfileX11b, round 10); loosening-only
+      // faster at sf0.1 (SCALE.md round 10, x11b); loosening-only
       // pre-filter, so the verified output is bit-identical.
       containmentPairs(
         documents(s, d).filter(size(split(col("text"), " ")) >= 3),
@@ -461,11 +461,11 @@ object DedupQueries {
     // corpus: a removed document must stop matching future probes
     // immediately): save → committed delete batch (replayed once — a
     // no-op) → a CRASHED delete left staged-uncommitted (must never
-    // apply) → probe under the mask → vacuum (bands rewritten from
-    // the deleted docs' own re-banded shingles, shingles from the id
-    // hash — no store scan) → probe again (identical pairs) → second
-    // delete committed by the call that sweeps the crash remnant →
-    // probe under the widened mask. Arms collected before the next
+    // apply) → probe under the mask → vacuum (its write-entry
+    // recovery sweeps the crash remnant; bands rewritten from the
+    // deleted docs' own re-banded shingles, shingles from the id hash
+    // — no store scan) → probe again (identical pairs) → second
+    // delete committed → probe under the widened mask. Arms collected before the next
     // mutation, so mask, vacuum, and their equality are all gated.
     "d21_band_delete" -> ((s, d) => {
       import s.implicits._

@@ -496,7 +496,7 @@ object ExtraQueries {
     // is a RANK-space bound (value-space error is unbounded for
     // arbitrary distributions), and 0.02 is the SketchSpec pin with
     // ~5× margin over the worst measured error at this k (0.0041 at
-    // n = 200k, ProbeKllError). The oracle hard-codes
+    // n = 200k, SCALE.md round 12). The oracle hard-codes
     // within_bound = TRUE next to DuckDB's exact quantile_cont, so a
     // bound violation is a hash mismatch, not a silent estimate drift.
     "x40b_quantile_bound" -> ((s, d) => {

@@ -322,10 +322,10 @@ object SimilarityQueries {
     // GDPR/right-to-erasure arm — the one CRUD op the store lacked):
     // save → committed delete batch (replayed once: must be a no-op)
     // → a CRASHED delete batch left staged-uncommitted (must stay
-    // invisible forever) → probe under the mask → vacuum (bytes
-    // reclaimed, tombstones retired) → probe again (identical rows) →
-    // second delete batch committed by the call that also sweeps the
-    // crash remnant → probe under the new mask. Each arm's rows are
+    // invisible forever) → probe under the mask → vacuum (its
+    // write-entry recovery sweeps the crash remnant; bytes reclaimed,
+    // tombstones retired) → probe again (identical rows) → second
+    // delete batch committed → probe under the new mask. Each arm's rows are
     // collected BEFORE the next mutation, so the gate pins the mask
     // path, the vacuum path, and their equality, not just the final
     // state.
@@ -565,7 +565,7 @@ object SimilarityQueries {
     * and embedded as SQL double literals; Double.toString round-trips,
     * so DuckDB parses the identical plane. Sign-of-dot ties would need
     * the two engines to disagree within one ulp of 0 — not observed
-    * (probed exact at sf0.01, tools/probe_s2s4.py). */
+    * (probed exact at sf0.01). */
   private val s1Sql =
     """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
       | q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),

@@ -88,7 +88,7 @@ object StreamOps {
     * timeout: a band idle longer than the TTL drops its members —
     * after that, a re-arriving duplicate is a miss, the standard
     * recall/state trade every streaming dedup makes). TWO operational
-    * rules for TTL'd queries (measured, tools/ProfileStream): (1) set
+    * rules for TTL'd queries (measured, SCALE.md round-8 re-run): (1) set
     * an explicit trigger interval — with the default
     * as-fast-as-possible trigger, processing-time timeouts make an
     * idle engine fire back-to-back EMPTY micro-batches, each a full
@@ -99,8 +99,7 @@ object StreamOps {
     * full-state eviction pass. Rule (1) is enforced in code: a
     * `stateTTL` without a `trigger` interval fails fast here, and the
     * validated interval is what the caller MUST hand to the sink
-    * (`writer.trigger(Trigger.ProcessingTime(trigger.get))` — see
-    * tools/ProfileStream for the wiring). In-batch
+    * (`writer.trigger(Trigger.ProcessingTime(trigger.get))`). In-batch
     * arrival order is fixed by sorting each micro-batch's band group
     * by id, so emissions are deterministic given the same batch
     * boundaries. */
@@ -116,8 +115,7 @@ object StreamOps {
       "stateTTL without an explicit trigger interval: with the default " +
         "as-fast-as-possible trigger, processing-time timeouts make an idle " +
         "engine fire back-to-back EMPTY micro-batches, each a full state " +
-        "scan + commit (measured ~850% CPU of pure churn, " +
-        "tools/ProfileStream). Pass trigger = Some(\"<interval>\") and set " +
+        "scan + commit (measured ~850% CPU of pure churn). Pass trigger = Some(\"<interval>\") and set " +
         "it on the sink: writer.trigger(Trigger.ProcessingTime(interval)).")
     // fail fast on an unparseable interval, not at stream start
     trigger.foreach(org.apache.spark.sql.streaming.Trigger.ProcessingTime(_))

@@ -528,4 +528,63 @@ class BandIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/bands/bucket=$emptied").count() == 0)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
+
+  test("vacuum crash after the shingle rewrite committed: the retry still reclaims the postings") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .filter(col("doc_id") < 120)
+    val dir = FaultyFs.tempDir(spark, "graft_band_vac_crash")
+    BandIndex.save(docs, "doc_id", "text",
+      shingleN = 3, numHashes = 64, bands = 16, dir = dir)
+    val batch = docs.filter(col("doc_id") < 30)
+      .select((col("doc_id") + 70000L).as("doc_id"), col("text"))
+    def probe() = pairSet(BandIndex.probe(spark, dir, batch, "doc_id", "text", threshold = 0.8))
+    val del = docs.filter(col("doc_id") % 5 === 1).select("doc_id")
+    val delIds = del.collect().map(_.getLong(0)).toSet
+    def ids(sub: String) =
+      spark.read.parquet(s"$dir/$sub").select("id").collect().map(_.getLong(0)).toSet
+    BandIndex.deleteIds(spark, dir, del, "doc_id", "d1")
+    val masked = probe()
+    assert(ids("bands").exists(delIds), "fixture must index the delete set")
+    // the band rewrite fails; its concurrent twin runs to completion
+    FaultyFs.failingRenamesUnder("/bands/") {
+      intercept[Exception](BandIndex.vacuumDeletes(spark, dir))
+    }
+    assert(!ids("shingles").exists(delIds), "the shingle rewrite committed before the crash")
+    BandIndex.vacuumDeletes(spark, dir)
+    assert(!ids("bands").exists(delIds), "the retry must reclaim every deleted doc's postings")
+    assert(probe() == masked, "the vacuumed store must serve the masked pairs")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(new java.net.URI(dir).getPath))
+  }
+
+  test("a write entry sweeps the staging dirs of crashed untagged ingests, in both stores") {
+    import graft.functions.AnnIndex
+    import org.apache.hadoop.fs.Path
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .filter(col("doc_id") < 60)
+    val e = Tables.embeddings(spark, sf)
+    val band = java.nio.file.Files.createTempDirectory("graft_sweep_band").toString
+    val ann = java.nio.file.Files.createTempDirectory("graft_sweep_ann").toString
+    BandIndex.save(docs, "doc_id", "text", shingleN = 3, numHashes = 64, bands = 16, dir = band)
+    AnnIndex.ivfIndexSave(e, "vec_id", "embedding", cells = 8, dir = ann)
+    val batch = docs.filter(col("doc_id") < 20)
+      .select((col("doc_id") + 70000L).as("doc_id"), col("text"))
+    val q = e.filter(col("vec_id") < 8)
+    def probes() = (
+      BandIndex.probe(spark, band, batch, "doc_id", "text", threshold = 0.8)
+        .collect().map(_.toSeq).toSet,
+      AnnIndex.probe(spark, ann, q, "vec_id", "embedding", 5, 2).collect().map(_.toSeq).toSet)
+    val want = probes()
+    val fs = new Path(band).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // what a crash mid-write of an untagged ingest leaves behind
+    val planted = Seq(
+      new Path(s"$band/.staging-bands-add-${java.util.UUID.randomUUID}"),
+      new Path(s"$ann/.staging-codes-add-${java.util.UUID.randomUUID}"))
+    planted.foreach(p => spark.range(3).write.parquet(s"$p/bucket=0"))
+    assert(planted.forall(fs.exists))
+    BandIndex.compact(spark, band, minFiles = 1000) // write entries
+    AnnIndex.compactCells(spark, ann, minFiles = 1000)
+    assert(!planted.exists(fs.exists), "write-entry recovery must drop crashed stagings")
+    assert(probes() == want, "sweeping the stagings must not change a probe")
+    Seq(band, ann).foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
 }

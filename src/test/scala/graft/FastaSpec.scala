@@ -3,18 +3,20 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.FastaSource
 
-/** FASTA source against the reference's own fixture
-  * (/root/reference/test/sample_genes.fa: 759 protein records). */
+/** FASTA source against a fixture in the reference's format
+  * (FIXTURES.md §4): `src/test/resources/fixtures/sample_genes.fa`, 13
+  * protein records with `>EK_…_<id>` headers and multi-line sequences,
+  * one of them (KK_AEA46692.1) without a sequence. */
 class FastaSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private val fixture = "/root/reference/test/sample_genes.fa"
+  private val fixture = getClass.getResource("/fixtures/sample_genes.fa").getPath
 
   test("parses all records with the BioSeqPipe schema") {
     val df = FastaSource.read(spark, fixture)
     assert(df.columns.toSet ==
       Set("sequences", "ids", "names", "descriptions", "dbxrefs"))
-    assert(df.count() == 759)
+    assert(df.count() == 13)
     // every record has a non-empty id and sequence, no '>' leakage
     assert(df.filter(org.apache.spark.sql.functions.col("ids").startsWith(">")).count() == 0)
     // the fixture has exactly one sequence-less record (KK_AEA46692.1)

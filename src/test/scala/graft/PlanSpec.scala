@@ -104,7 +104,7 @@ class PlanSpec extends AnyFunSuite {
     // (DedupFunctions.attachVerifySets); with AQE off, Spark's
     // ReuseExchange rule must dedup the broadcast build. (Under AQE,
     // Spark 4.1.2 misses this reuse for every shape tried —
-    // tools/ReuseRepro + SCALE.md round 10 — so the pin runs non-AQE,
+    // SCALE.md round 10 — so the pin runs non-AQE,
     // where the shared-plan form is what MAKES reuse possible; the
     // r9 per-side renamed projections broke it in both modes.)
     import org.apache.spark.sql.functions._

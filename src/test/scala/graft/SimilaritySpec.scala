@@ -1090,4 +1090,32 @@ class SimilaritySpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
   }
+
+  test("PQ vacuum crash after the codes rewrite committed: the retry still reclaims the sidecar") {
+    import graft.functions.AnnIndex
+    val e = graft.Tables.embeddings(spark, sf)
+    val dir = FaultyFs.tempDir(spark, "graft_anndel_crash")
+    AnnIndex.ivfpqIndexSave(e, "vec_id", "embedding",
+      cells = 16, m = 4, codebook = 16, dim = 64, residual = false,
+      dir = dir, keepVectors = true)
+    val q = e.filter(col("vec_id") < 8)
+    def probe() = AnnIndex.probe(spark, dir, q, "vec_id", "embedding", k = 5, nprobe = 4)
+      .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
+    val del = e.filter(col("vec_id") % 7 === 3 && col("vec_id") >= 16).select("vec_id")
+    val delIds = del.collect().map(_.getLong(0)).toSet
+    def ids(sub: String) =
+      spark.read.parquet(s"$dir/$sub").select(col("id").cast("long")).collect()
+        .map(_.getLong(0)).toSet
+    AnnIndex.deleteIds(spark, dir, del, "vec_id", "d1")
+    val masked = probe()
+    // the sidecar rewrite fails; its concurrent twin runs to completion
+    FaultyFs.failingRenamesUnder("/vectors/") {
+      intercept[Exception](AnnIndex.vacuumDeletes(spark, dir))
+    }
+    assert(!ids("codes").exists(delIds), "the codes rewrite committed before the crash")
+    AnnIndex.vacuumDeletes(spark, dir)
+    assert(!ids("vectors").exists(delIds), "the retry must reclaim every deleted sidecar row")
+    assert(probe() == masked, "the vacuumed index must serve the masked neighbors")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(new java.net.URI(dir).getPath))
+  }
 }
