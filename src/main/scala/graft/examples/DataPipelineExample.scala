@@ -103,8 +103,8 @@ object DataPipelineExample {
     // 3b. semantic dedup (SemDeDup) over the document embeddings:
     //     cluster by nearest centroid, prune within-cluster cosine
     //     duplicates — catches paraphrases the shingle families miss.
-    //     On a real cluster pass reliable = true (fault-tolerant
-    //     checkpoint) and, once C leaves broadcast range,
+    //     On a real cluster set a checkpoint dir (fault-tolerant
+    //     checkpoints, see Lineage) and, once C leaves broadcast range,
     //     assignPlanes = Some(log2(C) - 3) for the bucketed
     //     assignment path.
     val sem = SimilarityFunctions.semDedup(

@@ -30,10 +30,10 @@ object BpeFunctions {
     * Two execution paths, same function (BpeSpec pins their
     * agreement) — see [[SubwordTrainer.dualPath]]. */
   def bpeTrain(docs: DataFrame, textCol: String, numMerges: Int,
-               minPairFreq: Long = 2L, reliable: Boolean = false,
+               minPairFreq: Long = 2L,
                collectVocabMax: Long = 1L << 20): Seq[(String, String)] =
     SubwordTrainer.mergeTrain(docs, textCol, numMerges, minPairFreq,
-      reliable, collectVocabMax, Family)
+      collectVocabMax, Family)
 
   private object Family extends SubwordTrainer.MergeFamily {
     /** characters + the </w> end marker; split(w, "") yields one

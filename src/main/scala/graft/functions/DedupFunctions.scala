@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale training-data pipelines:
@@ -529,7 +529,7 @@ object DedupFunctions {
     * string Jaccard — a collision shifts both engines identically, so
     * oracle equality stays exact.
     *
-    * Measured growth (ProfileScale, SCALE.md "d4b ×100"): candidates
+    * Measured growth (SCALE.md "d4b ×100"): candidates
     * 3.6M / 36.9M / 477M and verified pairs exactly linear at corpus
     * 5k / 50k / 500k docs. At 500k docs the hashed-set relation
     * (~1.1 GB) passed the old fixed 256 MB cap, and on a SINGLE node
@@ -730,51 +730,44 @@ object DedupFunctions {
     * pathological chain of n near-dups converges in ~log₂ n rounds
     * (64-node path: 7 rounds, vs 63 for plain propagation).
     *
-    * Every generation is eagerly checkpointed: the logical plan is
-    * truncated per round, so replanning cost stays constant instead of
-    * compounding with the iteration count (superseded generations'
-    * blocks are reclaimed by the context cleaner on GC; each is only
-    * node-sized).
-    *
-    * `reliable = false` (default) uses `localCheckpoint` — right for
-    * local/single-JVM runs, but the blocks live on executors: on a real
-    * cluster an executor loss mid-iteration fails the job. For cluster
-    * runs pass `reliable = true` to use fault-tolerant `checkpoint`
-    * (requires `spark.sparkContext.setCheckpointDir` on durable
-    * storage, e.g. the job's scratch prefix on the cluster FS).
+    * Each round is one job: the generation is cut through
+    * [[Lineage.advance]] (the plan stays constant-size per round), and
+    * that same job counts the changed labels through an observation.
     *
     * Returns (id, cluster) with cluster = min member id, persisted —
     * caller releases. */
-  def nearDupClusters(pairs: DataFrame, reliable: Boolean = false): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
+  def nearDupClusters(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("a").as("x"), col("b").as("y"))
       .unionByName(pairs.select(col("b").as("x"), col("a").as("y")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = ckpt(edges.select(col("x").as("id")).distinct()
+    var labels = Lineage.cut(edges.select(col("x").as("id")).distinct()
       .withColumn("cluster", col("id")))
-    var changed = 1L
-    while (changed > 0) {
+    var changed = true
+    while (changed) {
       // relax as a left join (not a union): a Union child sharing the
       // checkpointed generation's attribute ids trips Catalyst's union
       // constraint rewrite (NoSuchElementException on the child attr)
       val neigh = edges.join(labels, edges("y") === labels("id"))
         .groupBy(col("x")).agg(min("cluster").as("__nc"))
       val relaxed = labels.join(neigh, labels("id") === neigh("x"), "left")
-        .select(labels("id"),
+        .select(labels("id"), labels("cluster").as("__old"),
           least(labels("cluster"), coalesce(col("__nc"), labels("cluster"))).as("cluster"))
       // path halving: adopt the label of your label (labels are node
       // ids, so the self-join always matches; left+coalesce is belt
       // and braces for an empty generation)
-      val next = ckpt(relaxed.as("l")
+      val round = Observation()
+      labels = Lineage.advance(labels, relaxed.as("l")
         .join(relaxed.select(col("id").as("__cid"), col("cluster").as("__cc")).as("p"),
           col("l.cluster") === col("__cid"), "left")
-        .select(col("l.id").as("id"),
+        .select(col("l.id").as("id"), col("l.__old").as("__old"),
           least(col("l.cluster"), coalesce(col("__cc"), col("l.cluster"))).as("cluster"))
-      ) // eager: materializes and truncates lineage
-      changed = next.join(labels.withColumnRenamed("cluster", "old"), Seq("id"))
-        .filter(col("cluster") =!= col("old")).count()
-      labels = next
+        .observe(round, sum(when(col("cluster") =!= col("__old"), 1L)).as("changed"))
+      ).drop("__old")
+      // only zero vs non-zero matters (a retried task may count twice);
+      // the sum is null when no row changed, an empty generation too
+      val row = scala.concurrent.Await.result(round.future,
+        scala.concurrent.duration.Duration(10, "min"))
+      changed = !row.isNullAt(0) && row.getLong(0) > 0
     }
     val out = labels.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()

@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   * join + one groupBy(dst) aggregation (map-side partial sums) and a
   * node-sized left join back — exchange ∝ edges per iteration, the
   * standard distributed-PageRank envelope. No driver-side state
-  * beyond the loop counter; the lineage is `iters` joins deep —
-  * bounded by the `checkpointEvery` dial (gated at iters = 15 by
-  * x52b, which also exercises the dangling-mass redistribution arm).
+  * beyond the loop counter; the lineage is `iters` joins deep (x52b
+  * gates iters = 15 with the dangling-mass redistribution arm).
   */
 object GraphFunctions {
 
@@ -44,81 +43,25 @@ object GraphFunctions {
     * so finding them is a filter, not a join; n is read once at entry
     * (a count, the only driver-side scalar).
     *
-    * Lineage: the loop references the evolving `rank` frame exactly
-    * ONCE per iteration (the contribution join) — the update joins a
-    * STATIC (id, __rdeg) frame instead of `rank`, so the lazy chain
-    * grows linearly, one iteration deep per iteration (optimization
-    * r19: r18's unconditional per-iteration eager localCheckpoint
-    * taxed the plain arm with a materialization job per iteration,
-    * x52 0.25 → 1.65 s). The dangling arm is the exception: its
-    * sink-mass aggregate is a second reference to `rank` per
-    * iteration, so a lazy chain replays the whole segment per
-    * reference (2–3× growth per iteration) — with `reliable = false`
-    * (the default, single-JVM/local runs) THAT arm severs every
-    * iteration with an eager `localCheckpoint` (the r18 fix, x52b
-    * 9.5 → 3.6 s; the `checkpointEvery` dial is subsumed there).
-    * With `reliable = true` (real clusters) the chain is pure
-    * lineage — executor-loss recovery replays it — cut every
-    * `checkpointEvery` iterations by a fault-tolerant `checkpoint`
-    * (requires `setCheckpointDir` on durable storage; same knob as
-    * nearDupClusters/semDedup); keep the dial small, past ~10
-    * iterations analysis/codegen cost grows superlinearly. x52b gates
-    * iters = 15 with checkpointEvery = 5 inside the oracle: the
-    * severed plan must produce bit-identical ranks. */
+    * Lineage: the plain arm references the evolving rank once per
+    * iteration, so its lazy chain grows linearly and is never cut; the
+    * dangling arm's sink-mass aggregate references it twice, so that
+    * arm cuts the edges, the static frame and every generation through
+    * [[Lineage.cut]] (the A/Bs: OPTIMIZATION_r18.md, OPTIMIZATION_r19.md). */
   def pageRankMicro(nodes: DataFrame, edges: DataFrame,
                     iters: Int, dampPct: Int,
-                    danglingRedistribute: Boolean = false,
-                    checkpointEvery: Int = 0,
-                    reliable: Boolean = false): DataFrame = {
+                    danglingRedistribute: Boolean = false): DataFrame = {
     require(iters >= 1 && dampPct >= 0 && dampPct <= 100)
-    // Optimization-round restructure (r18 + r19, guide §1.2/§2.4 —
-    // bit-identical arithmetic, A/B'd on x52/x52b):
-    //
-    //  1. (r18) The rank frame CARRIES its node's out-degree (`__rdeg`,
-    //     null for sinks): each iteration joins raw edges to rank
-    //     directly (src's degree rides on the rank row — the
-    //     per-iteration edges⨝deg rebuild is gone) and the dangling
-    //     arm's sink mass is a FILTER+agg over rank instead of a
-    //     node-sized anti-join.
-    //  2. (r19) The update join reads the STATIC (id, __rdeg) frame
-    //     `rankStatic`, not the evolving `rank` — __rdeg never changes,
-    //     so the join is semantics-identical, and the plain arm's only
-    //     per-iteration reference to `rank` is the contribution join:
-    //     a lazy chain grows LINEARLY and needs no severing at all
-    //     (r18's unconditional eager localCheckpoint paid one
-    //     materialization job per iteration on an arm with no replay
-    //     problem — x52 0.25 → 1.65 s, the round's one real
-    //     regression).
-    //  3. (r18) The dangling arm references rank TWICE per iteration
-    //     (contribution join + sink-mass aggregate), so a lazy chain
-    //     replays the whole segment per reference (x52b before: wall
-    //     7.95 s at 1.45 s cpu — the gap was driver replanning +
-    //     recompute of the self-similar reference tree; 10 206-line
-    //     explain). In local mode (`reliable = false`) THAT arm severs
-    //     every iteration with an eager localCheckpoint: each
-    //     iteration is AQE-planned fresh (tiny broadcast joins at
-    //     fixture scale; honest shuffles at corpus scale) over a
-    //     materialized LogicalRDD. The A/B that persisted each
-    //     iteration instead was WORSE in cpu (9.5 → 22 s wall, 88 s
-    //     cpu): cached subplans are compiled without AQE, so every
-    //     tiny iteration ran as 32-partition sort-merge joins.
-    //     Block-manager storage of superseded generations is reclaimed
-    //     by the ContextCleaner as the loop drops its references.
-    //  4. `reliable = true` (real clusters) keeps the pure-lineage
-    //     chain between `checkpointEvery` reliable checkpoints — the
-    //     fault-tolerance contract is unchanged.
     val deg = edges.groupBy("src").agg(count(lit(1)).as("__deg"))
     val base = (100L - dampPct) * 10000L
     val n = if (danglingRedistribute) nodes.count() else 0L
-    val eagerSever = !reliable && danglingRedistribute
-    val e0 = edges.select("src", "dst")
-    val e = if (eagerSever) e0.localCheckpoint() else e0
-    val rank0 = nodes.join(deg, nodes("id") === deg("src"), "left")
+    def sever(df: DataFrame) = if (danglingRedistribute) Lineage.cut(df) else df
+    val e = sever(edges.select("src", "dst"))
+    val rankStatic = sever(nodes.join(deg, nodes("id") === deg("src"), "left")
       .select(nodes("id"), lit(1000000L).as("rank_micro"),
-        col("__deg").as("__rdeg"))
-    val rankStatic = if (eagerSever) rank0.localCheckpoint() else rank0
+        col("__deg").as("__rdeg")))
     var rank = rankStatic
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       // src's out-degree == its rank row's __rdeg (non-null whenever an
       // edge exists), so `rank_micro DIV __rdeg` is bit-identical to the
       // old `rank_micro DIV __deg` against the edges⨝deg relation
@@ -147,11 +90,7 @@ object GraphFunctions {
                 .as("rank_micro"),
               rankStatic("__rdeg"))
         }
-      rank =
-        if (eagerSever) next.localCheckpoint()
-        else if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-          (if (reliable) next.checkpoint() else next.localCheckpoint())
-        else next
+      rank = sever(next)
     }
     rank.select("id", "rank_micro")
   }

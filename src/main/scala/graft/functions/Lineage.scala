@@ -1,0 +1,35 @@
+package graft.functions
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The one lineage-cut policy of the iterative loops (the cluster
+  * labels of [[DedupFunctions.nearDupClusters]], the dangling arm of
+  * [[GraphFunctions.pageRankMicro]], the SemDeDup assignment, the
+  * subword merge trainers). The SparkContext's own setting decides: with a
+  * checkpoint dir (`spark.sparkContext.setCheckpointDir` on durable
+  * storage, the cluster setup) the cut is a fault-tolerant
+  * `checkpoint()`, so an executor lost mid-loop costs a re-read, not
+  * the run; without one it is a `localCheckpoint()`, whose blocks live
+  * on the executors (right for single-JVM runs). */
+object Lineage {
+
+  /** Materialize `df` eagerly and cut its lineage. */
+  def cut(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
+  /** `cut(next)`, then free the blocks behind the cut `prev` it was
+    * computed from, so a loop holds at most two generations live.
+    * `Dataset.unpersist` does not do this: a cut's analyzed plan is a
+    * [[LogicalRDD]] over an RDD persisted at checkpoint time, outside
+    * the CacheManager (a fault-tolerant cut holds no blocks: a no-op). */
+  def advance(prev: DataFrame, next: DataFrame): DataFrame = {
+    val out = cut(next)
+    prev.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+    out
+  }
+}

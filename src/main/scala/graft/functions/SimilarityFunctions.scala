@@ -879,19 +879,12 @@ object SimilarityFunctions {
     * (SimilaritySpec). The reference has no embedding dedup —
     * parity-plus surface.
     *
-    * `reliable = false` (default) materializes the assignment with
-    * `localCheckpoint` — right for local/single-JVM runs, but the
-    * blocks live on executors: on a real cluster an executor loss
-    * mid-job fails the run. For cluster runs pass `reliable = true`
-    * to use fault-tolerant `checkpoint` (requires
-    * `spark.sparkContext.setCheckpointDir` on durable storage) — the
-    * same knob as nearDupClusters (d6). */
+    * The assignment is materialized once through [[Lineage.cut]]. */
   def semDedup(corpus: DataFrame, idCol: String, vecCol: String,
                clusters: Int, threshold: Double,
                refineIters: Int = 0,
                assignPlanes: Option[Int] = None,
-               assignSeed: Long = 42L,
-               reliable: Boolean = false): DataFrame = {
+               assignSeed: Long = 42L): DataFrame = {
     require(clusters >= 1 && refineIters >= 0,
       "need clusters >= 1, refineIters >= 0")
     val e = corpus.select(col(idCol).cast("long").as("__id"),
@@ -902,11 +895,9 @@ object SimilarityFunctions {
     // assignment instead of re-running the scan
     // the norm rides the materialized assignment (computed once per
     // row, not once per within-cluster pair — optimization r19)
-    val materialized = assignAll(e, cent, assignPlanes, assignSeed)
+    val assigned = Lineage.cut(assignAll(e, cent, assignPlanes, assignSeed)
       .select(col("__id"), col("__v"), col("__cid"),
-        l2Norm(col("__v")).as("__n"))
-    val assigned =
-      if (reliable) materialized.checkpoint() else materialized.localCheckpoint()
+        l2Norm(col("__v")).as("__n")))
     // within-cluster scan: only (lower-id → higher-id) direction, so
     // the group representative can never be marked
     val dup = assigned.select(col("__cid"), col("__id"), col("__v"),

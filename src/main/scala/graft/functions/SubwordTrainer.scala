@@ -124,16 +124,13 @@ private[graft] object SubwordTrainer {
   /** Learn up to `numMerges` merges — the whole dual-path merge loop.
     * Returns the ordered merge list. */
   def mergeTrain(docs: DataFrame, textCol: String, numMerges: Int,
-                 minPairFreq: Long, reliable: Boolean,
-                 collectVocabMax: Long,
+                 minPairFreq: Long, collectVocabMax: Long,
                  family: MergeFamily): Seq[(String, String)] = {
     require(numMerges >= 1, "numMerges must be positive")
     dualPath(docs, textCol, collectVocabMax, None) { wf =>
       mergeLocal(wf, numMerges, minPairFreq, family)
     } { words =>
-      def ckpt(df: DataFrame): DataFrame =
-        if (reliable) df.checkpoint() else df.localCheckpoint()
-      var vocab = ckpt(words.select(
+      var vocab = Lineage.cut(words.select(
         family.initSyms(col("__w")).as("__sym"), col("__f")))
       val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
       var done = false
@@ -142,14 +139,8 @@ private[graft] object SubwordTrainer {
           case None => done = true
           case Some((l, r)) =>
             merges += ((l, r))
-            val prev = vocab
-            vocab = ckpt(vocab.select(
+            vocab = Lineage.advance(vocab, vocab.select(
               mergeFold(l, r, family.joined(l, r)).as("__sym"), col("__f")))
-            // the new checkpoint is materialized (eager) — release the
-            // parent's blocks instead of accumulating numMerges cached
-            // lineages for the run's duration (r15 advice; applied
-            // ONCE here for every family)
-            org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(prev)
         }
       }
       merges.toSeq

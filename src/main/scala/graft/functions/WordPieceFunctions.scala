@@ -42,10 +42,10 @@ object WordPieceFunctions {
     * Two execution paths, same function (WordPieceSpec pins their
     * agreement) — see [[SubwordTrainer.dualPath]]. */
   def wordpieceTrain(docs: DataFrame, textCol: String, numMerges: Int,
-                     minPairFreq: Long = 2L, reliable: Boolean = false,
+                     minPairFreq: Long = 2L,
                      collectVocabMax: Long = 1L << 20): Seq[(String, String)] =
     SubwordTrainer.mergeTrain(docs, textCol, numMerges, minPairFreq,
-      reliable, collectVocabMax, Family)
+      collectVocabMax, Family)
 
   private object Family extends SubwordTrainer.MergeFamily {
     /** first code point plain, rest ##-prefixed. */

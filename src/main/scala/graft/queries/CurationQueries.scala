@@ -218,12 +218,10 @@ object CurationQueries {
     // REAL sinks (every id % 7 == 0 node keeps no out-edges), the
     // dangling-mass redistribution convention real host-rank uses
     // (each iteration the sinks' total rank is shared floor(Σ/n) to
-    // every node before damping), at iters = 15 with the lineage
-    // severed every 5 iterations (checkpointEvery — localCheckpoint).
-    // The oracle unrolls all FIFTEEN iterations including the dangling
-    // term, so the checkpointed plan must be bit-identical to the
-    // pure-lineage replay — the discipline the x52 scaladoc deferred,
-    // now gated.
+    // every node before damping), at iters = 15. That arm cuts its
+    // lineage every iteration (Lineage.cut); the oracle unrolls all
+    // FIFTEEN iterations including the dangling term, so the cut plan
+    // must be bit-identical to the pure-lineage replay.
     "x52b_pagerank_dangling" -> ((s, d) => {
       import graft.functions.GraphFunctions
       val nodes = documents(s, d).select(col("doc_id").as("id"))
@@ -235,7 +233,7 @@ object CurationQueries {
         .select(col("id").as("src"),
           ((col("id") * 37L + col("__j") * 911L) % n).as("dst"))
       GraphFunctions.pageRankMicro(nodes, edges, iters = 15, dampPct = 85,
-          danglingRedistribute = true, checkpointEvery = 5)
+          danglingRedistribute = true)
         .orderBy("id")
     }),
 

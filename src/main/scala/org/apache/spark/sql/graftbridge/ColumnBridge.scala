@@ -11,19 +11,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Free the block-manager storage behind an eager
-    * `localCheckpoint()`ed Dataset: its analyzed plan is a
-    * [[org.apache.spark.sql.execution.LogicalRDD]] over an RDD
-    * persisted at checkpoint time, which `Dataset.unpersist` does NOT
-    * release (that only clears CacheManager entries). No-op on plans
-    * with no LogicalRDD; harmless on reliable checkpoints (their RDD
-    * is not block-persisted). Used by the iterative subword trainers
-    * so a numMerges-long loop holds at most two checkpoints live. */
-  def unpersistCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

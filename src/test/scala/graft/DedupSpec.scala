@@ -40,17 +40,32 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("reliable-checkpoint mode produces identical clusters") {
-    // cluster path: fault-tolerant checkpoint() instead of
-    // localCheckpoint() (executor-loss-safe at 100 TB)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
+    // cluster path: a session checkpoint dir turns every cut into a
+    // fault-tolerant checkpoint() instead of localCheckpoint()
+    // (executor-loss-safe at 100 TB)
     val pairs = ((0L until 63L).map(i => (i, i + 1)) ++ Seq((200L, 201L)))
       .toDF("a", "b")
-    val local = nearDupClusters(pairs)
-    val rel = nearDupClusters(pairs, reliable = true)
-    assert(rel.as[(Long, Long)].collect().toMap ==
-      local.as[(Long, Long)].collect().toMap)
-    local.unpersist(); rel.unpersist()
+    def clusters(): Map[Long, Long] = {
+      val labels = nearDupClusters(pairs)
+      try labels.as[(Long, Long)].collect().toMap finally labels.unpersist()
+    }
+    val local = clusters()
+    val rel = SparkTestSession.withCheckpointDir(_ => clusters())
+    assert(rel == local)
+    assert(local.size == 66)
+  }
+
+  test("degenerate graphs: no pairs ends with an empty frame, one pair converges") {
+    // the empty graph's only round sums its changed labels over no rows
+    // (null); read as anything but 0 the loop would never end
+    val empty = scala.concurrent.Await.result(
+      scala.concurrent.Future(nearDupClusters(Seq.empty[(Long, Long)].toDF("a", "b")))(
+        scala.concurrent.ExecutionContext.global),
+      scala.concurrent.duration.Duration(2, "min"))
+    assert(empty.columns.toSeq == Seq("id", "cluster") && empty.count() == 0L)
+    val single = nearDupClusters(Seq((9L, 4L)).toDF("a", "b"))
+    assert(single.as[(Long, Long)].collect().toMap == Map(4L -> 4L, 9L -> 4L))
+    empty.unpersist(); single.unpersist()
   }
 
   test("xxh64 hash family finds the same verified near-dup pairs as md5") {

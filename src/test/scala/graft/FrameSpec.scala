@@ -16,6 +16,17 @@ object SparkTestSession {
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` with a fresh checkpoint dir set on the shared session
+    * (so every [[graft.functions.Lineage.cut]] is a reliable
+    * checkpoint) and clears the setting after: all suites share this
+    * JVM, and a dir left set would switch every later suite's
+    * iterative loops to reliable checkpoints. */
+  def withCheckpointDir[T](body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try body(dir) finally spark.sparkContext.setCheckpointDir(null)
+  }
 }
 
 /** Frame positional-algebra laws (mirrors the reference's message_test.py

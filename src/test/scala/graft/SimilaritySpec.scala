@@ -586,15 +586,14 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("semDedup reliable-checkpoint mode equals the local-checkpoint default") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sd_ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
     val e = graft.Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 300).select("vec_id", "embedding")
-    def rows(reliable: Boolean) =
-      semDedup(e, "vec_id", "embedding", clusters = 6, threshold = 0.3,
-          reliable = reliable)
+    def rows() =
+      semDedup(e, "vec_id", "embedding", clusters = 6, threshold = 0.3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(rows(reliable = true) == rows(reliable = false))
+    val local = rows()
+    val reliable = SparkTestSession.withCheckpointDir(_ => rows())
+    assert(reliable == local)
   }
 
   /** Round-7's MinHash bug class (a hash "family" whose members share a
