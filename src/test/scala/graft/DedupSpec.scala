@@ -68,6 +68,66 @@ class DedupSpec extends AnyFunSuite {
     empty.unpersist(); single.unpersist()
   }
 
+  test("a call frees every cut it made: only the returned frame stays persisted") {
+    val sc = spark.sparkContext
+    val pairs = ((0L until 63L).map(i => (i, i + 1)) :+ ((200L, 201L))).toDF("a", "b")
+    val before = sc.getPersistentRDDs.keySet
+    val out = nearDupClusters(pairs)
+    val during = sc.getPersistentRDDs.keySet
+    assert(out.count() == 66L)
+    out.unpersist(blocking = true)
+    // subset, not equality: the registry holds its RDDs weakly, so GC
+    // may drop an entry an earlier suite left behind
+    assert((during -- before).size == 1, s"registered by the call: ${during -- before}")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("after the entry cut every query the loop runs plans over cut leaves only") {
+    import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    // the caller's pipeline: a persisted frame and two joins; 10
+    // chains of 8 ids, so the loop runs several rounds
+    val docs = spark.range(80).select(col("id"), (col("id") / 8L).cast("long").as("g")).persist()
+    docs.count()
+    val pairs = docs.as("l").join(docs.as("r"), col("l.g") === col("r.g") && col("r.id") === col("l.id") + 1L)
+      .join(docs.select(col("id").as("k")), col("r.id") === col("k"))
+      .select(col("r.id").as("a"), col("l.id").as("b"))
+    val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[QueryExecution])
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    drain()
+    spark.listenerManager.register(listener)
+    val out = try { val o = nearDupClusters(pairs); drain(); o }
+      finally spark.listenerManager.unregister(listener)
+    try {
+      val queries = seen.toArray.toSeq.map(_.asInstanceOf[QueryExecution])
+      // the entry cut, the seeded labels, the rounds, the final count
+      assert(queries.size >= 5, s"${queries.size} queries")
+      assert(!queries.head.analyzed.collectLeaves().forall(_.isInstanceOf[LogicalRDD]),
+        "the first query is the entry cut over the caller's pipeline")
+      // the only cache a query may read is the returned frame's own
+      // (the final count materializes it); a persisted edge set would
+      // show here with the caller's whole pipeline in its cached plan
+      val own = out.queryExecution.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder }
+      assert(own.size == 1)
+      queries.tail.foreach { qe =>
+        val leaves = qe.analyzed.collectLeaves()
+        assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]), qe.analyzed.treeString)
+        assert(qe.optimizedPlan.collect { case r: InMemoryRelation => r.cacheBuilder }.forall(own.contains),
+          qe.optimizedPlan.treeString)
+      }
+      assert(out.as[(Long, Long)].collect().toMap == (0L until 80L).map(i => i -> i / 8L * 8L).toMap)
+    } finally { out.unpersist(); docs.unpersist() }
+  }
+
   test("xxh64 hash family finds the same verified near-dup pairs as md5") {
     // exact verification is family-independent; on this corpus both
     // families' LSH stages surface every qualifying candidate
