@@ -2,35 +2,57 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-aware memoization for the query packs' shared
-  * intermediates. Plain `getOrElseUpdate` keyed on the scale dir
-  * returns a plan bound to a STOPPED SparkContext if the session was
-  * recreated without an interleaved releaseCaches() — every action on
-  * it then throws "SparkContext has been shut down". The memo
-  * validates the cached value's session identity and silently
-  * rebuilds on mismatch (a stale entry's persisted blocks died with
-  * its context, so there is nothing to unpersist). */
+/** The query packs' one memo table: the intermediates several queries
+  * of a Verify/Bench pass share (d2's LSH pairs feed d6's clusters,
+  * x18's fingerprints feed x18b, u11's fit feeds u1/u12/u13, one
+  * indexed lineitem Frame feeds the fm* and pipe queries). Library
+  * functions keep nothing between calls; only the packs memoize, and
+  * only here.
+  *
+  * An entry is keyed by a name plus the scale dir and holds the session
+  * it was built under and its own free action. An entry built under
+  * another session is rebuilt, not served: its plan may be bound to a
+  * STOPPED SparkContext, where every action throws "SparkContext has
+  * been shut down". [[release]] (via `SparkEntry.releaseCaches()`, at
+  * the end of every Verify/Bench pass) frees every entry and clears the
+  * table. Builds nest (d6's cluster build reads the pairs entry), so
+  * the one lock is the object's reentrant monitor. */
 object DfMemo {
 
-  /** Generic form: `sessionOf` extracts the session the cached value
-    * is bound to (a Frame's df, a tuple's DataFrame member, …). */
-  def getOrBuildVia[K, V](cache: scala.collection.mutable.Map[K, V],
-                          key: K, session: SparkSession)
-                         (sessionOf: V => SparkSession)
-                         (build: => V): V =
-    cache.synchronized {
-      cache.get(key) match {
-        case Some(v) if sessionOf(v) eq session => v
-        case stale =>
-          stale.foreach(_ => cache.remove(key))
-          val v = build
-          cache.update(key, v)
-          v
-      }
-    }
+  private final case class Entry(session: SparkSession, value: Any, free: () => Unit)
 
-  def getOrBuild[K](cache: scala.collection.mutable.Map[K, DataFrame],
-                    key: K, session: SparkSession)
-                   (build: => DataFrame): DataFrame =
-    getOrBuildVia(cache, key, session)(_.sparkSession)(build)
+  private val table = scala.collection.mutable.LinkedHashMap[(String, String), Entry]()
+
+  /** The `name` entry for scale dir `d` under session `s`, built (and
+    * registered with `free`) when absent or built under another
+    * session; a replaced entry is freed first unless its context is
+    * stopped (its blocks died with it). */
+  def apply[V](name: String, d: String, s: SparkSession)(free: V => Unit)
+              (build: => V): V = synchronized {
+    table.get((name, d)) match {
+      case Some(e) if e.session eq s => e.value.asInstanceOf[V]
+      case stale =>
+        stale.foreach { e => table.remove((name, d)); freeLive(e) }
+        val v = build
+        table((name, d)) = Entry(s, v, () => free(v))
+        v
+    }
+  }
+
+  /** A persisted DataFrame entry, freed with `unpersist`. */
+  def persisted(name: String, d: String, s: SparkSession)(build: => DataFrame): DataFrame =
+    apply[DataFrame](name, d, s)(_.unpersist(blocking = false))(build)
+
+  /** A plain value entry (merge lists, vocabularies): no Spark data, nothing to free. */
+  def plain[V](name: String, d: String, s: SparkSession)(build: => V): V =
+    apply[V](name, d, s)(_ => ())(build)
+
+  /** Free every entry and clear the table. */
+  def release(): Unit = synchronized {
+    table.values.foreach(freeLive)
+    table.clear()
+  }
+
+  private def freeLive(e: Entry): Unit =
+    if (!e.session.sparkContext.isStopped) e.free()
 }

@@ -61,18 +61,19 @@ object SparkEntry {
 
   /** Cross-query memoized-intermediate dependencies, for Bench's
     * measurement consistency: query → earlier-SORTED queries whose run
-    * leaves a shared memoized intermediate warm (the query packs
-    * memoize per scale dir: d2's LSH pair set feeds d6's clustering,
-    * x18's winnowing fingerprints feed x18b, u11's linear fit feeds
-    * u12/u13/u1, and the Frame/Pipe packs share one indexed lineitem
-    * Frame each). In a full-suite pass the prereq always runs first
-    * (every pair here sorts prereq < query), so per-query timings
-    * measure the query with its inputs warm; a run that EXCLUDES the
-    * prereq (SPARK_GRAFT_ONLY subset, or a solo top-up rep after a
-    * cache release) would silently charge the query for its prereq's
-    * materialization — r10 measured d6 at 4.6 s solo vs 2.2 s in-pass
-    * from exactly this. Bench warms missing prereqs uncounted so every
-    * sample of a query measures the same thing. */
+    * leaves a shared [[DfMemo]] entry warm (d2's LSH pair set feeds
+    * d6's clustering, x18's winnowing fingerprints feed x18b, u11's
+    * linear fit feeds u12/u13/u1, and the Frame/Pipe packs share one
+    * indexed lineitem Frame each). Library functions memoize nothing,
+    * so only pack entries appear here. In a full-suite pass the
+    * prereq always runs first (every pair here sorts prereq < query),
+    * so per-query timings measure the query with its inputs warm; a
+    * run that EXCLUDES the prereq (SPARK_GRAFT_ONLY subset, or a solo
+    * top-up rep after a cache release) would silently charge the
+    * query for its prereq's materialization — r10 measured d6 at
+    * 4.6 s solo vs 2.2 s in-pass from exactly this. Bench warms
+    * missing prereqs uncounted so every sample of a query measures
+    * the same thing. */
   def benchPrereqs: Map[String, Seq[String]] = {
     val fm = Seq("fm1_row_select", "fm2_mask", "fm3_cols", "fm4_update",
       "fm6_delete", "fm7_append", "fm8_merge", "fm9_map")
@@ -88,8 +89,6 @@ object SparkEntry {
       // packs' own memoization makes one level of warming transitive)
       "x26_cluster_split" -> Seq("d6_dedup_pipeline"),
       "x28_curation_pipeline" -> Seq("d6_dedup_pipeline"),
-      // x23 and x27's lexical side share one memoized postings build
-      "x27_hybrid_rrf" -> Seq("x23_bm25"),
       "x18b_winnowing_pairs" -> Seq("x18_winnowing"))
   }
 
@@ -97,14 +96,7 @@ object SparkEntry {
     * (call at the end of a Verify/Bench run — long-lived sessions would
     * otherwise accumulate cached blocks across scale dirs). */
   def releaseCaches(): Unit = {
-    qp.TextQueries.releaseCaches()
-    qp.FrameQueries.releaseCaches()
-    qp.PipeQueries.releaseCaches()
-    qp.DedupQueries.releaseCaches()
-    qp.ModelQueries.releaseCaches()
-    qp.TextAnalysisQueries.releaseCaches()
-    graft.functions.SearchFunctions.releaseCaches()
-    graft.functions.CurationFunctions.releaseCaches()
+    DfMemo.release()
     // KB-readback memo (store meta/centroids): cleared so every bench
     // pass pays its own readbacks, like the memoized intermediates
     graft.functions.PartitionedStore.clearReadbackMemo()

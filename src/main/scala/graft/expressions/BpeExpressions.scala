@@ -26,7 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * memo: corpus word frequencies are Zipfian, so the per-instance
   * cache (bounded, cleared at capacity) turns the per-occurrence cost
   * into a per-distinct-word cost — the same reason the trainer runs
-  * on the word-frequency table instead of the corpus.
+  * on the word-frequency table instead of the corpus. Measured with
+  * the memo on and off over the sf0.1 documents ×10 (50,000 texts,
+  * cached, `local[4]` on a 4-core VM, median of 5 runs in each of 2
+  * JVMs): bpe 0.35 → 1.9 s, unigram 0.31 → 1.0 s, wordpiece 0.27 →
+  * 0.75 s without it.
   */
 object BpeExpressions {
 

@@ -207,7 +207,7 @@ object ShingleExpressions {
     * DISTINCT single-space-separated token, counts as longs — row-
     * identical (up to order) to
     * `explode(split(text, " ")) |> filter(w <> '') |> groupBy count`,
-    * the termFreqShared reference form. Exploding this array gives the
+    * the SearchFunctions.termFreq reference form. Exploding this array gives the
     * (id, w, tf) relation with NO aggregation at all (optimization
     * r18): the reference form pushed one row per TOKEN OCCURRENCE
     * (~3M at sf0.1) through explode + hash-agg per consumer build —

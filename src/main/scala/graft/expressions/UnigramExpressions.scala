@@ -111,7 +111,8 @@ object UnigramExpressions {
     * words' piece sequences (empty words contribute nothing).
     * Per-instance bounded word memo, the [[BpeExpressions.BpeEncode]]
     * discipline: Zipfian corpora make segmentation per-distinct-word
-    * work, not per-occurrence work. */
+    * work, not per-occurrence work (0.31 s with it, 1.0 s without —
+    * the BpeExpressions measurement). */
   case class UnigramEncode(child: Expression, pieces: Seq[(String, Long)])
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(StringType, containsNull = false)

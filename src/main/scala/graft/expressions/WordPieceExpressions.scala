@@ -28,7 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * split and the SQL oracle's character semantics, not UTF-16
   * units). Per-partition bounded word memo, the [[BpeExpressions]]
   * discipline: Zipfian corpora turn per-occurrence cost into
-  * per-distinct-word cost.
+  * per-distinct-word cost (0.27 s with it, 0.75 s without — the
+  * BpeExpressions measurement).
   */
 object WordPieceExpressions {
 

@@ -12,19 +12,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object CurationFunctions {
 
-  /** Persisted gram-stream relations handed out by [[dsirWeights]]
-    * plans, memoized per analyzed-plan semantic hash (bench reps and
-    * pipeline stages over the same corpus + parameters reuse one
-    * materialization). Released by `SparkEntry.releaseCaches()` — the
-    * returned plans are lazy, so the function has no safe unpersist
-    * point of its own. */
-  private val gramsCache = scala.collection.mutable.Map[Int, DataFrame]()
-
-  def releaseCaches(): Unit = gramsCache.synchronized {
-    gramsCache.values.foreach(_.unpersist(blocking = false))
-    gramsCache.clear()
-  }
-
   private def ntok(textCol: String): Column = size(split(col(textCol), " "))
 
   /** Temperature-based source mixing (the UnifiedQA / Pile / Gopher
@@ -251,8 +238,8 @@ object CurationFunctions {
     // occurrence (counts, not distinct — the multinomial model).
     // The stream is referenced twice (the bucket-count aggregation and
     // the scoring join), and it is the expensive subtree — posexplode +
-    // per-doc lead window + explode + md5 over every token. Persisted
-    // (memoized per plan, released by SparkEntry.releaseCaches), the
+    // per-doc lead window + explode + md5 over every token. Cut
+    // ([[Lineage.cut]], freed once nothing references the result), the
     // corpus pays that chain once instead of twice — the same
     // double-evaluation trim as bm25TopK's postings (ADVICE r9 #4).
     // gram stream per ROW (optimization r18): unigrams are the token
@@ -267,21 +254,15 @@ object CurationFunctions {
       slice(tk, lit(1), size(tk) - 1), slice(tk, lit(2), size(tk) - 1),
       (a, b) => concat_ws(" ", a, b))
     // NO scan-parallelism valve here (optimization r19): like
-    // winnowFps, the gram stream is PERSISTED and shared — pinning 32
-    // partitions into the cache taxes both downstream aggregations
+    // winnowFps, the gram stream is materialized and shared — pinning
+    // 32 partitions into the cut taxes both downstream aggregations
     // with tiny-task overhead at fixture scale (the x18b lesson,
     // OPTIMIZATION_r19.md), and the A/B showed no wall win for x29.
-    val gramsPlan = docs.select(col(idCol).as("__id"), targetCond.as("__t"),
-          toks.as("__tk"))
+    val grams = Lineage.cut(docs.select(col(idCol).as("__id"),
+          targetCond.as("__t"), toks.as("__tk"))
       .select(col("__id"), col("__t"),
         explode(concat(tk, bigrams)).as("__g"))
-      .withColumn("__b", featureBucket(col("__g"), buckets))
-    val grams = gramsCache.synchronized {
-      graft.DfMemo.getOrBuild(gramsCache,
-        gramsPlan.queryExecution.analyzed.semanticHash(),
-        gramsPlan.sparkSession)(
-        gramsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+      .withColumn("__b", featureBucket(col("__g"), buckets)))
     val cnt = grams.groupBy("__b").agg(
       count(lit(1)).as("__cr"),
       sum(when(col("__t"), 1L).otherwise(0L)).as("__ct"))

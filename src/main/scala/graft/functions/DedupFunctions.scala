@@ -56,7 +56,8 @@ object DedupFunctions {
     * canonical plan of the shingle projection, so repeated calls over
     * the same corpus (bench reps, pipeline stages sharing one input)
     * pay the estimating aggregation job ONCE per session instead of
-    * once per call. Planning-only state: a stale entry (same plan,
+    * once per call (that job cost 0.2–0.35 s per call, SCALE.md round
+    * 10 item 2). Planning-only state: a stale entry (same plan,
     * mutated files underneath — the standard Spark cache caveat) can
     * only mis-pick a join strategy, never change results. */
   private val verifyStatCache =

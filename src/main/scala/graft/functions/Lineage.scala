@@ -13,7 +13,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the run; without one it is a `localCheckpoint()`, whose blocks live
   * on the executors (right for single-JVM runs). A cut also keeps every
   * later plan over it short: its plan is one [[LogicalRDD]] leaf, and
-  * AQE renders the whole plan string again on every stage update. */
+  * AQE renders the whole plan string again on every stage update. A
+  * cut nobody references is freed at the next GC (Spark's
+  * ContextCleaner), and `Dataset.unpersist` does not free a cut:
+  * [[release]] does. */
 object Lineage {
 
   /** Materialize `df` eagerly and cut its lineage. */

@@ -11,62 +11,27 @@ import org.apache.spark.sql.functions._
   */
 object SearchFunctions {
 
-  /** Persisted postings relations handed out by [[bm25TopK]] plans,
-    * MEMOIZED by (corpus plan, query vocabulary): callers scoring the
-    * same corpus with the same term set (x23's top-10 and x27's
-    * fuse-50 lexical side share one workload) reuse one postings
-    * build instead of each paying the corpus pass. Released by
-    * `SparkEntry.releaseCaches()` at the end of a Verify/Bench run
-    * (the plans are lazy, so the function itself has no safe
-    * unpersist point). */
-  private val postingsCache =
-    scala.collection.mutable.Map[(Int, Set[String]), DataFrame]()
-
   /** The ONE tokenize pass the whole lexical family shares: per-(doc,
-    * term) frequencies, memoized by (corpus plan, id col, text col)
-    * and persisted. bm25TopK (x23, x27's lexical side) derives dl /
-    * postings / df from it and TfIdf derives its tf — so a pass that
-    * runs several text queries tokenizes the corpus ONCE, and a cold
-    * bm25 pays one corpus scan instead of two (dl and postings each
-    * re-derived it before). The relation is (doc, distinct-term)-
-    * sized — the inverted-index payload itself, the thing a 100-TB
-    * search tier materializes by design; MEMORY_AND_DISK spills it
-    * rather than re-scanning the raw corpus. Released by
-    * `SparkEntry.releaseCaches()`. */
-  private val tfCache =
-    scala.collection.mutable.Map[(Int, String, String), DataFrame]()
-
-  def termFreqShared(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    tfCache.synchronized {
-      graft.DfMemo.getOrBuild(tfCache,
-        (docs.queryExecution.analyzed.semanticHash(), idCol, textCol),
-        docs.sparkSession)(
-        // the id keeps its ORIGINAL type: a cast here would NULL
-        // non-numeric ids for every consumer (the ahashNearDuplicates
-        // bug class); bm25 applies its own long cast downstream.
-        // token_counts kernel (optimization r18): per-doc counting is
-        // local, so the old explode(split) + groupBy pushed one row
-        // per token OCCURRENCE (~3M at sf0.1, 3–6 s cpu per build)
-        // through hash-agg for a relation this map pass emits
-        // directly (row-identical; SearchSpec pins kernel ≡ reference)
-        docs.select(col(idCol).as("__id"),
-            explode(graft.expressions.ShingleExpressions
-              .token_counts(col(textCol))).as("__kv"))
-          .select(col("__id"), col("__kv.w").as("__w"),
-            col("__kv.tf").as("__tf"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
-
-  def releaseCaches(): Unit = {
-    postingsCache.synchronized {
-      postingsCache.values.foreach(_.unpersist(blocking = false))
-      postingsCache.clear()
-    }
-    tfCache.synchronized {
-      tfCache.values.foreach(_.unpersist(blocking = false))
-      tfCache.clear()
-    }
-  }
+    * term) frequencies. bm25TopK (x23, the hybrids' lexical side)
+    * derives dl / postings / df from it and TfIdf derives its tf. The
+    * relation is (doc, distinct-term)-sized — the inverted-index
+    * payload itself. Lazy: a caller that reads it more than once cuts
+    * it ([[Lineage.cut]]), so one call tokenizes the corpus once and
+    * keeps nothing afterwards. */
+  def termFreq(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    // the id keeps its ORIGINAL type: a cast here would NULL
+    // non-numeric ids for every consumer (the ahashNearDuplicates
+    // bug class); bm25 applies its own long cast downstream.
+    // token_counts kernel (optimization r18): per-doc counting is
+    // local, so the old explode(split) + groupBy pushed one row
+    // per token OCCURRENCE (~3M at sf0.1, 3–6 s cpu per build)
+    // through hash-agg for a relation this map pass emits
+    // directly (row-identical; SearchSpec pins kernel ≡ reference)
+    docs.select(col(idCol).as("__id"),
+        explode(graft.expressions.ShingleExpressions
+          .token_counts(col(textCol))).as("__kv"))
+      .select(col("__id"), col("__kv.w").as("__w"),
+        col("__kv.tf").as("__tf"))
 
   /** Okapi BM25 top-k retrieval (Robertson et al., "Okapi at TREC-3",
     * 1994), idf in the non-negative ln(1 + (N−df+0.5)/(df+0.5)) form
@@ -132,7 +97,9 @@ object SearchFunctions {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val tf = termFreqShared(docs, idCol, textCol)
+    // cut: tf is read twice (dl and the postings), and the corpus is
+    // tokenized once, inside the cut
+    val tf = Lineage.cut(termFreq(docs, idCol, textCol))
       .withColumn("__id", col("__id").cast("long"))
     val dl = tf.groupBy("__id").agg(sum("__tf").as("__dl"))
     val stats = dl.agg(count(lit(1)).cast("double").as("__n"),
@@ -141,22 +108,14 @@ object SearchFunctions {
     val qt = queries.toDF("qid", "__qtext")
       .select(col("qid"), explode(split(col("__qtext"), " ")).as("__w"))
       .filter(col("__w") =!= "").distinct()
-    // The postings subtree (corpus scan → tf agg → query-term semi) is
+    // The postings (tf semi-filtered to the query terms) are
     // referenced three times downstream (df(t), the dl semi-join, the
-    // scoring join); persisted, it computes once — postings are
-    // index-read-sized (Σ_t df(t) over the query terms), so the cache
-    // is small at any corpus size. The whole plan then pays exactly
-    // TWO corpus passes: one for `dl`, one to build the postings
-    // (r9's uncached form paid four — ADVICE r9). Released by
-    // SparkEntry.releaseCaches via [[releaseCaches]].
-    val vocab = queries.flatMap(_._2.split(" ")).filter(_.nonEmpty).toSet
-    val postings = postingsCache.synchronized {
-      graft.DfMemo.getOrBuild(postingsCache,
-        (docs.queryExecution.analyzed.semanticHash(), vocab),
-        docs.sparkSession)(
-        tf.join(broadcast(qt.select("__w").distinct()), "__w")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    // scoring join); cut, they compute once — postings are
+    // index-read-sized (Σ_t df(t) over the query terms), so the cut is
+    // small at any corpus size. With tf cut too, the call pays ONE
+    // corpus pass (r9's uncached form paid four — ADVICE r9), and both
+    // cuts are freed once nothing references the returned frame.
+    val postings = Lineage.cut(tf.join(broadcast(qt.select("__w").distinct()), "__w"))
     val dfq = postings.groupBy("__w")
       .agg(count(lit(1)).cast("double").as("__df"))
     // dl is corpus-sized (one row per doc); the scoring join only needs

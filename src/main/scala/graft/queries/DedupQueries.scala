@@ -21,11 +21,9 @@ object DedupQueries {
 
   /** MinHash-LSH verified pairs, memoized per scale dir (shared by d2
     * and the d6 clustering pipeline; minhashNearDuplicates returns the
-    * pairs already materialized+persisted, pair-sized). Released by
-    * `releaseCaches()` at the end of a Verify/Bench run. */
-  private val pairCache = scala.collection.mutable.Map[String, DataFrame]()
-  private def lshPairs(s: SparkSession, d: String): DataFrame = pairCache.synchronized {
-    graft.DfMemo.getOrBuild(pairCache, d, s)(
+    * pairs already materialized+persisted, pair-sized). */
+  private def lshPairs(s: SparkSession, d: String): DataFrame =
+    graft.DfMemo.persisted("lsh_pairs", d, s)(
       // word-count guard mirrors the oracle (same as containPairs):
       // wordShingles falls back to the whole text on < 3 words, where
       // the oracle's shingle CTE yields an empty set — latent on the
@@ -34,25 +32,20 @@ object DedupQueries {
         documents(s, d).filter(size(split(col("text"), " ")) >= 3),
         "doc_id", "text",
         shingleN = 3, numHashes = 64, bands = 16, threshold = 0.8))
-  }
 
   /** Transitive clusters over the LSH pairs, memoized per scale dir —
     * nearDupClusters returns a persisted node-sized DataFrame ("caller
-    * releases"); memoizing it next to pairCache both avoids re-running
-    * label propagation on repeated d6 invocations and lets
-    * `releaseCaches()` honour the release contract. */
-  private val clusterCache = scala.collection.mutable.Map[String, DataFrame]()
-  private def lshClusters(s: SparkSession, d: String): DataFrame = clusterCache.synchronized {
-    graft.DfMemo.getOrBuild(clusterCache, d, s)(
+    * releases"); the memo both avoids re-running label propagation on
+    * repeated d6 invocations and frees it at release. */
+  private def lshClusters(s: SparkSession, d: String): DataFrame =
+    graft.DfMemo.persisted("lsh_clusters", d, s)(
       nearDupClusters(lshPairs(s, d).select("a", "b")))
-  }
 
   /** Prefix-filtered containment pairs, memoized per scale dir
     * (containmentPairs returns a persisted pair-sized DataFrame,
     * "caller releases"). */
-  private val containCache = scala.collection.mutable.Map[String, DataFrame]()
-  private def containPairs(s: SparkSession, d: String): DataFrame = containCache.synchronized {
-    graft.DfMemo.getOrBuild(containCache, d, s)(
+  private def containPairs(s: SparkSession, d: String): DataFrame =
+    graft.DfMemo.persisted("contain_pairs", d, s)(
       // word-count guard mirrors the oracle: wordShingles falls back to
       // the whole text on < 3 words, where the oracle's generate_series
       // yields an empty set (and a zero containment denominator)
@@ -65,62 +58,40 @@ object DedupQueries {
       containmentPairs(
         documents(s, d).filter(size(split(col("text"), " ")) >= 3),
         "doc_id", "text", shingleN = 3, threshold = 0.7, sketchBits = 512))
-  }
 
   /** Prefix-filtered (PPJoin) char-5-gram Jaccard pairs, memoized per
     * scale dir (jaccardPairs returns a persisted pair-sized DataFrame,
     * "caller releases"). */
-  private val jacCache = scala.collection.mutable.Map[String, DataFrame]()
-  private def jacPairs(s: SparkSession, d: String): DataFrame = jacCache.synchronized {
-    graft.DfMemo.getOrBuild(jacCache, d, s)(
+  private def jacPairs(s: SparkSession, d: String): DataFrame =
+    graft.DfMemo.persisted("jaccard_pairs", d, s)(
       // length >= 5 keeps Spark and oracle shingle sets aligned (the
       // charShingles short-text fallback vs the oracle's empty list)
       jaccardPairs(documents(s, d).filter(length(col("text")) >= 5),
         "doc_id", "text", charShingles(_, 5), threshold = 0.4))
-  }
 
-  /** d16's persisted probe results and on-disk index dirs, one pair
-    * per invocation. A FRESH dir per call is load-bearing, not
-    * hygiene: reusing one dir across bench passes made pass 2's probe
-    * plan structurally identical to pass 1's leaked persisted
-    * `verified`, so the CacheManager substituted the old cached
-    * relation — whose bound file listing named files pass 2's
-    * overwrite had deleted (FILE_NOT_EXIST on any evicted block).
-    * Distinct paths make the plans distinct; releaseCaches unpersists
-    * the probe results and deletes the spent dirs. */
-  private val bandIdxLive =
-    scala.collection.mutable.ArrayBuffer[(DataFrame, String)]()
+  /** A FRESH band-index dir per call is load-bearing, not hygiene:
+    * reusing one dir across bench passes made pass 2's probe plan
+    * structurally identical to pass 1's leaked persisted `verified`,
+    * so the CacheManager substituted the old cached relation — whose
+    * bound file listing named files pass 2's overwrite had deleted
+    * (FILE_NOT_EXIST on any evicted block). Distinct paths make the
+    * plans distinct. */
   private val bandIdxSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   private def bandIdxDir(d: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_band_idx_" +
       d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + bandIdxSeq.incrementAndGet()
 
-  /** Unpersist and drop every memoized intermediate this object holds. */
-  def releaseCaches(): Unit = {
-    bandIdxLive.synchronized {
-      bandIdxLive.foreach { case (df, dir) =>
-        df.unpersist(blocking = false)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      }
-      bandIdxLive.clear()
-    }
-    jacCache.synchronized {
-      jacCache.values.foreach(_.unpersist(blocking = false))
-      jacCache.clear()
-    }
-    containCache.synchronized {
-      containCache.values.foreach(_.unpersist(blocking = false))
-      containCache.clear()
-    }
-    clusterCache.synchronized {
-      clusterCache.values.foreach(_.unpersist(blocking = false))
-      clusterCache.clear()
-    }
-    pairCache.synchronized {
-      pairCache.values.foreach(_.unpersist(blocking = false))
-      pairCache.clear()
-    }
-  }
+  /** Probe the band index at `dir` (threshold 0.8) and hold the result
+    * in the memo table until release, which frees it and deletes the
+    * spent dir. The probe ends in a lineage cut, so the free is
+    * [[graft.functions.Lineage.release]]: `Dataset.unpersist` leaves a
+    * cut's RDD registered. */
+  private def heldProbe(s: SparkSession, d: String, dir: String,
+                        batch: DataFrame): DataFrame =
+    graft.DfMemo(s"band_probe_${bandIdxSeq.incrementAndGet()}", d, s) { (p: DataFrame) =>
+      graft.functions.Lineage.release(p)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }(graft.functions.BandIndex.probe(s, dir, batch, "doc_id", "text", threshold = 0.8))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup: hash-groupBy on normalized content. The corpus has no
@@ -424,7 +395,7 @@ object DedupQueries {
       import graft.functions.BandIndex
       val pt = graft.PhaseTimer.start("d16_band_index_persisted")
       val docs = documents(s, d).select("doc_id", "text")
-      val dir = bandIdxDir(d) // fresh per call — see bandIdxLive
+      val dir = bandIdxDir(d) // fresh per call — see bandIdxSeq
       // test-scale bucket counts (16 band buckets, 8 id buckets): the
       // per-partition maintenance cost is ∝ buckets, and the defaults
       // (256/64) are sized for corpora that dwarf these fixtures
@@ -450,10 +421,7 @@ object DedupQueries {
       // probe() is eager (it ends in a localCheckpoint), so this phase
       // carries the probe's execution; the bundle's residual "exec"
       // phase in Bench is the final count over the checkpointed rows
-      val probed = pt("probe") {
-        BandIndex.probe(s, dir, batch2, "doc_id", "text", threshold = 0.8) }
-      bandIdxLive.synchronized { bandIdxLive += ((probed, dir)) }
-      probed.orderBy("a", "b")
+      pt("probe") { heldProbe(s, d, dir, batch2) }.orderBy("a", "b")
     }),
 
     // Tombstone delete lifecycle over the persisted band index (the
@@ -484,10 +452,7 @@ object DedupQueries {
         .select((col("doc_id") + 70000L).as("doc_id"), col("text"))
       def probeArm(arm: String): Seq[(String, Long, Long, Double)] =
         pt("probe") {
-          val probed = BandIndex.probe(s, dir, batch, "doc_id", "text",
-            threshold = 0.8)
-          bandIdxLive.synchronized { bandIdxLive += ((probed, dir)) }
-          probed.collect().map(r =>
+          heldProbe(s, d, dir, batch).collect().map(r =>
             (arm, r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
         }
       pt("delete") {
@@ -535,7 +500,7 @@ object DedupQueries {
       val flood = bg.filter(col("doc_id") === 7).select("text")
         .crossJoin(s.range(0, 400).select((col("id") + 80000L).as("doc_id")))
         .select("doc_id", "text")
-      val dir = bandIdxDir(d) // fresh per call — see bandIdxLive
+      val dir = bandIdxDir(d) // fresh per call — see bandIdxSeq
       // prefixLen=2 (256 buckets): the flood's 16 band values touch
       // <= 16 of them, so the median bucket stays background-sized
       pt("save") { BandIndex.save(bg.unionByName(flood), "doc_id", "text",
@@ -575,10 +540,7 @@ object DedupQueries {
         .select((col("doc_id") + 90000L).as("doc_id"), col("text"))
         .unionByName(flood.filter(col("doc_id") < 80003L)
           .select((col("doc_id") + 20000L).as("doc_id"), col("text")))
-      val probed = pt("probe") {
-        BandIndex.probe(s, dir, batch, "doc_id", "text", threshold = 0.8) }
-      bandIdxLive.synchronized { bandIdxLive += ((probed, dir)) }
-      probed.orderBy("a", "b")
+      pt("probe") { heldProbe(s, d, dir, batch) }.orderBy("a", "b")
     }),
 
     // Exact substring dedup (Lee et al. 2022's suffix-array primitive,
@@ -696,7 +658,7 @@ object DedupQueries {
       import s.implicits._
       val pt = graft.PhaseTimer.start("st9_band_ingest")
       val docs = documents(s, d).select("doc_id", "text")
-      val dir = bandIdxDir(d) // fresh per call — see bandIdxLive
+      val dir = bandIdxDir(d) // fresh per call — see bandIdxSeq
       pt("save") { BandIndex.save(docs, "doc_id", "text",
         shingleN = 3, numHashes = 64, bands = 16, dir = dir,
         prefixLen = 1, idBuckets = 8) }
@@ -737,10 +699,7 @@ object DedupQueries {
       }
       val probe = docs.filter(col("doc_id") < 30)
         .select((col("doc_id") + 70000L).as("doc_id"), col("text"))
-      val probed = pt("probe") {
-        BandIndex.probe(s, dir, probe, "doc_id", "text", threshold = 0.8) }
-      bandIdxLive.synchronized { bandIdxLive += ((probed, dir)) }
-      probed.orderBy("a", "b")
+      pt("probe") { heldProbe(s, d, dir, probe) }.orderBy("a", "b")
     })
   )
 

@@ -18,20 +18,12 @@ object FrameQueries {
 
   /** lineitem as a Frame, memoized+persisted per scale dir: the many
     * fm* queries share one _idx materialization within a session.
-    * Bounded by the number of scale dirs touched; released by
-    * `releaseCaches()` at the end of a Verify/Bench run. */
-  private val cache = scala.collection.mutable.Map[String, Frame]()
-  private def liFrame(s: SparkSession, d: String): Frame = cache.synchronized {
-    graft.DfMemo.getOrBuildVia(cache, d, s)(_.df.sparkSession)(Frame.fromDF(
-      lineitem(s, d).select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"),
-      Seq("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")).cache())
-  }
-
-  /** Unpersist and drop every memoized Frame this object holds. */
-  def releaseCaches(): Unit = cache.synchronized {
-    cache.values.foreach(_.df.unpersist(blocking = false))
-    cache.clear()
-  }
+    * Bounded by the number of scale dirs touched. */
+  private def liFrame(s: SparkSession, d: String): Frame =
+    graft.DfMemo("fm_lineitem", d, s)((f: Frame) => f.df.unpersist(blocking = false))(
+      Frame.fromDF(
+        lineitem(s, d).select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"),
+        Seq("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")).cache())
 
   private val oraclePrefix =
     """WITH f AS (

@@ -87,16 +87,16 @@ object ModelQueries {
     * the synthetic data: slices order by the full projection and the
     * attribution joins key on _idx. Memoized per scale dir — u1/u11/
     * u12/u13 would otherwise each re-run the fit aggregation and the
-    * _idx materialization; released by `releaseCaches()`. */
-  private val fitCache = scala.collection.mutable.Map[
-    String, (LinearModel, Double, Long, org.apache.spark.sql.DataFrame)]()
+    * _idx materialization. */
   private[queries] def fittedSlice(s: SparkSession, d: String)
   : (LinearModel, Double, org.apache.spark.sql.DataFrame) = {
     val (m, mu, _, slice) = fittedAll(s, d); (m, mu, slice)
   }
   private[queries] def fittedAll(s: SparkSession, d: String)
-  : (LinearModel, Double, Long, org.apache.spark.sql.DataFrame) = fitCache.synchronized {
-    graft.DfMemo.getOrBuildVia(fitCache, d, s)(_._4.sparkSession) {
+  : (LinearModel, Double, Long, org.apache.spark.sql.DataFrame) =
+    graft.DfMemo("linear_fit", d, s)(
+      (v: (LinearModel, Double, Long, org.apache.spark.sql.DataFrame)) =>
+        v._4.unpersist(blocking = false)) {
       val li = lineitem(s, d)
       val (slope, intercept) = LinearModel.fitSimple(li, "l_quantity", "l_extendedprice")
       val agg = li.agg(
@@ -113,13 +113,6 @@ object ModelQueries {
         .df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (model, mu, n, slice)
     }
-  }
-
-  /** Unpersist and drop the memoized fit scaffolding. */
-  def releaseCaches(): Unit = fitCache.synchronized {
-    fitCache.values.foreach(_._4.unpersist(blocking = false))
-    fitCache.clear()
-  }
 
   def oracles: Map[String, String] = Map(
     "u1_linear_fit" -> (statsSql +

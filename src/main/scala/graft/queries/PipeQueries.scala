@@ -12,12 +12,13 @@ import graft.prep.{Normalizer, Preprocessing}
   */
 object PipeQueries {
 
-  private val cache = scala.collection.mutable.Map[String, Frame]()
-  private def liFrame(s: SparkSession, d: String): Frame = cache.synchronized {
-    graft.DfMemo.getOrBuildVia(cache, d, s)(_.df.sparkSession)(Frame.fromDF(
-      lineitem(s, d).select("l_orderkey", "l_linenumber", "l_quantity"),
-      Seq("l_orderkey", "l_linenumber", "l_quantity")).cache())
-  }
+  /** lineitem as a Frame, memoized+persisted per scale dir (the
+    * FrameQueries discipline, over three columns). */
+  private def liFrame(s: SparkSession, d: String): Frame =
+    graft.DfMemo("pipe_lineitem", d, s)((f: Frame) => f.df.unpersist(blocking = false))(
+      Frame.fromDF(
+        lineitem(s, d).select("l_orderkey", "l_linenumber", "l_quantity"),
+        Seq("l_orderkey", "l_linenumber", "l_quantity")).cache())
 
   private val oraclePrefix =
     """WITH f AS (
@@ -97,12 +98,6 @@ object PipeQueries {
         .orderBy("o_orderkey")
     })
   )
-
-  /** Unpersist and drop every memoized Frame this object holds. */
-  def releaseCaches(): Unit = cache.synchronized {
-    cache.values.foreach(_.df.unpersist(blocking = false))
-    cache.clear()
-  }
 
   def oracles: Map[String, String] = Map(
     "p2_title_label" -> (oraclePrefix +

@@ -13,22 +13,13 @@ object TextAnalysisQueries {
     * scale dir: x18 (per-doc stats) and x18b (pairwise index) both
     * consume it, so within one Verify/Bench pass the char-explode +
     * window chain — the dominant cost of both queries — runs once
-    * (measured ~1.35× on the pair, BENCH.md round 10). Released by
-    * `releaseCaches()`, so every bench pass still pays its own
+    * (measured ~1.35× on the pair, BENCH.md round 10). Freed at the
+    * end of every pass, so each bench pass still pays its own
     * materialization. */
-  private val fpsCache = scala.collection.mutable.Map[String, DataFrame]()
   private def winnowFpsShared(s: SparkSession, d: String): DataFrame =
-    fpsCache.synchronized {
-      graft.DfMemo.getOrBuild(fpsCache, d, s)(
-        winnowFps(documents(s, d), "doc_id", "text", k = 8, w = 4)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
-
-  /** Unpersist and drop every memoized intermediate this object holds. */
-  def releaseCaches(): Unit = fpsCache.synchronized {
-    fpsCache.values.foreach(_.unpersist(blocking = false))
-    fpsCache.clear()
-  }
+    graft.DfMemo.persisted("winnow_fps", d, s)(
+      winnowFps(documents(s, d), "doc_id", "text", k = 8, w = 4)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Language-ID heuristic: stopword-profile voting per document,

@@ -13,62 +13,43 @@ object TextQueries {
   /** Learned BPE merge list, memoized per scale dir (training is a
     * driver-side loop of vocab-sized jobs; one list serves every
     * consumer in a Verify/Bench pass). Merge lists are tiny driver
-    * values — no Spark blocks to release, so releaseCaches just drops
-    * the map. */
-  private val bpeCache =
-    scala.collection.mutable.Map[String, Seq[(String, String)]]()
+    * values — no Spark blocks to free. */
   // ONE pair of constants shared by the trainer call and the generated
   // DuckDB replay oracles — a default-parameter change in BpeFunctions
   // can then never desynchronize them silently
   private val BpeNumMerges = 40
   private val BpeMinPairFreq = 2L
   private def bpeMergesShared(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeCache.synchronized {
-      bpeCache.getOrElseUpdate(d,
-        graft.functions.BpeFunctions.bpeTrain(
-          documents(s, d), "text",
-          numMerges = BpeNumMerges, minPairFreq = BpeMinPairFreq))
-    }
-
-  def releaseCaches(): Unit = {
-    bpeCache.synchronized { bpeCache.clear() }
-    ugCache.synchronized { ugCache.clear() }
-    wpCache.synchronized { wpCache.clear() }
-  }
+    graft.DfMemo.plain("bpe_merges", d, s)(
+      graft.functions.BpeFunctions.bpeTrain(
+        documents(s, d), "text",
+        numMerges = BpeNumMerges, minPairFreq = BpeMinPairFreq))
 
   /** Learned WordPiece merge list, memoized per scale dir (the
     * [[bpeMergesShared]] discipline) — ONE pair of constants shared
     * by the trainer call and the generated DuckDB replay. */
-  private val wpCache =
-    scala.collection.mutable.Map[String, Seq[(String, String)]]()
   private val WpNumMerges = 30
   private val WpMinPairFreq = 2L
   private def wpMergesShared(s: SparkSession, d: String): Seq[(String, String)] =
-    wpCache.synchronized {
-      wpCache.getOrElseUpdate(d,
-        graft.functions.WordPieceFunctions.wordpieceTrain(
-          documents(s, d), "text",
-          numMerges = WpNumMerges, minPairFreq = WpMinPairFreq))
-    }
+    graft.DfMemo.plain("wordpiece_merges", d, s)(
+      graft.functions.WordPieceFunctions.wordpieceTrain(
+        documents(s, d), "text",
+        numMerges = WpNumMerges, minPairFreq = WpMinPairFreq))
 
   /** Learned unigram vocabulary, memoized per scale dir (same
     * discipline as [[bpeMergesShared]]) — and ONE set of constants
     * shared by the trainer call and the generated DuckDB replay. */
-  private val ugCache =
-    scala.collection.mutable.Map[String, Seq[(String, Long)]]()
   private val UgVocabSize = 40
   private val UgIters = 2
   private val UgSeedMaxLen = 4
   private val UgSeedSize = 120
   private val UgMaxWordLen = 16
   private def unigramVocabShared(s: SparkSession, d: String): Seq[(String, Long)] =
-    ugCache.synchronized {
-      ugCache.getOrElseUpdate(d,
-        graft.functions.UnigramFunctions.unigramTrain(
-          documents(s, d), "text", vocabSize = UgVocabSize, iters = UgIters,
-          seedMaxLen = UgSeedMaxLen, seedSize = UgSeedSize,
-          maxWordLen = UgMaxWordLen))
-    }
+    graft.DfMemo.plain("unigram_vocab", d, s)(
+      graft.functions.UnigramFunctions.unigramTrain(
+        documents(s, d), "text", vocabSize = UgVocabSize, iters = UgIters,
+        seedMaxLen = UgSeedMaxLen, seedSize = UgSeedSize,
+        maxWordLen = UgMaxWordLen))
 
   /** Fixed (piece, count) vocabulary for the t9b kernel-oracle query;
     * scores are derived Scala-side ([[graft.functions.UnigramFunctions

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -459,27 +459,32 @@ object StreamOps {
       }
   }
 
-  /** Streaming vector ingest into a persisted ANN index — the bridge
-    * between the two incremental families (streaming near-dup keeps
-    * state in the query; the ANN index keeps it ON DISK): each
-    * micro-batch is encoded against the SAVED centroids/codebook
-    * ([[graft.functions.AnnIndex.addBatch]] — no rebuild, no re-read
-    * of existing codes) and appended as new cell-partition files, so
-    * probes between batches see exactly the vectors ingested so far.
+  /** Streaming ingest into a persisted store — the bridge between the
+    * incremental families (streaming near-dup keeps state in the query;
+    * the stores keep it ON DISK). [[vectorIngest]] encodes each
+    * micro-batch against the SAVED ANN centroids/codebook
+    * ([[graft.functions.AnnIndex.addBatchTagged]] — no rebuild, no
+    * re-read of existing codes) and appends new cell-partition files;
+    * [[bandIngest]] shingles/bands it against the SAVED banding
+    * parameters ([[graft.functions.BandIndex.addBatchTagged]] — no
+    * re-band of history) and appends to both stores (postings +
+    * shingles). Probes between batches see exactly the rows ingested so
+    * far.
     *
-    * foreachBatch is the right sink shape: the encode+append is a bulk
+    * foreachBatch is the right sink shape: the append is a bulk
     * columnar write, not a row sink. Structured Streaming re-runs a
     * failed batch with the SAME batchId and data; the sink keeps a
     * marker file per committed batchId under
     * `dir/ingest_log/<streamId>/` to skip clean replays, and the
-    * append itself goes through
-    * [[graft.functions.AnnIndex.addBatchTagged]] with
+    * append itself is the store's tagged ingest with
     * `<streamId>-b<batchId>` as the tag — a replay of a batch that
-    * crashed AFTER its append committed but BEFORE its marker landed
-    * first scrubs that tag's files, so any number of retries converges
-    * to exactly one copy (true exactly-once, not marker-window
-    * at-least-once), as long as `dir` has a single writer (the
-    * addBatch contract).
+    * crashed anywhere before its marker landed (after the append
+    * committed, or for the band store BETWEEN the shingle and band
+    * appends, the window a plain addBatch cannot heal) first scrubs
+    * that tag's files from every subtree, so any number of retries
+    * converges to exactly one copy (true exactly-once, not
+    * marker-window at-least-once), as long as `dir` has a single writer
+    * (the addBatch contract).
     *
     * `streamId` is the logical stream's identity and what makes the
     * idempotence safe across STREAMS, not just across retries: batchIds
@@ -497,42 +502,26 @@ object StreamOps {
     * safety. */
   def vectorIngest(stream: DataFrame, dir: String,
                    idCol: String, vecCol: String, streamId: String)
-  : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_-]+"),
-      s"streamId must be a safe file/tag prefix: $streamId")
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$dir/ingest_log/$streamId/batch-$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          if (!batch.isEmpty)
-            graft.functions.AnnIndex.addBatchTagged(spark, dir, batch.toDF(),
-              idCol, vecCol, tag = s"$streamId-b$batchId")
-          fs.mkdirs(marker.getParent)
-          fs.create(marker, true).close()
-        }
-      }
-  }
+  : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    taggedIngest(stream, dir, streamId) { (spark, batch, tag) =>
+      graft.functions.AnnIndex.addBatchTagged(spark, dir, batch, idCol, vecCol, tag)
+    }
 
-  /** Streaming document ingest into a persisted LSH band index — the
-    * [[vectorIngest]] twin for the dedup family: each micro-batch is
-    * shingled/banded against the SAVED banding parameters
-    * ([[graft.functions.BandIndex.addBatchTagged]] — no re-band of
-    * history) and appended to both stores (postings + shingles), so
-    * [[graft.functions.BandIndex.probe]] between batches sees exactly
-    * the documents ingested so far. Exactly-once discipline is
-    * identical to vectorIngest's (same marker layout under
-    * `dir/ingest_log/<streamId>/`, same `<streamId>-b<batchId>` tag,
-    * same single-writer contract and streamId rules — see that
-    * scaladoc): a replay of a batch that crashed anywhere — including
-    * BETWEEN the shingle and band appends, the window a plain
-    * addBatch cannot heal — first scrubs the tag's files from BOTH
-    * stores and converges to exactly one copy. */
+  /** [[vectorIngest]]'s twin for the persisted LSH band index (same
+    * marker layout, tag, single-writer contract and streamId rules). */
   def bandIngest(stream: DataFrame, dir: String,
                  idCol: String, textCol: String, streamId: String)
+  : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    taggedIngest(stream, dir, streamId) { (spark, batch, tag) =>
+      graft.functions.BandIndex.addBatchTagged(spark, dir, batch, idCol, textCol, tag)
+    }
+
+  /** The replay-safe foreachBatch sink both ingests share: skip a
+    * batch whose marker exists, else run the store's tagged `ingest`
+    * of a non-empty batch under `<streamId>-b<batchId>`, then write the
+    * marker. */
+  private def taggedIngest(stream: DataFrame, dir: String, streamId: String)
+                          (ingest: (SparkSession, DataFrame, String) => Unit)
   : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(streamId.matches("[A-Za-z0-9_-]+"),
       s"streamId must be a safe file/tag prefix: $streamId")
@@ -544,9 +533,7 @@ object StreamOps {
           s"$dir/ingest_log/$streamId/batch-$batchId")
         val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(marker)) {
-          if (!batch.isEmpty)
-            graft.functions.BandIndex.addBatchTagged(spark, dir, batch.toDF(),
-              idCol, textCol, tag = s"$streamId-b$batchId")
+          if (!batch.isEmpty) ingest(spark, batch.toDF(), s"$streamId-b$batchId")
           fs.mkdirs(marker.getParent)
           fs.create(marker, true).close()
         }

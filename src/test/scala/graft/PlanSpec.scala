@@ -86,17 +86,39 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p.take(2000))
   }
 
-  test("x23/x27 share one memoized postings build (InMemoryRelation in x27's plan)") {
-    // bm25TopK memoizes its persisted postings by (corpus, vocab):
-    // after x23 runs, x27's lexical side must READ that cache, not
-    // rebuild the corpus-pass subtree (round-10 postings sharing).
-    graft.functions.SearchFunctions.releaseCaches()
-    SparkEntry.queries("x23_bm25")(spark, d).count()
-    val plan = SparkEntry.queries("x27_hybrid_rrf")(spark, d)
-      .queryExecution.executedPlan.toString
-    graft.functions.SearchFunctions.releaseCaches()
-    assert(plan.contains("InMemoryTableScan") || plan.contains("InMemoryRelation"),
-      plan.take(2000))
+  test("lexical family keeps no state: nothing cached, corpus tokenized inside the cut") {
+    // TfIdf, bm25 and the hybrids cut what they read twice
+    // (Lineage.cut) instead of persisting into the CacheManager, so
+    // two corpora leave nothing cached, and bm25's returned plan reads
+    // its tf from a cut: no token_counts left to re-run
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.functions.{CurationFunctions, SearchFunctions, TfIdf}
+    val cm = spark.sharedState.cacheManager
+    SparkEntry.releaseCaches()
+    spark.catalog.clearCache()
+    val corpora = Seq(
+      Seq((1L, "a b a", "en"), (2L, "b c", "de"), (3L, "c a d", "en"), (4L, "d", "de")),
+      Seq((1L, "x y", "en"), (2L, "y z x", "en"), (3L, "z", "de"), (4L, "x x q", "de")))
+    val embeds = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.9f, 0.1f)),
+      (3L, Seq(0.5f, 0.5f)), (4L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    corpora.foreach { rows =>
+      val docs = rows.toDF("doc_id", "text", "lang")
+      val bm = SearchFunctions.bm25TopK(docs, "doc_id", "text", Seq((0, "a x"), (1, "b y")), k = 3)
+      val analyzed = bm.queryExecution.analyzed.toString
+      assert(analyzed.contains("LogicalRDD") && !analyzed.contains("token_counts"), analyzed)
+      assert(SearchFunctions.termFreq(docs, "doc_id", "text")
+        .queryExecution.analyzed.toString.contains("token_counts"))
+      Seq(bm,
+        TfIdf.tfidf(docs, "doc_id", "text"),
+        SearchFunctions.hybridRrfTopK(docs, "doc_id", "text", embeds, "vec_id",
+          "embedding", Seq((0, "a x", 1L)), k = 2, fuseN = 3),
+        CurationFunctions.dsirWeights(docs, "doc_id", "text", col("lang") === "en", buckets = 64)
+      ).foreach { out =>
+        assert(out.count() > 0)
+        assert(cm.isEmpty, out.queryExecution.withCachedData.toString.take(2000))
+      }
+    }
   }
 
   test("dedup verify attach builds the hashed-set relation once (ReusedExchange, non-AQE plan)") {

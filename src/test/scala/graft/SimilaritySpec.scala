@@ -418,10 +418,11 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("trainedCentroids contracts: iters=0 passthrough, bit-determinism, empty-cluster drop") {
     // The VALUE of training (recall per nprobe) is a property of real
-    // data and lives in SCALE.md r18 with committed ProfileKmeansRecall
-    // logs — a designed corpus can't pin it without hand-picking a
-    // k-means basin (a perfectly symmetric degenerate-seed fixture
-    // collapses all centroids to the global mean, measured here before
+    // data and lives in SCALE.md round 18 (measured with the deleted
+    // ProfileKmeansRecall; commit 80a17b0 holds it) — a designed
+    // corpus can't pin it without hand-picking a k-means basin (a
+    // perfectly symmetric degenerate-seed fixture collapses all
+    // centroids to the global mean, measured here before
     // this test was rewritten). What IS pinnable are the CONTRACTS the
     // s18 oracle and ivfIndexSave(trainIters) rely on:
     import graft.functions.SimilarityFunctions.trainedCentroids
