@@ -104,9 +104,7 @@ object DataPipelineExample {
     //     cluster by nearest centroid, prune within-cluster cosine
     //     duplicates — catches paraphrases the shingle families miss.
     //     On a real cluster set a checkpoint dir (fault-tolerant
-    //     checkpoints, see Lineage) and, once C leaves broadcast range,
-    //     assignPlanes = Some(log2(C) - 3) for the bucketed
-    //     assignment path.
+    //     checkpoints, see Lineage).
     val sem = SimilarityFunctions.semDedup(
       graft.Tables.embeddings(spark, sfDir), "vec_id", "embedding",
       clusters = 16, threshold = 0.35)

@@ -50,24 +50,14 @@ object GraftExtensions {
       s"$fn expects a literal numeric argument, got: $other")
   }
 
-  private def stringArg(e: Expression, fn: String): String = e match {
-    case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) => v.toString
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal string argument, got: $other")
-  }
-
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    // optional trailing literal picks the hash family ('md5' | 'xxh64')
     "minhash_signature" -> (exprs => {
-      arity(exprs, "minhash_signature", 2, 3,
-        "minhash_signature(shingles, 64) or minhash_signature(shingles, 64, 'xxh64')")
-      MinHashSignature(exprs.head, intArg(exprs(1), "minhash_signature"),
-        if (exprs.size > 2) stringArg(exprs(2), "minhash_signature") else "md5")
+      arity(exprs, "minhash_signature", 2, 2, "minhash_signature(shingles, 64)")
+      MinHashSignature(exprs.head, intArg(exprs(1), "minhash_signature"))
     }),
     "simhash32" -> (exprs => {
-      arity(exprs, "simhash32", 1, 2, "simhash32(tokens) or simhash32(tokens, 'xxh64')")
-      SimHash32(exprs.head,
-        if (exprs.size > 1) stringArg(exprs(1), "simhash32") else "md5")
+      arity(exprs, "simhash32", 1, 1, "simhash32(tokens)")
+      SimHash32(exprs.head)
     }),
     "double_dot" -> (exprs => {
       arity(exprs, "double_dot", 2, 2, "double_dot(vec_a, vec_b)")
@@ -95,9 +85,8 @@ object GraftExtensions {
       DoubleL2Squared(exprs.head, exprs(1))
     }),
     "hashed_set40" -> (exprs => {
-      arity(exprs, "hashed_set40", 1, 2, "hashed_set40(shingles) or hashed_set40(shingles, 'xxh64')")
-      HashedSet40(exprs.head,
-        if (exprs.size > 1) stringArg(exprs(1), "hashed_set40") else "md5")
+      arity(exprs, "hashed_set40", 1, 1, "hashed_set40(shingles)")
+      HashedSet40(exprs.head)
     }),
     "word_shingles" -> (exprs => {
       arity(exprs, "word_shingles", 2, 2, "word_shingles(text, 3)")

@@ -24,27 +24,6 @@ object HashExpressions {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** Hash families for the sketch kernels.
-    *
-    * - `"md5"` (default): engine-reproducible — the DuckDB oracles
-    *   compute the identical bytes, so correctness gates hold across
-    *   engines. ~350 ns/shingle; at 100 TB the signature stage is the
-    *   floor of the dedup pipelines.
-    * - `"xxh64"`: production mode — Spark's own XXH64 over the raw
-    *   UTF8String bytes (zero-copy, no digest allocation). Same sketch
-    *   semantics, different hash values: signatures/fingerprints are
-    *   NOT comparable across families, so pick one per corpus. Exact
-    *   verification is family-independent, so verified near-dup pairs
-    *   agree between families up to LSH candidate recall.
-    */
-  val Families: Set[String] = Set("md5", "xxh64")
-
-  @inline private def xx(s: org.apache.spark.unsafe.types.UTF8String, seed: Long): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
-
-  private val Mask40 = 0xffffffffffL
-
   /** 40-bit big-endian value of digest bytes [off, off+5) — equal to
     * conv(substr(hex, off*2+1, 10), 16, 10). */
   @inline private def bits40(d: Array[Byte], off: Int): Long =
@@ -93,13 +72,11 @@ object HashExpressions {
     * members must be independent draws), evaluated in one pass over
     * the shingles — still one digest per shingle.
     *
-    * `family` picks the base hash ([[Families]]): "md5" takes the
-    * first/second 40 bits of md5(shingle) — bit-identical to
-    * DedupFunctions.minhashSignature; "xxh64" takes the low 40 bits of
-    * XXH64(shingle, seed=0 / seed=1). */
-  case class MinHashSignature(child: Expression, k: Int, family: String = "md5")
+    * The base hashes are the first/second 40 bits of md5(shingle) —
+    * bit-identical to DedupFunctions.minhashSignature and the DuckDB
+    * oracles. */
+  case class MinHashSignature(child: Expression, k: Int)
       extends UnaryExpression with CodegenFallback with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-    require(Families.contains(family), s"unknown hash family: $family")
     override def inputTypes: Seq[DataType] =
       Seq(ArrayType(StringType))
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -117,23 +94,14 @@ object HashExpressions {
       // the same drops-out-of-LSH effect; the shinglers always emit
       // >= 1 element, so only direct SQL callers can reach this.)
       if (arr.numElements() == 0) return null
-      val isMd5 = family == "md5"
-      val md = if (isMd5) md5Local.get() else null
+      val md = md5Local.get()
       val mins = Array.fill(k)(Long.MaxValue)
       var i = 0
       val n = arr.numElements()
       while (i < n) {
-        val s = arr.getUTF8String(i)
-        var h1 = 0L
-        var h2 = 0L
-        if (isMd5) {
-          val d = md.digest(s.getBytes)
-          h1 = bits40(d, 0)
-          h2 = bits40(d, 5)
-        } else {
-          h1 = xx(s, 0L) & Mask40
-          h2 = xx(s, 1L) & Mask40
-        }
+        val d = md.digest(arr.getUTF8String(i).getBytes)
+        val h1 = bits40(d, 0)
+        val h2 = bits40(d, 5)
         var j = 0
         while (j < k) {
           val h = (ca(j) * h1 + cb(j) * h2) % MinHashP
@@ -150,15 +118,11 @@ object HashExpressions {
   }
 
   /** 32-bit SimHash over an array<string> of tokens, ±1 votes per bit,
-    * sign of the vote sum → fingerprint bit.
-    *
-    * `family` picks the token hash ([[Families]]): "md5" reads bit k%4
-    * of hex digit k/4 of md5(token) — bit-identical to
-    * DedupFunctions.simhash32 and the DuckDB oracles; "xxh64" reads
-    * bit k of the low 32 bits of XXH64(token, seed=0). */
-  case class SimHash32(child: Expression, family: String = "md5")
+    * sign of the vote sum → fingerprint bit. Bit k reads bit k%4 of
+    * hex digit k/4 of md5(token) — bit-identical to
+    * DedupFunctions.simhash32 and the DuckDB oracles. */
+  case class SimHash32(child: Expression)
       extends UnaryExpression with CodegenFallback with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-    require(Families.contains(family), s"unknown hash family: $family")
     override def inputTypes: Seq[DataType] =
       Seq(ArrayType(StringType))
     override def dataType: DataType = LongType
@@ -166,29 +130,18 @@ object HashExpressions {
 
     override def nullSafeEval(input: Any): Any = {
       val arr = input.asInstanceOf[ArrayData]
-      val isMd5 = family == "md5"
-      val md = if (isMd5) md5Local.get() else null
+      val md = md5Local.get()
       val votes = new Array[Int](32)
       var i = 0
       val n = arr.numElements()
       while (i < n) {
-        val s = arr.getUTF8String(i)
-        if (isMd5) {
-          val d = md.digest(s.getBytes)
-          var kk = 0
-          while (kk < 32) {
-            val c = kk / 4
-            val nib = if ((c & 1) == 0) (d(c / 2) >> 4) & 0xf else d(c / 2) & 0xf
-            votes(kk) += (((nib >> (kk % 4)) & 1) * 2 - 1)
-            kk += 1
-          }
-        } else {
-          val h = xx(s, 0L)
-          var kk = 0
-          while (kk < 32) {
-            votes(kk) += ((((h >>> kk) & 1L).toInt) * 2 - 1)
-            kk += 1
-          }
+        val d = md.digest(arr.getUTF8String(i).getBytes)
+        var kk = 0
+        while (kk < 32) {
+          val c = kk / 4
+          val nib = if ((c & 1) == 0) (d(c / 2) >> 4) & 0xf else d(c / 2) & 0xf
+          votes(kk) += (((nib >> (kk % 4)) & 1) * 2 - 1)
+          kk += 1
         }
         i += 1
       }
@@ -530,15 +483,14 @@ object HashExpressions {
 
   /** Sorted distinct 40-bit hashed shingle set: byte-identical to
     * `array_sort(array_distinct(transform(shingles,
-    *    s => conv(md5(s).substr(1, 10), 16, 10).cast("long"))))` for
-    * the md5 family (the DuckDB-reproducible verify sets of
+    *    s => conv(md5(s).substr(1, 10), 16, 10).cast("long"))))` (the
+    * DuckDB-reproducible verify sets of
     * jaccardPairs/containmentPairs), computed in one pass — one digest
     * per shingle, primitive sort, in-place dedup — instead of an
     * interpreted lambda with hex-string round-trips (profiled 1.5 s →
     * ~0.2 s on the d4b verify sets at sf0.1). */
-  case class HashedSet40(child: Expression, family: String = "md5")
+  case class HashedSet40(child: Expression)
       extends UnaryExpression with CodegenFallback with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-    require(Families.contains(family), s"unknown hash family: $family")
     override def inputTypes: Seq[DataType] =
       Seq(ArrayType(StringType))
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -547,13 +499,11 @@ object HashExpressions {
     override def nullSafeEval(input: Any): Any = {
       val arr = input.asInstanceOf[ArrayData]
       val n = arr.numElements()
-      val isMd5 = family == "md5"
-      val md = if (isMd5) md5Local.get() else null
+      val md = md5Local.get()
       val vals = new Array[Long](n)
       var i = 0
       while (i < n) {
-        val s = arr.getUTF8String(i)
-        vals(i) = if (isMd5) bits40(md.digest(s.getBytes), 0) else xx(s, 0L) & Mask40
+        vals(i) = bits40(md.digest(arr.getUTF8String(i).getBytes), 0)
         i += 1
       }
       java.util.Arrays.sort(vals)
@@ -574,7 +524,7 @@ object HashExpressions {
     * `[4-byte big-endian set size][bits/8-byte bitmap]` with bit
     * `v & (bits-1)` set for every element. Feeds
     * [[StripeOverlapUpper]]'s deterministic intersection bound — the
-    * verify pre-filter of jaccardPairs/containmentPairs: the sketch is
+    * verify pre-filter of containmentPairs: the sketch is
     * ~8× smaller than the hashed set itself (260 B vs ~2 KB at the
     * sf0.1 shingle sizes), so the per-candidate attach join ships
     * sketches and only bound-survivors touch the full arrays. Built
@@ -680,14 +630,14 @@ object HashExpressions {
   }
 
   /** Column-API entry points. */
-  def hashed_set40(shingles: Column, family: String = "md5"): Column =
-    ColumnBridge.column(HashedSet40(ColumnBridge.expression(shingles), family))
+  def hashed_set40(shingles: Column): Column =
+    ColumnBridge.column(HashedSet40(ColumnBridge.expression(shingles)))
 
-  def minhash_signature(shingles: Column, k: Int, family: String = "md5"): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(shingles), k, family))
+  def minhash_signature(shingles: Column, k: Int): Column =
+    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(shingles), k))
 
-  def simhash32_native(tokens: Column, family: String = "md5"): Column =
-    ColumnBridge.column(SimHash32(ColumnBridge.expression(tokens), family))
+  def simhash32_native(tokens: Column): Column =
+    ColumnBridge.column(SimHash32(ColumnBridge.expression(tokens)))
 
   def double_dot(a: Column, b: Column): Column =
     ColumnBridge.column(DoubleDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))

@@ -50,7 +50,7 @@ object AnnIndex {
     // an index saved before the keepVectors field existed has no such
     // column in its meta parquet; default it to false instead of
     // letting encoder resolution fail every entry point on old indexes
-    override protected def metaFrame(raw: DataFrame): DataFrame =
+    override protected def metaFrame(dir: String, raw: DataFrame): DataFrame =
       if (raw.columns.contains("keepVectors")) raw
       else raw.withColumn("keepVectors", lit(false))
 

@@ -17,8 +17,8 @@ import org.apache.spark.storage.StorageLevel
   * semantics (`pipes.py:62-63` reset/replay) to the LSH family.
   *
   * Layout under `dir` (all parquet):
-  *   meta/      one row: shingleN, numHashes, bands, hashFamily,
-  *              prefixLen, idBuckets
+  *   meta/      one row: shingleN, numHashes, bands, prefixLen,
+  *              idBuckets
   *   bands/     the DATA-sized LSH postings, (id, band) partitioned by
   *              `bucket` = the band key's first `prefixLen` hex chars:
   *              a probe reads only its batch's buckets (statically
@@ -56,13 +56,25 @@ object BandIndex {
   import DedupFunctions.{wordShingles, bandKeys, jaccard}
 
   private[graft] case class Meta(shingleN: Int, numHashes: Int, bands: Int,
-                                 hashFamily: String, prefixLen: Int,
-                                 idBuckets: Int)
+                                 prefixLen: Int, idBuckets: Int)
 
   private val Bands = Subtree("bands", "bucket")
   private val Shingles = Subtree("shingles", "sbucket")
 
   private object Store extends StoreLifecycle[Meta](Seq(Bands, Shingles)) {
+    /** Older builds saved a `hashFamily` column. The bands are md5
+      * minhash keys; a store banded with any other family would be
+      * probed with md5 and silently match nothing, so it is refused. */
+    override protected def metaFrame(dir: String, raw: DataFrame): DataFrame =
+      if (!raw.columns.contains("hashFamily")) raw
+      else {
+        val families = raw.select("hashFamily").distinct().collect().map(_.getString(0))
+        require(families.forall(_ == "md5"),
+          s"band index at $dir was saved with hash family " +
+            s"${families.mkString(", ")}; only md5 is supported — rebuild it with BandIndex.save")
+        raw.drop("hashFamily")
+      }
+
     /** Settles any crashed [[rebucket]] from its marker: base dir still
       * live → uncommitted, scrub the op's tagged files (exactly what a
       * retry would do); base dir gone → committed, drop the `.retired-`
@@ -101,10 +113,8 @@ object BandIndex {
     * sequential at the d16 shape, SCALE.md r18). */
   def save(docs: DataFrame, idCol: String, textCol: String,
            shingleN: Int, numHashes: Int, bands: Int, dir: String,
-           hashFamily: String = "md5", prefixLen: Int = 2,
-           idBuckets: Int = 64): Unit = {
-    val meta = checkedMeta(shingleN, numHashes, bands, hashFamily,
-      prefixLen, idBuckets)
+           prefixLen: Int = 2, idBuckets: Int = 64): Unit = {
+    val meta = checkedMeta(shingleN, numHashes, bands, prefixLen, idBuckets)
     // scan-parallelism valve on the corpus input (optimization r19,
     // guide §2.5): a fixture-scale docs table is one parquet row
     // group = ONE scan task, and the minhash (one md5 per shingle —
@@ -484,14 +494,13 @@ object BandIndex {
   // ---- shared encode / layout helpers ----
 
   private def checkedMeta(shingleN: Int, numHashes: Int, bands: Int,
-                          hashFamily: String, prefixLen: Int,
-                          idBuckets: Int): Meta = {
+                          prefixLen: Int, idBuckets: Int): Meta = {
     require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
       s"bands must divide numHashes (got numHashes=$numHashes, bands=$bands)")
     require(prefixLen >= 1 && prefixLen <= 8,
       s"prefixLen must be in [1, 8], got $prefixLen")
     require(idBuckets >= 1, s"idBuckets must be >= 1, got $idBuckets")
-    Meta(shingleN, numHashes, bands, hashFamily, prefixLen, idBuckets)
+    Meta(shingleN, numHashes, bands, prefixLen, idBuckets)
   }
 
   /** (id, sh) with the no-shingle docs (< shingleN words → NULL set)
@@ -508,8 +517,7 @@ object BandIndex {
     * the key's hex prefix for the probe's static partition pruning. */
   private def banded(sh: DataFrame, meta: Meta): DataFrame =
     sh.withColumn("band", explode(bandKeys(
-        graft.expressions.HashExpressions.minhash_signature(
-          col("sh"), meta.numHashes, meta.hashFamily),
+        graft.expressions.HashExpressions.minhash_signature(col("sh"), meta.numHashes),
         meta.bands, meta.numHashes / meta.bands)))
       .select(col("id"), col("band"),
         substring(col("band"), 1, meta.prefixLen).as("bucket"))

@@ -169,8 +169,7 @@ object DedupFunctions {
     */
   def minhashNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
                             shingleN: Int, numHashes: Int, bands: Int,
-                            threshold: Double,
-                            hashFamily: String = "md5"): DataFrame = {
+                            threshold: Double): DataFrame = {
     require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
       s"bands must divide numHashes (got numHashes=$numHashes, bands=$bands): " +
         "bands > numHashes makes every band key constant (corpus-squared " +
@@ -186,12 +185,9 @@ object DedupFunctions {
         wordShingles(col(textCol), shingleN).as("__sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val withBands = withSh
-      // native kernel: in md5 mode bit-identical to the HOF
-      // formulation; hashFamily="xxh64" swaps the base hash for
-      // production runs (HashExpressions.Families)
+      // native kernel: bit-identical to the HOF formulation
       .withColumn("__band", explode(bandKeys(
-        graft.expressions.HashExpressions.minhash_signature(
-          col("__sh"), numHashes, hashFamily),
+        graft.expressions.HashExpressions.minhash_signature(col("__sh"), numHashes),
         bands, r)))
       .select("__id", "__band")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -233,8 +229,7 @@ object DedupFunctions {
   def incrementalNearDuplicates(oldDocs: DataFrame, newDocs: DataFrame,
                                 idCol: String, textCol: String,
                                 shingleN: Int, numHashes: Int, bands: Int,
-                                threshold: Double,
-                                hashFamily: String = "md5"): DataFrame = {
+                                threshold: Double): DataFrame = {
     require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
       s"bands must divide numHashes (got numHashes=$numHashes, bands=$bands): " +
         "bands > numHashes makes every band key constant (corpus-squared " +
@@ -246,8 +241,8 @@ object DedupFunctions {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def bandsOf(sh: DataFrame): DataFrame = sh
       .withColumn("band", explode(bandKeys(
-        graft.expressions.HashExpressions.minhash_signature(
-          col("sh"), numHashes, hashFamily), bands, r)))
+        graft.expressions.HashExpressions.minhash_signature(col("sh"), numHashes),
+        bands, r)))
       .select("id", "band")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val oldSh = prep(oldDocs); val newSh = prep(newDocs)
@@ -294,15 +289,13 @@ object DedupFunctions {
     * over 4 bytes guarantees at least one equal byte (pigeonhole), so
     * joining on any-of-4 byte bands has 100% recall for that radius. */
   def simhashNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int,
-                            hashFamily: String = "md5"): DataFrame = {
+                            maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming must be <= 3 (got $maxHamming): 4 byte-bands only " +
         "pigeonhole-guarantee a shared band up to hamming 3 - a larger " +
         "radius would silently miss pairs (same guard as ahashNearDuplicates)")
     val withH = docs.select(col(idCol).as("__id"),
-      graft.expressions.HashExpressions.simhash32_native(
-        split(col(textCol), " "), hashFamily).as("__h"))
+      graft.expressions.HashExpressions.simhash32_native(split(col(textCol), " ")).as("__h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // byte p of the 32-bit hash, via exact double-pow arithmetic (h < 2^32)
     val byteAt = (p: Column) => pmod(
@@ -325,6 +318,13 @@ object DedupFunctions {
     withH.unpersist(blocking = false)
     result // pair-sized; caller releases with unpersist() when done
   }
+
+  /** Stripe-sketch width of [[containmentPairs]]' verify pre-filter.
+    * MEASURED (SCALE.md round 10, x11b at sf0.1): no sketch 1.9–2.8 s,
+    * 2048 bits 2.1–2.6 s, 512 bits 1.5–2.0 s — word-3-gram sets are
+    * ~100 elements, small enough against 512 stripes for the bound to
+    * bite. */
+  private val ContainSketchBits = 512
 
   /** Directed shingle-containment near-duplicates: all ordered pairs
     * (a, b) with |A∩B| / |A| >= threshold — the asymmetric measure that
@@ -357,10 +357,13 @@ object DedupFunctions {
     * index-prefix trick: the contained side A is the only bounded side
     * (B can be arbitrarily large), so the join stays A-prefix ×
     * full-index — the group bound is the transferable half.
+    *
+    * Candidates then pass a [[ContainSketchBits]]-bit stripe-sketch
+    * gate before the exact verify: a deterministic overlap upper bound,
+    * loosening-only, so the verified output is bit-identical.
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        shingleN: Int, threshold: Double,
-                       sketchBits: Int = 0,
                        broadcastVerifyBytes: Long = 0L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ⌈t·n⌉ with an epsilon guard: if fl(t*n) rounds just above the
@@ -437,24 +440,23 @@ object DedupFunctions {
     val hsh = sh.select(col("__id"),
         graft.expressions.HashExpressions.hashed_set40(col("__sh")).as("__hs"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // sketch pre-filter — see jaccardPairs: attach fixed-size stripe
-    // sketches instead of full hashed arrays, keep only pairs whose
-    // deterministic overlap upper bound could still reach ⌈t·|A|⌉.
-    // round() is monotone non-decreasing, so mirroring the verify's
-    // round(·, 6) keeps the gate loosening-only even for pairs that
-    // only qualify via the half-up rounding at the threshold edge.
-    val pre = if (sketchBits == 0) cand else {
-      val skb = hsh.select(col("__id"),
-        graft.expressions.HashExpressions.stripe_sketch(col("__hs"), sketchBits).as("__bm"),
-        size(col("__hs")).as("__nh"))
-      cand
-        .join(skb.select(col("__id").as("a"), col("__bm").as("__bma"), col("__nh").as("__nha")), Seq("a"))
-        .join(skb.select(col("__id").as("b"), col("__bm").as("__bmb")), Seq("b"))
-        .filter(round(graft.expressions.HashExpressions.stripe_overlap_upper(
-            col("__bma"), col("__bmb")).cast("double") /
-          col("__nha").cast("double"), 6) >= threshold)
-        .select("a", "b")
-    }
+    // stripe-sketch pre-filter: attach fixed-size sketches
+    // ([[ContainSketchBits]]) instead of full hashed arrays, keep only
+    // pairs whose deterministic overlap upper bound (StripeOverlapUpper)
+    // could still reach ⌈t·|A|⌉. round() is monotone non-decreasing, so
+    // mirroring the verify's round(·, 6) keeps the gate loosening-only
+    // even for pairs that only qualify via the half-up rounding at the
+    // threshold edge: the verified output is bit-identical.
+    val skb = hsh.select(col("__id"),
+      graft.expressions.HashExpressions.stripe_sketch(col("__hs"), ContainSketchBits).as("__bm"),
+      size(col("__hs")).as("__nh"))
+    val pre = cand
+      .join(skb.select(col("__id").as("a"), col("__bm").as("__bma"), col("__nh").as("__nha")), Seq("a"))
+      .join(skb.select(col("__id").as("b"), col("__bm").as("__bmb")), Seq("b"))
+      .filter(round(graft.expressions.HashExpressions.stripe_overlap_upper(
+          col("__bma"), col("__bmb")).cast("double") /
+        col("__nha").cast("double"), 6) >= threshold)
+      .select("a", "b")
     // verify-join strategy — see jaccardPairs: broadcast the hashed
     // sets when the corpus-sized relation fits the cap (no exchange,
     // no sort, one codegen stage over the candidate stream);
@@ -528,7 +530,10 @@ object DedupFunctions {
     * deterministic, engine-reproducible (the oracle computes the same
     * md5 bits), and within ~(|A|·|B|)/2⁴⁰ ≈ 10⁻⁶ per pair of true
     * string Jaccard — a collision shifts both engines identically, so
-    * oracle equality stays exact.
+    * oracle equality stays exact. There is no stripe-sketch gate here
+    * (unlike containmentPairs): on ~280-element char-5-gram sets any
+    * sketch cheaper than the arrays saturates, measured a loss (SCALE.md
+    * round 8: f10 off 78.7–79.8 s, 512 bits 129.1 s, 2048 bits 78.7 s).
     *
     * Measured growth (SCALE.md "d4b ×100"): candidates
     * 3.6M / 36.9M / 477M and verified pairs exactly linear at corpus
@@ -548,7 +553,6 @@ object DedupFunctions {
     * caller releases. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingles: Column => Column, threshold: Double,
-                   sketchBits: Int = 0,
                    broadcastVerifyBytes: Long = 0L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // epsilon-guarded ⌈t·n⌉ — see containmentPairs: keeps the recall
@@ -630,39 +634,6 @@ object DedupFunctions {
     val hsh = sh.select(col("__id"),
         graft.expressions.HashExpressions.hashed_set40(col("__sh")).as("__hs"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // optional sketch pre-filter (sketchBits > 0, default OFF): attach
-    // fixed-size stripe sketches instead of full hashed arrays and keep
-    // only pairs whose DETERMINISTIC overlap upper bound (see
-    // StripeOverlapUpper) could still reach the threshold —
-    // loosening-only, output bit-identical. MEASURED A LOSS on this
-    // corpus (SCALE.md round-8 re-run, idle machine, f10 = 50k docs / 36.3M
-    // candidates: off 78.7–79.8 s, 512 bits 129.1 s, 2048 bits
-    // 78.7 s): the ~280-element char-5-gram sets saturate any sketch
-    // small enough to be cheaper than the arrays (512 bits → bound
-    // never below threshold → two pure-overhead 36M-row joins; 2048
-    // bits → filtering exactly pays for its own join cost). Kept as a
-    // knob because the bound DOES bite when sets are small relative to
-    // the width (word-shingled short docs: tens of elements vs 2048
-    // stripes) — but the default path must not pay 2 extra passes over
-    // the candidate relation, which the A/B pinned at ~25 s each at
-    // f10.
-    val pre = if (sketchBits == 0) cand else {
-      val skb = hsh.select(col("__id"),
-        graft.expressions.HashExpressions.stripe_sketch(col("__hs"), sketchBits).as("__bm"),
-        size(col("__hs")).as("__nh"))
-      cand
-        .join(skb.select(col("__id").as("a"), col("__bm").as("__bma"), col("__nh").as("__nha")), Seq("a"))
-        .join(skb.select(col("__id").as("b"), col("__bm").as("__bmb"), col("__nh").as("__nhb")), Seq("b"))
-        .withColumn("__ub", graft.expressions.HashExpressions.stripe_overlap_upper(
-          col("__bma"), col("__bmb")))
-        // same division shape as the verify kernel (i/(na+nb−i)): with
-        // __ub ≥ i and correctly-rounded double division monotone in
-        // both numerator and denominator, ub-jaccard ≥ true jaccard —
-        // the >= t gate can only loosen
-        .filter(col("__ub").cast("double") /
-          (col("__nha") + col("__nhb") - col("__ub")).cast("double") >= threshold)
-        .select("a", "b")
-    }
     // Verify-join strategy: the candidate relation is tens of millions
     // of 16-byte (a, b) rows, the hashed-set relation is corpus-sized
     // with ~KB array payloads. Left to itself Spark plans two
@@ -683,7 +654,7 @@ object DedupFunctions {
     // hashed-set relation serves both attaches (ReusedExchange), and
     // the size estimate is memoized per corpus plan — see
     // attachVerifySets/estVerifyBytes.
-    val verified = attachVerifySets(pre, hsh, sh, broadcastVerifyBytes)
+    val verified = attachVerifySets(cand, hsh, sh, broadcastVerifyBytes)
       .withColumn("jac", graft.expressions.HashExpressions.sorted_long_jaccard(
         col("__sha"), col("__shb")))
       .filter(col("jac") >= threshold)

@@ -264,38 +264,30 @@ private[graft] object PartitionedStore {
     out.toSeq.asInstanceOf[Seq[R]]
   }
 
-  /** [[rewriteExcluding]] over many partition values.
-    *
-    * Below `bulkThreshold` affected partitions each value is rewritten
-    * on its own from the shared pool ([[parallel]]); the per-partition
-    * swap is unchanged, so a crash mid-pool leaves each partition
-    * individually live-or-backup for [[recover]].
-    *
-    * From `bulkThreshold` affected partitions up the per-partition
-    * shape inverts: each rewrite is ~3 driver-dispatched Spark jobs
-    * (its broadcast build, its write, its AQE stage) even when the
-    * partition holds a few KB, so a vacuum touching MOST of the store
-    * (a fractional delete re-banded across every bucket — the ×100
-    * fraction arm measured 3 993 touched = 122 s of pure job dispatch,
-    * SCALE.md r18) pays thousands of launches for one store's worth of
-    * bytes. [[rewriteExcludingBulk]] reads all affected partitions in
-    * ONE pruned scan, anti-joins the tombstones once, writes one
-    * partitioned staging tree, then swaps each partition behind the
-    * SAME live→backup→live rename discipline — crash-at-any-point
-    * behavior is identical (each partition individually live-or-backup;
-    * the `.compact-bulkvac` staging dir is swept by [[recover]]).
-    *
-    * Threshold MEASURED, not assumed (OPTIMIZATION_r18.md, "Bulk-
-    * maintenance threshold 96 → 8"): at 24 touched fixture partitions
-    * bulk is already 1.6× faster (1.76 vs 2.81 s — the per-partition
-    * path's ~0.11 s/partition dispatch beats the bulk scan's ~0.7 s
-    * fixed cost from ~7 partitions up), at 2 touched per-partition
-    * wins (0.42 vs 0.72 s). Default 8 = the measured crossover; only a
-    * parameter so specs can compare the two arms. */
+  /** Affected-partition count from which [[rewriteExcludingAll]] and
+    * [[compact]] take the bulk arm. MEASURED (OPTIMIZATION_r18.md,
+    * "Bulk-maintenance threshold 96 → 8"): at 24 touched fixture
+    * partitions bulk is 1.6× faster (1.76 vs 2.81 s — the
+    * per-partition path's ~0.11 s/partition dispatch beats the bulk
+    * scan's ~0.7 s fixed cost from ~7 partitions up), at 2 touched
+    * per-partition wins (0.42 vs 0.72 s). */
+  private[graft] val BulkThreshold = 8
+
+  /** [[rewriteExcluding]] over many partition values. Below
+    * [[BulkThreshold]] affected partitions each value is rewritten on
+    * its own from the shared pool ([[parallel]]), each partition
+    * individually live-or-backup for [[recover]] after a crash. From
+    * there up, each rewrite's ~3 dispatched jobs (broadcast build,
+    * write, AQE stage) dominate — a vacuum touching most of the store
+    * paid 3 993 launches = 122 s at ×100 (SCALE.md r18) — so
+    * [[rewriteExcludingBulk]] reads all affected partitions in one
+    * pruned scan and swaps each behind the same live→backup→live
+    * discipline (its `.compact-bulkvac` staging is swept by
+    * [[recover]]). */
   def rewriteExcludingAll(spark: SparkSession, root: Path, partCol: String,
                           values: Seq[String], tombIds: DataFrame,
-                          idCol: String, bulkThreshold: Int = 8): Seq[String] =
-    if (values.size >= bulkThreshold)
+                          idCol: String): Seq[String] =
+    if (values.size >= BulkThreshold)
       rewriteExcludingBulk(spark, root, partCol, values, tombIds, idCol)
     else
       values.zip(parallel(spark, values)(v =>
@@ -425,11 +417,11 @@ private[graft] object PartitionedStore {
     * partition). Reads ONLY the flagged partitions, swaps each in
     * behind [[swapIn]] so a crash at any point leaves the rows
     * reachable, and returns the compacted partition VALUES. Caller runs
-    * [[recover]] first. Below `bulkThreshold` flagged partitions each
+    * [[recover]] first. Below [[BulkThreshold]] flagged partitions each
     * is rewritten on its own from the shared pool; from there up, one
-    * bulk rewrite (the [[rewriteExcludingAll]] crossover). */
+    * bulk rewrite. */
   def compact(spark: SparkSession, root: Path, partCol: String,
-              minFiles: Int, bulkThreshold: Int = 8): Seq[String] = {
+              minFiles: Int): Seq[String] = {
     require(minFiles >= 2, "need minFiles >= 2")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val flagged = partitions(fs, root, partCol).filter { pd =>
@@ -437,7 +429,7 @@ private[graft] object PartitionedStore {
         .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")) >= minFiles
     }.map(_.getName.stripPrefix(partCol + "="))
     if (flagged.isEmpty) return Seq.empty
-    // past bulkThreshold flagged partitions, per-partition compaction
+    // past BulkThreshold flagged partitions, per-partition compaction
     // jobs hit the same dispatch wall the vacuum's bulk arm removes
     // (SCALE.md r18 — heavy micro-batch ingest flags HUNDREDS): one
     // read + one staged partitionBy write + the same swap.
@@ -445,7 +437,7 @@ private[graft] object PartitionedStore {
     // one task → exactly one output file per partition, compaction's
     // contract. Compaction drops no rows, so no partition can come
     // back empty (the emptied return is a no-op by construction).
-    if (flagged.size >= bulkThreshold)
+    if (flagged.size >= BulkThreshold)
       bulkStageAndSwap(spark, root, partCol, flagged, _.repartition(col(partCol)))
     else
       parallel(spark, flagged) { v =>

@@ -30,6 +30,16 @@ import org.apache.spark.sql.functions.col
   * frame) returns the frame unchanged: such a frame has already been
   * partitioned by its own exchange, which is exactly the "data
   * already feeds the machine" case the valve must not touch.
+  *
+  * Re-measured against its removal (CHANGES.md, the md5-only change;
+  * 4-core VM, 5 interleaved pairs each, median [quartiles]): perfbench
+  * `index` traced `band.save` cpu 4.39 [4.24–4.79] s with the valve,
+  * 5.27 [5.05–5.56] s without, wall 5.34 [5.16–5.68] vs 5.75
+  * [5.56–5.86] s; Bench sf0.1 `SPARK_GRAFT_REPS=3` d16 wall 7.90
+  * [7.72–8.31] vs 12.00 [10.36–12.31] s (its save phase 2.31 vs
+  * 3.97 s), d19b 5.05 [4.75–5.41] vs 5.25 [5.17–5.58] s (inside the
+  * noise on 4 cores; the CDC walk's serial-scan cost above is a
+  * 32-core measurement).
   */
 private[graft] object ScanParallelism {
   import org.apache.spark.sql.catalyst.plans.logical._

@@ -774,28 +774,6 @@ object SimilarityFunctions {
         col("__best").getField("__cs").as("__cs"))
   }
 
-  /** Assignment dispatcher: dense per-row kernel by default; with
-    * `planes` set, the large-C bucketed path ([[bucketedAssign]])
-    * handles the bulk and the UNCOVERED residual — vectors whose
-    * bucket holds no centroid — falls back to the dense kernel, so
-    * cover stays total (one assignment per vector) while the dense
-    * matrix is only evaluated on the residual sliver. Exchange stays
-    * ∝ corpus: one bucket join + hash agg + one anti-join. */
-  private def assignAll(e: DataFrame, cent: Seq[(Long, Seq[Double])],
-                        planes: Option[Int], seed: Long): DataFrame =
-    planes match {
-      case None => assignToCentroids(e, cent)
-      case Some(p) =>
-        val dim = cent.head._2.size
-        val session = e.sparkSession
-        import session.implicits._
-        val centDf = broadcast(
-          cent.map { case (cid, v) => (cid, v) }.toDF("__cid", "__centv"))
-        val bulk = bucketedAssign(e, centDf, seed, p, dim)
-        val residual = e.join(bulk.select("__id"), Seq("__id"), "left_anti")
-        bulk.unionByName(assignToCentroids(residual, cent))
-    }
-
   /** [[refineCentroids]] over a raw (id, vec) corpus — the entry
     * point [[graft.functions.AnnIndex.ivfIndexSave]] uses for its
     * `trainIters` arm: first-C seeds tightened by `iters`
@@ -861,41 +839,24 @@ object SimilarityFunctions {
     * AQE-skew-join territory, and the per-cluster pair scan never
     * leaves its shuffle partition. Honest boundary of the assignment
     * stage: the dense centroid matrix costs C·dim·8 bytes per task —
-    * fine through C ~ 10⁵ at dim 64, beyond which assignment goes
-    * through [[bucketedAssign]] (LSH-bucketed centroid probe, same
-    * plan as lshTopK with centroids as the corpus) rather than a
-    * dense per-row scan.
+    * fine through C ~ 10⁵ at dim 64 (beyond that, [[bucketedAssign]]
+    * is the large-C assignment plan).
     *
-    * Returns one row per corpus vector: (id, cluster, is_dup).
-    * `refineIters` > 0 first tightens the seed centroids with that
-    * many deterministic Lloyd steps (kmeansRefine's machinery — the
-    * paper's actual k-means clustering); 0 keeps the raw first-C
-    * convention the d11 oracle pins. `assignPlanes = Some(p)` flips
-    * assignment to the large-C bucketed path (see [[bucketedAssign]]
-    * and [[assignAll]]): APPROXIMATE per the LSH contract — a
-    * vector's true nearest centroid can sit outside its bucket — but
-    * cover stays total (uncovered vectors fall back to the dense
-    * kernel) and on separated clusters it equals the dense result
-    * (SimilaritySpec). The reference has no embedding dedup —
-    * parity-plus surface.
+    * Returns one row per corpus vector: (id, cluster, is_dup). The
+    * reference has no embedding dedup — parity-plus surface.
     *
     * The assignment is materialized once through [[Lineage.cut]]. */
   def semDedup(corpus: DataFrame, idCol: String, vecCol: String,
-               clusters: Int, threshold: Double,
-               refineIters: Int = 0,
-               assignPlanes: Option[Int] = None,
-               assignSeed: Long = 42L): DataFrame = {
-    require(clusters >= 1 && refineIters >= 0,
-      "need clusters >= 1, refineIters >= 0")
+               clusters: Int, threshold: Double): DataFrame = {
+    require(clusters >= 1, "need clusters >= 1")
     val e = corpus.select(col(idCol).cast("long").as("__id"),
       col(vecCol).cast("array<double>").as("__v"))
-    val cent = refineCentroids(e, clusters, refineIters)
     // one assignment pass, materialized: the checkpoint cuts the
     // lineage so the three consumers below read the materialized
     // assignment instead of re-running the scan
     // the norm rides the materialized assignment (computed once per
     // row, not once per within-cluster pair — optimization r19)
-    val assigned = Lineage.cut(assignAll(e, cent, assignPlanes, assignSeed)
+    val assigned = Lineage.cut(assignToCentroids(e, refineCentroids(e, clusters, 0))
       .select(col("__id"), col("__v"), col("__cid"),
         l2Norm(col("__v")).as("__n")))
     // within-cluster scan: only (lower-id → higher-id) direction, so

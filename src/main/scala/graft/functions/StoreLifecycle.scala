@@ -36,9 +36,10 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     * subtree's compaction swaps were healed. */
   protected def healStore(spark: SparkSession, fs: FileSystem, dir: String): Unit = ()
 
-  /** The meta parquet as read, before decoding — override to default
-    * a column that stores saved by older versions lack. */
-  protected def metaFrame(raw: DataFrame): DataFrame = raw
+  /** The meta parquet of the store at `dir` as read, before decoding —
+    * override to default a column that stores saved by older versions
+    * lack, or to refuse one they carry. */
+  protected def metaFrame(dir: String, raw: DataFrame): DataFrame = raw
 
   def root(dir: String, s: Subtree): Path = new Path(s"$dir/${s.name}")
 
@@ -56,7 +57,7 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     * Spark job. */
   def readMeta(spark: SparkSession, dir: String): M =
     PartitionedStore.memoizedReadback(spark, s"$dir/meta") {
-      metaFrame(spark.read.parquet(s"$dir/meta")).as(Encoders.product[M]).head()
+      metaFrame(dir, spark.read.parquet(s"$dir/meta")).as(Encoders.product[M]).head()
     }
 
   // ---- entry points
@@ -161,8 +162,8 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     * partition values that may hold a deleted id (the store's routing);
     * the subtrees' rewrites run concurrently, each through
     * [[PartitionedStore.rewriteExcludingAll]]: one rewrite per value
-    * below 8 affected values, one bulk rewrite of all of them from 8 up
-    * (the measured crossover). Every partition swap is individually
+    * below [[PartitionedStore.BulkThreshold]] affected values, one bulk
+    * rewrite of all of them from there up. Every partition swap is individually
     * crash-safe and the anti-join re-applies idempotently on a retry,
     * because the batches are retired only after every subtree
     * finished. The affected values are derived from rows the rewrites
@@ -190,7 +191,7 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
     val applied = batchesOf(listed)
     if (applied.isEmpty) return Seq.empty
     val tombIds = readBatches(spark, applied).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    val done = try {
       val records = listed.map(_.getPath).filter(_.getName.startsWith(".affected-"))
       val (plan, record) = recordAffected(fs, dir, records, affected(tombIds))
       val done = PartitionedStore.parallel(spark, plan) { case (s, values) =>
@@ -203,9 +204,12 @@ private[graft] abstract class StoreLifecycle[M <: AnyRef with Product: TypeTag](
         fs.delete(parked, true) // a crashed prior retire of the same tag
         require(fs.rename(p, parked), s"tombstone retire rename $p failed")
       }
-      PartitionedStore.refresh(spark, dir)
       done
     } finally tombIds.unpersist()
+    // after the release: refresh re-lists every cached plan over `dir`,
+    // and the tombstone relation's paths are the batches just parked
+    PartitionedStore.refresh(spark, dir)
+    done
   }
 
   /** Compact every partition of every subtree that reached `minFiles`

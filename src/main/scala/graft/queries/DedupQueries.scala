@@ -49,15 +49,9 @@ object DedupQueries {
       // word-count guard mirrors the oracle: wordShingles falls back to
       // the whole text on < 3 words, where the oracle's generate_series
       // yields an empty set (and a zero containment denominator)
-      // sketchBits = 512: word-3-gram sets are ~100 elements — small
-      // relative to the stripe width, exactly the regime where the
-      // sketch bound bites (unlike d4b's ~280-element char-5-gram
-      // sets, where it saturates and is OFF). Measured 0.3–0.5 s
-      // faster at sf0.1 (SCALE.md round 10, x11b); loosening-only
-      // pre-filter, so the verified output is bit-identical.
       containmentPairs(
         documents(s, d).filter(size(split(col("text"), " ")) >= 3),
-        "doc_id", "text", shingleN = 3, threshold = 0.7, sketchBits = 512))
+        "doc_id", "text", shingleN = 3, threshold = 0.7))
 
   /** Prefix-filtered (PPJoin) char-5-gram Jaccard pairs, memoized per
     * scale dir (jaccardPairs returns a persisted pair-sized DataFrame,
@@ -512,7 +506,7 @@ object DedupQueries {
       val hot = pt("skew_detect") {
         val tmplKeys = flood.limit(1)
           .select(explode(bandKeys(minhash_signature(
-            wordShingles(col("text"), 3), 64, "md5"), 16, 4)).as("k"))
+            wordShingles(col("text"), 3), 64), 16, 4)).as("k"))
           .select(substring(col("k"), 1, 2).as("p"), col("k")).distinct()
           .collect().map(r => (r.getString(0), r.getString(1)))
         val soloPrefixes = tmplKeys.groupBy(_._1)

@@ -108,7 +108,6 @@ object StreamOps {
                     threshold: Double,
                     stateTTL: Option[String] = None,
                     trigger: Option[String] = None,
-                    hashFamily: String = "md5",
                     telemetry: Option[NearDupTelemetry] = None)
   : org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
     require(stateTTL.isEmpty || trigger.isDefined,
@@ -130,9 +129,9 @@ object StreamOps {
     val banded = docs.select(col(idCol).cast("long").as("__id"),
         graft.functions.DedupFunctions.wordShingles(col(textCol), shingleN).as("__sh"))
       .withColumn("__hs",
-        graft.expressions.HashExpressions.hashed_set40(col("__sh"), hashFamily))
+        graft.expressions.HashExpressions.hashed_set40(col("__sh")))
       .withColumn("__band", explode(graft.functions.DedupFunctions.bandKeys(
-        graft.expressions.HashExpressions.minhash_signature(col("__sh"), numHashes, hashFamily),
+        graft.expressions.HashExpressions.minhash_signature(col("__sh"), numHashes),
         bands, r)))
       .select(col("__band"), col("__id"), col("__hs"))
       .as[(String, Long, Array[Long])]

@@ -35,6 +35,31 @@ class BandIndexSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("a meta naming another hash family is refused with the store dir; md5 or no family column reads as before") {
+    import spark.implicits._
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .filter(col("doc_id") < 200)
+    val dir = java.nio.file.Files.createTempDirectory("graft_band_family").toString
+    BandIndex.save(docs, "doc_id", "text",
+      shingleN = 3, numHashes = 64, bands = 16, dir = dir)
+    val batch = docs.filter(col("doc_id") < 10)
+      .select((col("doc_id") + 70000L).as("doc_id"), col("text"))
+    def probe() = pairSet(BandIndex.probe(spark, dir, batch, "doc_id", "text", threshold = 0.8))
+    val expected = probe()
+    assert(expected.nonEmpty)
+    // the meta an older build wrote: the same row plus hashFamily
+    def writeOldMeta(family: String): Unit =
+      Seq((3, 64, 16, family, 2, 64))
+        .toDF("shingleN", "numHashes", "bands", "hashFamily", "prefixLen", "idBuckets")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    writeOldMeta("md5")
+    assert(probe() == expected)
+    writeOldMeta("xxh64")
+    val e = intercept[IllegalArgumentException](probe())
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("xxh64"), e.getMessage)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("tagged replay converges; compaction folds files and changes nothing; crash mid-swap heals on every entry") {
     import org.apache.hadoop.fs.Path
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
@@ -387,6 +412,43 @@ class BandIndexSpec extends AnyFunSuite {
       "write entry must finish the committed rebucket's cleanup")
     assert(BandIndex.stats(spark, dir)
       .agg(org.apache.spark.sql.functions.sum("n_postings")).head().getLong(0) == total0)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("vacuum does not re-list the tombstone batches it retired") {
+    // Spark's file listing warns "The directory <path> was not found"
+    // when a cached relation over a renamed-away dir is refreshed:
+    // the vacuum must release its tombstone relation before the
+    // refresh that follows the retire renames
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .filter(col("doc_id") < 200)
+    val dir = java.nio.file.Files.createTempDirectory("graft_band_relist").toString
+    BandIndex.save(docs, "doc_id", "text",
+      shingleN = 3, numHashes = 64, bands = 16, dir = dir)
+    BandIndex.deleteIds(spark, dir, docs.filter(col("doc_id") % 7 === 3), "doc_id", "del-1")
+    val logger = LogManager.getLogger("org.apache.spark.util.HadoopFSUtils")
+      .asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("graft-relist-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    try assert(BandIndex.vacuumDeletes(spark, dir).nonEmpty)
+    finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
+    val relisted = seen.toArray.map(_.toString).filter(_.contains("tombstones"))
+    assert(relisted.isEmpty, s"retired tombstone batches re-listed: ${relisted.toSeq}")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

@@ -47,34 +47,11 @@ class DedupPropSpec extends AnyFunSuite {
     }
   }
 
-  test("property: the stripe-sketch gate never changes jaccardPairs/containmentPairs output") {
-    // the gate is loosening-only by construction (StripeOverlapUpper
-    // soundness) — this pins it END TO END: same pairs AND same
-    // values with the pre-filter on, in the small-set regime where
-    // the bound actually bites (word shingles, tens of elements vs
-    // 2048 stripes)
-    for (seed <- 21L to 23L) {
-      val docs = corpus(seed, n = 40, vocab = 8)
-        .filter(size(split(col("text"), " ")) >= 3)
-      def runJ(bits: Int) = {
-        val p = jaccardPairs(docs, "doc_id", "text", wordShingles(_, 3), 0.4,
-          sketchBits = bits)
-        val r = p.select("a", "b", "jac").as[(Long, Long, Double)].collect().toSet
-        p.unpersist(blocking = false); r
-      }
-      def runC(bits: Int) = {
-        val p = containmentPairs(docs, "doc_id", "text", shingleN = 3,
-          threshold = 0.7, sketchBits = bits)
-        val r = p.select("a", "b").as[(Long, Long)].collect().toSet
-        p.unpersist(blocking = false); r
-      }
-      assert(runJ(2048) == runJ(0), s"seed=$seed jaccard gate changed output")
-      assert(runC(2048) == runC(0), s"seed=$seed containment gate changed output")
-    }
-  }
-
   test("property: containmentPairs equals brute force on random corpora") {
-    for (seed <- 11L to 15L) {
+    // containmentPairs always runs its stripe-sketch gate, so this also
+    // pins the gate loosening-only end to end (seeds 21..23 are the
+    // small-set corpora the gate was first checked on)
+    for (seed <- (11L to 15L) ++ (21L to 23L)) {
       val docs = corpus(seed, n = 40, vocab = 8)
         .filter(size(split(col("text"), " ")) >= 3)
       val t = 0.7

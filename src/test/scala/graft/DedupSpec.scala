@@ -128,39 +128,6 @@ class DedupSpec extends AnyFunSuite {
     } finally { out.unpersist(); docs.unpersist() }
   }
 
-  test("xxh64 hash family finds the same verified near-dup pairs as md5") {
-    // exact verification is family-independent; on this corpus both
-    // families' LSH stages surface every qualifying candidate
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again today"),
-      (2L, "the quick brown fox jumps over the lazy dog again and again tonight"),
-      (3L, "a completely different document about spark catalyst expressions"),
-      (4L, "a completely different document about spark catalyst expressions"),
-      (5L, "nothing in common with any of the other texts whatsoever here")
-    ).toDF("doc_id", "text")
-    def pairsOf(fam: String) = {
-      val p = minhashNearDuplicates(docs, "doc_id", "text",
-        shingleN = 3, numHashes = 64, bands = 16, threshold = 0.8, hashFamily = fam)
-      val got = p.select("a", "b").as[(Long, Long)].collect().toSet
-      p.unpersist(); got
-    }
-    val md5Pairs = pairsOf("md5")
-    assert(md5Pairs.contains((3L, 4L))) // identical docs always pair
-    assert(pairsOf("xxh64") == md5Pairs)
-  }
-
-  test("xxh64 simhash pairs identical documents at hamming 0") {
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon"),
-      (2L, "alpha beta gamma delta epsilon"),
-      (3L, "totally unrelated words in this one")
-    ).toDF("doc_id", "text")
-    val p = simhashNearDuplicates(docs, "doc_id", "text", maxHamming = 0,
-      hashFamily = "xxh64")
-    assert(p.select("a", "b").as[(Long, Long)].collect().toSet == Set((1L, 2L)))
-    p.unpersist()
-  }
-
   test("dedupDecision keeps exactly one representative per cluster") {
     val docs = (0L until 10L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (8L, 9L)).toDF("a", "b")

@@ -8,6 +8,9 @@ import graft.expressions.{GraftExtensions, HashExpressions}
 class ExtensionsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
   test("registered SQL functions match the Column API") {
     GraftExtensions.registerAll(spark)
     val viaSql = spark.sql(
@@ -60,9 +63,16 @@ class ExtensionsSpec extends AnyFunSuite {
       spark.sql("SELECT bounded_topk(struct(-s, q)) FROM __topk_arity GROUP BY q")
         .collect()
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("bounded_topk expects exactly 3 arguments")),
+      s"got: ${messages(e)}")
+  }
+
+  test("a hash-family literal gives the arity error that names the function") {
+    GraftExtensions.registerAll(spark)
+    val e = intercept[Exception] {
+      spark.sql("SELECT minhash_signature(array('aa', 'bb'), 64, 'xxh64')").collect()
+    }
+    assert(messages(e).exists(_.contains("minhash_signature expects exactly 2 arguments")),
       s"got: ${messages(e)}")
   }
 

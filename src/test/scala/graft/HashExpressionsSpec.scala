@@ -153,51 +153,6 @@ class HashExpressionsSpec extends AnyFunSuite {
     assert(viaSql.nonEmpty && viaSql.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
   }
 
-  test("xxh64 family: MinHashSignature matches a direct per-shingle recomputation") {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
-    def xx40(s: String, seed: Long): Long = {
-      val u = UTF8String.fromString(s)
-      XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, seed) & 0xffffffffffL
-    }
-    val k = 16
-    val rows = docs.select(col("text"),
-        minhash_signature(wordShingles(col("text"), 3), k, "xxh64").as("sig"))
-      .collect()
-    rows.foreach { r =>
-      val toks = r.getString(0).split(" ")
-      val shingles =
-        if (toks.length >= 3) toks.sliding(3).map(_.mkString(" ")).toSeq.distinct
-        else Seq(toks.mkString(" "))
-      val (ca, cb) = graft.expressions.HashExpressions.minhashCoef(k)
-      val p = graft.expressions.HashExpressions.MinHashP
-      val expected = (0 until k).map { j =>
-        shingles.map(s => (ca(j) * xx40(s, 0L) + cb(j) * xx40(s, 1L)) % p).min
-      }
-      assert(r.getSeq[Long](1) == expected, s"for text '${r.getString(0)}'")
-    }
-  }
-
-  test("xxh64 family: SimHash32 matches a direct vote recomputation") {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
-    def xxBit(s: String, k: Int): Int = {
-      val u = UTF8String.fromString(s)
-      val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 0L)
-      ((h >>> k) & 1L).toInt
-    }
-    val rows = docs.select(col("text"),
-        simhash32_native(split(col("text"), " "), "xxh64").as("h")).collect()
-    rows.foreach { r =>
-      val toks = r.getString(0).split(" ")
-      val expected = (0 until 32).map { k =>
-        val votes = toks.map(t => xxBit(t, k) * 2 - 1).sum
-        if (votes >= 0) 1L << k else 0L
-      }.sum
-      assert(r.getLong(1) == expected, s"for text '${r.getString(0)}'")
-    }
-  }
-
   test("VectorKernels.round6 equals Spark round(_, 6) across magnitudes and specials") {
     val rng = new scala.util.Random(7)
     val xs = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
@@ -265,9 +220,15 @@ class HashExpressionsSpec extends AnyFunSuite {
   }
 
   test("unknown hash family is rejected at construction") {
-    intercept[IllegalArgumentException] {
-      graft.expressions.HashExpressions.MinHashSignature(
-        org.apache.spark.sql.catalyst.expressions.Literal(1), 4, "sha1")
+    // md5 is the only family: a family literal is one argument too many
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val build = graft.expressions.GraftExtensions.functions.toMap
+    for ((fn, args) <- Seq(
+        "minhash_signature" -> Seq(Literal(1), Literal(4), Literal("sha1")),
+        "simhash32" -> Seq(Literal(1), Literal("sha1")),
+        "hashed_set40" -> Seq(Literal(1), Literal("sha1")))) {
+      val e = intercept[IllegalArgumentException](build(fn)(args))
+      assert(e.getMessage.contains(fn), e.getMessage)
     }
   }
 

@@ -123,9 +123,8 @@ class PartitionedStoreSpec extends AnyFunSuite {
     val del = (0L until 200L).filter(i => i % 8 <= 3 && i < 60) ++
       (0L until 200L).filter(_ % 8 == 7)
     val values = (0 until 8).map(_.toString)
-    val retPer = PartitionedStore.rewriteExcludingAll(spark,
-      new org.apache.hadoop.fs.Path(perDir), "cell", values,
-      tombs(del: _*), "id", bulkThreshold = Int.MaxValue)
+    val retPer = values.filter(v => PartitionedStore.rewriteExcluding(spark,
+      new org.apache.hadoop.fs.Path(perDir), "cell", v, tombs(del: _*), "id"))
     val retBulk = PartitionedStore.rewriteExcludingBulk(spark,
       new org.apache.hadoop.fs.Path(bulkDir), "cell", values,
       tombs(del: _*), "id")
@@ -180,9 +179,9 @@ class PartitionedStoreSpec extends AnyFunSuite {
 
   test("rewriteExcludingAll switches to the bulk path at bulkThreshold") {
     import spark.implicits._
-    def mk(): String = {
+    def mk(cells: Int): String = {
       val dir = java.nio.file.Files.createTempDirectory("graft_bulksw").toString
-      (0L until 80L).map(i => (i, i % 8, s"v$i")).toDF("id", "cell", "payload")
+      (0L until 80L).map(i => (i, i % cells, s"v$i")).toDF("id", "cell", "payload")
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(dir)
       dir
@@ -197,15 +196,16 @@ class PartitionedStoreSpec extends AnyFunSuite {
         js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    def run(threshold: Int): (Int, Set[Long]) = {
-      val dir = mk()
+    // value counts on each side of the constant
+    def run(cells: Int): (Int, Set[Long]) = {
+      val dir = mk(cells)
       jobs.set(0)
       spark.sparkContext.addSparkListener(listener)
       try {
         PartitionedStore.rewriteExcludingAll(spark,
           new org.apache.hadoop.fs.Path(dir), "cell",
-          (0 until 8).map(_.toString),
-          tombs(del: _*), "id", bulkThreshold = threshold)
+          (0 until cells).map(_.toString),
+          tombs(del: _*), "id")
         // the listener bus is async with no public flush (the
         // indexStats test's caveat) — poll until the count stabilizes
         var last = -1
@@ -220,48 +220,48 @@ class PartitionedStoreSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       (n, ids)
     }
-    val (jobsPer, idsPer) = run(Int.MaxValue)
-    val (jobsBulk, idsBulk) = run(1)
+    val below = PartitionedStore.BulkThreshold - 1
+    val (jobsPer, idsPer) = run(below)
+    val (jobsBulk, idsBulk) = run(PartitionedStore.BulkThreshold)
     assert(idsPer == idsBulk && idsBulk == (0L until 80L).filter(_ % 2 == 0).toSet)
-    assert(jobsPer >= 8, s"pooled path should run a job per partition, saw $jobsPer")
+    assert(jobsPer >= below, s"pooled path should run a job per partition, saw $jobsPer")
     assert(jobsBulk < jobsPer,
       s"bulk path must collapse per-partition jobs: bulk $jobsBulk vs pooled $jobsPer")
   }
 
   test("compact's bulk arm equals the pooled path: one file per partition, same rows") {
     import spark.implicits._
-    def mk(): String = {
+    // value counts on each side of PartitionedStore.BulkThreshold pick
+    // the arm; each arm must keep every row and leave one file per
+    // partition
+    def run(cells: Int): Unit = {
       val dir = java.nio.file.Files.createTempDirectory("graft_bulkcomp").toString
       // three separate appends → ≥3 files per partition
+      val written = for (batch <- 0 until 3; i <- 0L until 40L)
+        yield (batch * 100L + i, i % cells, s"v$batch-$i")
       for (batch <- 0 until 3)
-        (0L until 40L).map(i => (batch * 100L + i, i % 4, s"v$batch-$i"))
-          .toDF("id", "cell", "payload")
+        written.filter(_._1 / 100 == batch).toDF("id", "cell", "payload")
           .repartition(col("cell"))
           .write.mode("append").partitionBy("cell").parquet(dir)
-      dir
-    }
-    def run(threshold: Int): (Set[(Long, String)], Seq[Int]) = {
-      val dir = mk()
       val done = PartitionedStore.compact(spark,
-        new org.apache.hadoop.fs.Path(dir), "cell", minFiles = 2,
-        bulkThreshold = threshold)
-      assert(done.toSet == (0 until 4).map(_.toString).toSet)
+        new org.apache.hadoop.fs.Path(dir), "cell", minFiles = 2)
+      assert(done.toSet == (0 until cells).map(_.toString).toSet)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val filesPerPart = (0 until 4).map { c =>
+      val filesPerPart = (0 until cells).map { c =>
         fs.listStatus(new org.apache.hadoop.fs.Path(dir, s"cell=$c"))
           .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       }
       val rows = spark.read.parquet(dir).select("id", "payload")
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      (rows, filesPerPart)
+      assert(rows == written.map(w => (w._1, w._3)).toSet && rows.size == 120,
+        s"cells=$cells lost or changed rows")
+      // compaction's contract either way: exactly one file per partition
+      assert(filesPerPart.forall(_ == 1), s"cells=$cells files per partition $filesPerPart")
     }
-    val (rowsPer, filesPer) = run(Int.MaxValue)
-    val (rowsBulk, filesBulk) = run(1)
-    assert(rowsPer == rowsBulk && rowsBulk.size == 120)
-    // compaction's contract either way: exactly one file per partition
-    assert(filesPer == Seq(1, 1, 1, 1) && filesBulk == Seq(1, 1, 1, 1))
+    run(PartitionedStore.BulkThreshold - 1)
+    run(PartitionedStore.BulkThreshold)
   }
 
   test("recover heals a crash between bulk-swap renames and drops the bulk staging") {

@@ -497,19 +497,6 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("semDedup(refineIters=1) clusters on exactly kmeansRefine's refined cells") {
-    val e = graft.Tables.embeddings(spark, sf)
-      .filter(col("vec_id") < 150).select("vec_id", "embedding")
-    val km = kmeansRefine(e, "vec_id", "embedding", clusters = 8, iters = 1)
-      .select("vec_id", "cluster").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val sd = semDedup(e, "vec_id", "embedding", clusters = 8, threshold = 0.3,
-      refineIters = 1)
-      .select("vec_id", "cluster").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sd == km)
-  }
-
   test("semDedup: planted clone is pruned, representative survives, cover is total") {
     val e = graft.Tables.embeddings(spark, sf).select("vec_id", "embedding")
     // identical vector under a higher id -> same cluster, cosine 1.0
@@ -563,27 +550,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(bucketed == dense)
     // and both recover the planted cluster id
     dense.foreach { case (id, cid) => assert(cid == (id - 10000) % 4096) }
-  }
-
-  test("semDedup assignPlanes: bucketed assignment equals dense on planted clusters, cover stays total") {
-    import spark.implicits._
-    val dim = 16
-    def vec(seed: Int): Seq[Float] =
-      (0 until dim).map(d => math.sin(seed * 31.0 + d * 7.0).toFloat)
-    // ids 0..7 are the first-C seeds; every later id copies one seed
-    // exactly (same vector → same bucket → in-bucket nearest is its
-    // own centroid at cosine 1.0) — bucketed must equal dense
-    val rows = (0 until 8).map(c => (c.toLong, vec(c))) ++
-      (0 until 120).map(i => (100L + i, vec(i % 8)))
-    val df = rows.toDF("vec_id", "embedding")
-    def run(planes: Option[Int]) =
-      semDedup(df, "vec_id", "embedding", clusters = 8, threshold = 0.95,
-        assignPlanes = planes)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val dense = run(None)
-    val bucketed = run(Some(6))
-    assert(bucketed == dense)
-    assert(bucketed.size == 128, "one row per vector (total cover)")
   }
 
   test("semDedup reliable-checkpoint mode equals the local-checkpoint default") {

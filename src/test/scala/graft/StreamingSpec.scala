@@ -303,49 +303,42 @@ class StreamingSpec extends AnyFunSuite {
       buf += ((i.toLong, text))
     }
     val docs = buf.toSeq
-    // the parity pin must hold in BOTH hash families — xxh64 is the
-    // production knob, md5 the oracle-pinned default; band contents
-    // and signatures differ between them, so each family exercises a
-    // different candidate structure against the same batch twin
-    for (family <- Seq("md5", "xxh64")) {
-      val mem = MemoryStream[(Long, String)]
-      val telem = graft.streaming.StreamOps.NearDupTelemetry(spark)
-      val out = graft.streaming.StreamOps.streamNearDup(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        shingleN = 3, numHashes = 64, bands = 16, threshold = 0.8,
-        hashFamily = family, telemetry = Some(telem))
-      val sink = s"neardup_rand_out_$family"
-      val q = out.toDF("doc_id", "dup_of", "jac")
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(sink).start()
-      try {
-        docs.grouped(20).foreach { batch =>
-          mem.addData(batch: _*)
-          q.processAllAvailable()
-        }
-        val streamPairs = spark.table(sink)
-          .collect().map(r => (math.min(r.getLong(0), r.getLong(1)),
-            math.max(r.getLong(0), r.getLong(1)))).toSet
-        val batchRes = graft.functions.DedupFunctions.minhashNearDuplicates(
-          docs.toDF("doc_id", "text"), "doc_id", "text",
-          shingleN = 3, numHashes = 64, bands = 16, threshold = 0.8,
-          hashFamily = family)
-        val batchPairs = batchRes.select("a", "b").as[(Long, Long)].collect().toSet
-        batchRes.unpersist(blocking = false)
-        assert(streamPairs == batchPairs,
-          s"family=$family stream-only=${(streamPairs -- batchPairs).take(5)} batch-only=${(batchPairs -- streamPairs).take(5)}")
-        assert(streamPairs.nonEmpty, "fixture must actually contain near-dups")
-        // telemetry: every (doc, band) arrival appended exactly once —
-        // 60 unique docs × 16 bands, nothing dropped without a TTL —
-        // and the state-size gauge reflects it
-        assert(telem.membersAdded.value == 60L * 16,
-          s"family=$family membersAdded=${telem.membersAdded.value}")
-        assert(telem.membersDropped.value == 0 && telem.bandsDropped.value == 0)
-        assert(telem.stateMembers == 60L * 16)
-        assert(telem.comparisons.value > 0,
-          "band collisions must have driven verify comparisons")
-      } finally q.stop()
-    }
+    val mem = MemoryStream[(Long, String)]
+    val telem = graft.streaming.StreamOps.NearDupTelemetry(spark)
+    val out = graft.streaming.StreamOps.streamNearDup(
+      mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
+      shingleN = 3, numHashes = 64, bands = 16, threshold = 0.8,
+      telemetry = Some(telem))
+    val sink = "neardup_rand_out"
+    val q = out.toDF("doc_id", "dup_of", "jac")
+      .writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName(sink).start()
+    try {
+      docs.grouped(20).foreach { batch =>
+        mem.addData(batch: _*)
+        q.processAllAvailable()
+      }
+      val streamPairs = spark.table(sink)
+        .collect().map(r => (math.min(r.getLong(0), r.getLong(1)),
+          math.max(r.getLong(0), r.getLong(1)))).toSet
+      val batchRes = graft.functions.DedupFunctions.minhashNearDuplicates(
+        docs.toDF("doc_id", "text"), "doc_id", "text",
+        shingleN = 3, numHashes = 64, bands = 16, threshold = 0.8)
+      val batchPairs = batchRes.select("a", "b").as[(Long, Long)].collect().toSet
+      batchRes.unpersist(blocking = false)
+      assert(streamPairs == batchPairs,
+        s"stream-only=${(streamPairs -- batchPairs).take(5)} batch-only=${(batchPairs -- streamPairs).take(5)}")
+      assert(streamPairs.nonEmpty, "fixture must actually contain near-dups")
+      // telemetry: every (doc, band) arrival appended exactly once —
+      // 60 unique docs × 16 bands, nothing dropped without a TTL —
+      // and the state-size gauge reflects it
+      assert(telem.membersAdded.value == 60L * 16,
+        s"membersAdded=${telem.membersAdded.value}")
+      assert(telem.membersDropped.value == 0 && telem.bandsDropped.value == 0)
+      assert(telem.stateMembers == 60L * 16)
+      assert(telem.comparisons.value > 0,
+        "band collisions must have driven verify comparisons")
+    } finally q.stop()
   }
 
   test("running-moments state via mapGroupsWithState (streaming Normalizer)") {
