@@ -1,7 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator,
+  GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -24,6 +26,36 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ShingleExpressions {
 
+  /** Byte spans of the tokens of `split(text, " ")`: token w is
+    * `bytes(starts(w) until ends(w))`. Empty tokens from doubled,
+    * leading or trailing spaces get zero-width spans, exactly like
+    * split's empty strings, so joining tokens i..j with single spaces
+    * IS the byte span from starts(i) to ends(j). */
+  private def tokenSpans(bytes: Array[Byte]): (Array[Int], Array[Int]) = {
+    val nb = bytes.length
+    var spaces = 0
+    var i = 0
+    while (i < nb) {
+      if (bytes(i) == 0x20) spaces += 1
+      i += 1
+    }
+    val starts = new Array[Int](spaces + 1)
+    val ends = new Array[Int](spaces + 1)
+    var w = 0
+    i = 0
+    while (i < nb) {
+      if (bytes(i) == 0x20) { ends(w) = i; w += 1; starts(w) = i + 1 }
+      i += 1
+    }
+    ends(w) = nb
+    (starts, ends)
+  }
+
+  /** Tokens j until j+len joined by single spaces, as a view of `bytes`. */
+  private def span(bytes: Array[Byte], starts: Array[Int], ends: Array[Int],
+                   j: Int, len: Int): UTF8String =
+    UTF8String.fromBytes(bytes, starts(j), ends(j + len - 1) - starts(j))
+
   /** Distinct word n-gram shingles of a single-space-tokenized text:
     * byte-identical to
     * `array_distinct(transform(sequence(0, size(toks)-n),
@@ -45,32 +77,13 @@ object ShingleExpressions {
     override def nullSafeEval(input: Any): Any = {
       val s = input.asInstanceOf[UTF8String]
       val bytes = s.getBytes // one copy per doc; spans below share it
-      val nb = bytes.length
-      var spaces = 0
-      var i = 0
-      while (i < nb) {
-        if (bytes(i) == 0x20) spaces += 1
-        i += 1
-      }
-      val numToks = spaces + 1
+      val (starts, ends) = tokenSpans(bytes)
+      val numToks = starts.length
       if (numToks < n) return new GenericArrayData(Array[Any](s))
-      // token boundaries: starts(w)..ends(w) in bytes (empty tokens
-      // from doubled/leading/trailing spaces get zero-width spans,
-      // exactly like split's empty strings)
-      val starts = new Array[Int](numToks)
-      val ends = new Array[Int](numToks)
-      var w = 0
-      i = 0
-      while (i < nb) {
-        if (bytes(i) == 0x20) { ends(w) = i; w += 1; starts(w) = i + 1 }
-        i += 1
-      }
-      ends(w) = nb
       val seen = new java.util.LinkedHashSet[UTF8String]()
       var j = 0
       while (j + n <= numToks) {
-        val from = starts(j)
-        seen.add(UTF8String.fromBytes(bytes, from, ends(j + n - 1) - from))
+        seen.add(span(bytes, starts, ends, j, n))
         j += 1
       }
       new GenericArrayData(seen.toArray)
@@ -256,6 +269,94 @@ object ShingleExpressions {
       copy(child = c)
   }
 
+  /** Every n-token window of a single-space-tokenized text, one row
+    * per start position p in 0..numToks−n, in order: `w1`..`wn` are
+    * the tokens p..p+n−1 and `ctx` is tokens p..p+n−2 joined by " ",
+    * taken as one byte span (the [[WordShingles]] identity). Row-
+    * identical to posexplode(split(text, " ")) + lead(1..n−1) over a
+    * (doc, position) window keeping the rows whose last lead is non-
+    * null — the form the LM scorers used before, which shuffled and
+    * sorted every token of the corpus on the doc id to rebuild windows
+    * each row already holds. Tokens split exactly like `split`: empty
+    * tokens from doubled/leading/trailing spaces are tokens. Texts with
+    * fewer than n tokens, and null texts, emit no row. */
+  case class TokenWindows(child: Expression, n: Int)
+      extends UnaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
+    require(n >= 2, s"window width must be >= 2, got $n")
+    override def inputTypes: Seq[DataType] = Seq(StringType)
+    override def elementSchema: StructType = StructType(
+      StructField("ctx", StringType, nullable = false) +:
+        (1 to n).map(i => StructField(s"w$i", StringType, nullable = false)))
+    override def prettyName: String = "token_windows"
+
+    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+      val s = child.eval(input).asInstanceOf[UTF8String]
+      if (s == null) return Nil
+      val bytes = s.getBytes
+      val (starts, ends) = tokenSpans(bytes)
+      Iterator.range(0, starts.length - n + 1).map { p =>
+        val row = new Array[Any](n + 1)
+        row(0) = span(bytes, starts, ends, p, n - 1)
+        var i = 0
+        while (i < n) { row(i + 1) = span(bytes, starts, ends, p + i, 1); i += 1 }
+        new GenericInternalRow(row)
+      }
+    }
+
+    override protected def withNewChildInternal(c: Expression): TokenWindows =
+      copy(child = c)
+  }
+
+  /** Per-text n-gram repetition counts for n = 1, 2, 3 over the tokens
+    * of `split(text, " ")` (empty tokens included; an n-gram is the
+    * byte span of n consecutive tokens): `maxN` is the count of the
+    * most frequent n-gram, `totN` the number of n-gram positions
+    * (numToks − n + 1), and `nd3` the number of distinct trigrams.
+    * Equal to exploding every position's 1/2/3-grams and grouping by
+    * (doc, n, gram), then by (doc, n) — the aggregation
+    * TextAnalysisFunctions.repetitionStats ran before, with two
+    * exchanges and a window sort — computed here per row. Emits one row
+    * per text with at least 3 tokens and none otherwise (the
+    * repetitionStats guard), so the guard costs no second pass. */
+  case class RepetitionCounts(child: Expression)
+      extends UnaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
+    override def inputTypes: Seq[DataType] = Seq(StringType)
+    override def elementSchema: StructType = StructType(
+      Seq("max1", "tot1", "max2", "tot2", "max3", "tot3", "nd3")
+        .map(StructField(_, LongType, nullable = false)))
+    override def prettyName: String = "repetition_counts"
+
+    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+      val s = child.eval(input).asInstanceOf[UTF8String]
+      if (s == null) return Nil
+      val bytes = s.getBytes
+      val (starts, ends) = tokenSpans(bytes)
+      val numToks = starts.length
+      if (numToks < 3) return Nil
+      val out = new Array[Any](7)
+      var n = 1
+      while (n <= 3) {
+        val counts = new java.util.HashMap[UTF8String, Integer]()
+        var max = 0
+        var j = 0
+        while (j + n <= numToks) {
+          val c: Int = counts.merge(span(bytes, starts, ends, j, n), 1,
+            (a: Integer, b: Integer) => Integer.valueOf(a + b))
+          if (c > max) max = c
+          j += 1
+        }
+        out(2 * n - 2) = max.toLong
+        out(2 * n - 1) = (numToks - n + 1).toLong
+        if (n == 3) out(6) = counts.size.toLong
+        n += 1
+      }
+      Iterator.single(new GenericInternalRow(out))
+    }
+
+    override protected def withNewChildInternal(c: Expression): RepetitionCounts =
+      copy(child = c)
+  }
+
   def word_shingles(text: Column, n: Int): Column =
     ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
 
@@ -267,4 +368,10 @@ object ShingleExpressions {
 
   def token_counts(text: Column): Column =
     ColumnBridge.column(TokenCounts(ColumnBridge.expression(text)))
+
+  def token_windows(text: Column, n: Int): Column =
+    ColumnBridge.column(TokenWindows(ColumnBridge.expression(text), n))
+
+  def repetition_counts(text: Column): Column =
+    ColumnBridge.column(RepetitionCounts(ColumnBridge.expression(text)))
 }

@@ -26,8 +26,11 @@ import org.apache.spark.sql.types._
   * merge-order-insensitive, so callers must make `ord` total — the ANN
   * paths use struct(−score, neighbor_id) (score desc, id tie-break),
   * which is exactly the window ordering they replaced; results are
-  * bit-identical. Rows with a NULL `ord` are dropped (the ANN orders
-  * are never null by construction).
+  * bit-identical. Rows whose `ord` is null or NaN — for a struct
+  * `ord`, whose leading field is — are dropped: the ANN reranks order
+  * by struct(−score, id) and a null/NaN score (a zero-norm vector's
+  * cosine) must not rank, and dropping it here rather than in a filter
+  * keeps the score from being evaluated again in the filter.
   */
 case class BoundedTopK(ord: Expression, payload: Expression, k: Int,
                        mutableAggBufferOffset: Int = 0,
@@ -71,10 +74,29 @@ case class BoundedTopK(ord: Expression, payload: Expression, k: Int,
     }
   }
 
+  // the value whose null or NaN drops a row: a struct ord's leading
+  // field, else the ord itself
+  @transient private lazy val leadOf: Any => Any = ord.dataType match {
+    case s: StructType if s.nonEmpty =>
+      val t = s.head.dataType
+      (o: Any) => {
+        val r = o.asInstanceOf[InternalRow]
+        if (r.isNullAt(0)) null else r.get(0, t)
+      }
+    case _ => (o: Any) => o
+  }
+
+  private def unranked(o: Any): Boolean = o == null || (leadOf(o) match {
+    case null => true
+    case d: Double => d.isNaN
+    case f: Float => f.isNaN
+    case _ => false
+  })
+
   override def update(buf: java.util.PriorityQueue[Array[Any]],
                       input: InternalRow): java.util.PriorityQueue[Array[Any]] = {
     val o = ord.eval(input)
-    if (o != null) {
+    if (!unranked(o)) {
       // fast reject without copying: only the k best rows of a task
       // ever allocate (UnsafeRow-backed values must be copied to
       // outlive the input row)

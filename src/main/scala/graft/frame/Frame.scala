@@ -1,7 +1,10 @@
 package graft.frame
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 /** Positional-index table: the Spark-native equivalent of the
@@ -228,9 +231,16 @@ object Frame {
     * offsets. zipWithIndex runs its count job and the main job on ONE
     * RDD lineage, so the partitioning is consistent by construction.
     */
-  private def zipIdx(df: DataFrame): DataFrame = {
+  private[graft] def zipIdx(df: DataFrame): DataFrame = {
     val schema = StructType(df.schema.fields :+ StructField(IDX, LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(rdd, schema)
+    // internal rows end to end: a round trip through external Rows
+    // converts and boxes every value twice
+    val rdd = df.queryExecution.toRdd.zipWithIndex().mapPartitions[InternalRow] { it =>
+      val append = UnsafeProjection.create(schema)
+      val joined = new JoinedRow
+      val idx = new GenericInternalRow(1)
+      it.map { case (r, i) => idx.setLong(0, i); append(joined(r, idx)) }
+    }
+    ColumnBridge.internalCreateDataFrame(df.sparkSession, rdd, schema)
   }
 }

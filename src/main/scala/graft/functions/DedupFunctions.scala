@@ -803,33 +803,41 @@ object DedupFunctions {
     * `benchCond` selects the benchmark documents; the remaining corpus
     * is scanned against them. Returns one row per contaminated doc:
     * (idCol, n_hits = distinct benchmark n-grams present, contam_frac =
-    * n_hits / doc's distinct n-gram count).
+    * n_hits / doc's distinct n-gram count). Ids must be unique: hits
+    * are counted per id.
     *
     * 100 TB shape: real benchmark suites are MBs, so their distinct
     * n-gram set is broadcast — the corpus is never shuffled for the
-    * probe, only for the per-doc count aggregation (map-side combined,
-    * ∝ distinct grams per doc). PlanSpec pins the BroadcastHashJoin.
+    * probe, only for the per-doc hit count (map-side combined, ∝
+    * matched grams). A doc's distinct n-gram count is the size of its
+    * shingle array, taken in the same map pass, so there is no second
+    * per-doc aggregation and no join back. PlanSpec pins the
+    * BroadcastHashJoin.
     */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
                     benchCond: Column, n: Int): DataFrame = {
     // >= n words on both sides mirrors the oracle's len(ws) >= n guard.
-    // n-grams come from the native word_shingles kernel (codegen'd
-    // static call, pinned bit-identical to the HOF reference by
-    // HashExpressionsSpec/DedupPropSpec), which already returns DISTINCT
-    // shingles per its kernel contract — the shingle-SET semantics need
-    // no second dedup pass. No per-token posexplode, no (doc, pos)
-    // window sort shuffle of the full token stream (the round-12
-    // review found the lead()-window form rebuilt what the kernel
-    // already produces at one extra exchange)
+    // n-grams come from the native word_shingles kernel (pinned
+    // bit-identical to the HOF reference by HashExpressionsSpec/
+    // DedupPropSpec), which already returns DISTINCT shingles — the
+    // shingle-SET semantics need no second dedup pass, and the array's
+    // size is the doc's gram count. The size is taken before the
+    // explode, so the array is not carried on every exploded row.
+    // explode_outer, not explode: for a plain explode Catalyst infers
+    // `isnotnull(__sh) AND size(__sh) > 0` and pushes it below the
+    // projection, inlining the kernel twice more per row. The outer
+    // form's null row (for an empty array, which the kernel never
+    // returns) could not pass the inner join on __s anyway.
     val sh = docs.filter(size(split(col(textCol), " ")) >= n)
       .select(col(idCol).as("__id"), benchCond.as("__bench"),
-        explode(wordShingles(col(textCol), n)).as("__s"))
+        wordShingles(col(textCol), n).as("__sh"))
+      .select(col("__id"), col("__bench"), col("__sh"),
+        size(col("__sh")).as("__ngrams"))
+      .select(col("__id"), col("__bench"), col("__ngrams"),
+        explode_outer(col("__sh")).as("__s"))
     val bench = broadcast(sh.filter(col("__bench")).select("__s").distinct())
-    val corpus = sh.filter(!col("__bench"))
-    val grams = corpus.groupBy("__id").agg(count(lit(1)).as("__ngrams"))
-    val hits = corpus.join(bench, Seq("__s"))
-      .groupBy("__id").agg(count(lit(1)).as("__nhits"))
-    grams.join(hits, Seq("__id"))
+    sh.filter(!col("__bench")).join(bench, Seq("__s"))
+      .groupBy("__id", "__ngrams").agg(count(lit(1)).as("__nhits"))
       .select(col("__id").as(idCol), col("__nhits").cast("int").as("n_hits"),
         round(col("__nhits").cast("double") / col("__ngrams").cast("double"), 6)
           .as("contam_frac"))

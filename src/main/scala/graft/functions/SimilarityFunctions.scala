@@ -86,17 +86,18 @@ object SimilarityFunctions {
     * bit-identical to the window form.
     *
     * Null/NaN scores (a zero-norm vector's cosine, a null payload) are
-    * dropped BEFORE aggregation: under the negated-ord heap they would
-    * sort opposite to the window form's NULLS LAST / NaN-greatest
-    * semantics, so excluding them is what keeps the bit-identical
-    * claim true for malformed vectors (well-formed inputs are
-    * unaffected). */
+    * dropped: under the negated-ord heap they would sort opposite to the
+    * window form's NULLS LAST / NaN-greatest semantics, so excluding
+    * them is what keeps the bit-identical claim true for malformed
+    * vectors (well-formed inputs are unaffected). The heap drops them
+    * itself (a null/NaN leading ord field): a filter on the score would
+    * be pushed into the candidate join's condition and evaluate each
+    * pair's score a second and third time. */
   private def rankTopK(scored: DataFrame, k: Int, scoreCol: String,
                        ascending: Boolean): DataFrame = {
     // negation turns desc into asc exactly (doubles negate losslessly)
     val ordScore = if (ascending) col(scoreCol) else -col(scoreCol)
-    scored.filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
-      .groupBy("query_id")
+    scored.groupBy("query_id")
       .agg(graft.expressions.TopKAggregate.bounded_topk(
         struct(ordScore.as("__o"), col("neighbor_id")),
         struct(col("neighbor_id"), col(scoreCol)), k).as("__top"))
@@ -297,12 +298,15 @@ object SimilarityFunctions {
                                       broadcastQueries: Boolean = true,
                                       excludeSelf: Boolean = true): DataFrame = {
     require(nprobe >= 1, "need nprobe >= 1")
-    // per-side norms BEFORE the join (and before the nprobe/salt
-    // explodes, so each is computed once per input row): the rerank
-    // below scores each candidate pair with ONE dot instead of three
-    val assignedN = assigned.withColumn("__cn", l2Norm(col("__cv")))
+    // per-side double casts and norms BEFORE the join (and before the
+    // nprobe explode, so each is computed once per input row): the
+    // rerank below scores each candidate pair with ONE dot instead of
+    // three, and casts no vector (the casts inside `dot` are then
+    // no-ops Catalyst removes)
+    val assignedN = assigned.withColumn("__cv", asDouble(col("__cv")))
+      .withColumn("__cn", l2Norm(col("__cv")))
     val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+      .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
       .withColumn("__qn", l2Norm(col("__qv")))
       .withColumn("__pc", explode(VectorExpressions.nearest_centroids(
         asDouble(col("__qv")), cent, nprobe, VectorKernels.MetricCosine)))

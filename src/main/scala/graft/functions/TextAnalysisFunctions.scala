@@ -228,49 +228,23 @@ object TextAnalysisFunctions {
     * frequent bigram, and the fraction of trigram occurrences that are
     * repeats of an earlier trigram in the same document.
     *
-    * One corpus scan: every doc's words explode once; bigrams/trigrams
-    * come from `lead` over the (doc, position) window and fan out
-    * through `stack` — every step codegen'd, no interpreted
-    * higher-order lambdas (the transform/concat_ws formulation measured
-    * 4.1 s at sf0.1 vs 1.3 s for this plan). Multiplicity is kept —
-    * repetition is the point. Then two hash aggregations (gram counts →
-    * per-doc maxima/totals) and a pivot back to one row per doc.
-    * Shuffle ∝ total grams; both aggs combine map-side. Counts are
-    * integers, so the final double divisions are engine-exact.
-    *
-    * Requires ≥ 3 words (filter upstream); mirrors the oracle's
-    * `len(ws) >= 3` guard.
+    * One output row per input row with at least 3 words (rows with
+    * fewer yield none, mirroring the oracle's `len(ws) >= 3` guard), so
+    * ids must be unique for the result to key on them. Scale shape: one
+    * map pass — the repetition_counts kernel counts each row's
+    * uni/bi/trigrams in place (multiplicity kept: repetition is the
+    * point), no exchange, no sort, no window. Counts are integers, so
+    * the final double divisions are engine-exact.
     */
   def repetitionStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val words = docs
-      .filter(size(toks(col(textCol))) >= 3)
-      .select(col(idCol).as("__id"), posexplode(toks(col(textCol))))
-      .toDF("__id", "__pos", "__w")
-    val w = Window.partitionBy("__id").orderBy("__pos")
-    val next1 = lead("__w", 1).over(w)
-    val next2 = lead("__w", 2).over(w)
-    val exploded = words
-      .withColumn("__g2", when(next1.isNotNull,
-        concat(col("__w"), lit(" "), next1)))
-      .withColumn("__g3", when(next2.isNotNull,
-        concat(col("__g2"), lit(" "), next2)))
-      .selectExpr("__id", "stack(3, 1, __w, 2, __g2, 3, __g3) AS (__n, __g)")
-      .filter(col("__g").isNotNull)
-    val gramCounts = exploded.groupBy("__id", "__n", "__g")
-      .agg(count(lit(1)).as("__c"))
-    val perSize = gramCounts.groupBy("__id", "__n")
-      .agg(max("__c").as("__max"), sum("__c").as("__tot"),
-        count(lit(1)).as("__nd"))
-    def pick(n: Int, c: String): Column = max(when(col("__n") === n, col(c)))
-    perSize.groupBy("__id").agg(
-        round(pick(1, "__max").cast("double") / pick(1, "__tot").cast("double"), 6)
-          .as("top_word_frac"),
-        round(pick(2, "__max").cast("double") / pick(2, "__tot").cast("double"), 6)
-          .as("top_bigram_frac"),
-        round((pick(3, "__tot") - pick(3, "__nd")).cast("double")
-          / pick(3, "__tot").cast("double"), 6).as("dup_trigram_frac"))
-      .withColumnRenamed("__id", idCol)
+    def frac(num: Column, den: String): Column =
+      round(num.cast("double") / col(den).cast("double"), 6)
+    docs.select(col(idCol),
+        graft.expressions.ShingleExpressions.repetition_counts(col(textCol)))
+      .select(col(idCol),
+        frac(col("max1"), "tot1").as("top_word_frac"),
+        frac(col("max2"), "tot2").as("top_bigram_frac"),
+        frac(col("tot3") - col("nd3"), "tot3").as("dup_trigram_frac"))
   }
 
   /** Add-α-smoothed bigram language-model scoring — the "perplexity
@@ -293,12 +267,16 @@ object TextAnalysisFunctions {
     * bit-identical in any execution order and in the oracle. α = 0.5
     * keeps every smoothing term exactly representable.
     *
-    * Scale shape: token explode + two map-side-combined hash aggs
-    * build the LM (vocab grows sublinearly in corpus — Heaps' law);
-    * scoring joins corpus bigrams to the count tables keyed on the
-    * bigram/head — shuffle ∝ corpus tokens, broadcastable when the
-    * LM fits an executor. No sort anywhere; the per-doc window is
-    * partitioned by doc. */
+    * Scale shape: each row's bigram positions come from one map pass
+    * ([[gramsOf]], no window, no exchange on the doc id); two
+    * map-side-combined hash aggs build the LM (vocab grows sublinearly
+    * in corpus — Heaps' law); scoring joins the bigram stream to the
+    * count tables keyed on the bigram/head — shuffle ∝ corpus tokens,
+    * broadcastable when the LM fits an executor — and one hash agg
+    * folds the micros back per doc. No sort anywhere. One output row
+    * per input row with at least 2 tokens (n for the n-gram variants),
+    * so ids must be unique: rows sharing an id are scored as one
+    * document. */
   def lmPerplexity(docs: DataFrame, idCol: String, textCol: String,
                    alpha: Double): DataFrame =
     lmPerplexityAgainst(docs, docs, idCol, textCol, alpha)
@@ -444,11 +422,15 @@ object TextAnalysisFunctions {
     * sums, half-away integer division), `perplexity` = exp(−mean).
     *
     * Scale shape: the LM is three map-side-combined hash aggregates
-    * over the reference (vocab ≪ corpus by Heaps' law); scoring left-
-    * joins the docs' trigram stream to the count tables on gram keys
-    * — shuffle ∝ corpus tokens, each join broadcastable when the LM
-    * fits an executor; totals ride as a broadcast 1-row relation. No
-    * global sort, no window beyond the per-doc lead chain. */
+    * over the reference (vocab ≪ corpus by Heaps' law); both gram
+    * streams come from one map pass per row ([[gramsOf]], no window,
+    * no exchange on the doc id); scoring left-joins the docs' trigram
+    * stream to the count tables on gram keys — shuffle ∝ corpus
+    * tokens, each join broadcastable when the LM fits an executor;
+    * totals ride as a broadcast 1-row relation — and one hash agg folds
+    * the micros back per doc. No sort anywhere. One output row per
+    * input row with at least 3 tokens, so ids must be unique: rows
+    * sharing an id are scored as one document. */
   def lmStupidBackoffAgainst(reference: DataFrame, docs: DataFrame,
                              idCol: String, textCol: String,
                              alpha: Double = 0.5): DataFrame = {
@@ -499,27 +481,6 @@ object TextAnalysisFunctions {
         round(exp(-col("__mean")), 6).as("perplexity"))
   }
 
-  /** (id, w1, w2, w3) trigram-position stream — the lead-chain shape
-    * of [[gramsOf]] with the context kept as separate columns so the
-    * backoff levels can key on (w1,w2), (w2,w3), (w2), (w3). */
-  private def triStream(docs: DataFrame, idCol: String,
-                        textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("__id").orderBy("__pos")
-    docs.filter(size(toks(col(textCol))) >= 3)
-      .select(col(idCol).as("__id"), posexplode(toks(col(textCol))))
-      .toDF("__id", "__pos", "__w1")
-      .withColumn("__w2", lead("__w1", 1).over(w))
-      .withColumn("__w3", lead("__w1", 2).over(w))
-      .filter(col("__w3").isNotNull)
-      .select("__id", "__w1", "__w2", "__w3")
-  }
-
-  /** (id, context, next) n-gram stream of a corpus: the context is
-    * the n−1 preceding tokens joined by " ". posexplode + per-doc
-    * lead() chain — whole-stage-codegen'd, no HOF lambdas. The last
-    * lead being non-null implies all shorter leads are too (same
-    * partition suffix), so one filter suffices. */
   /** Bigram collocations ranked by LIFT — the association-mining
     * staple for corpus analysis (Church & Hanks 1990 word association
     * norms; PMI = ln(lift), so the ranking is identical and the gated
@@ -564,20 +525,27 @@ object TextAnalysisFunctions {
       .orderBy(col("lift").desc, col("bigram")).limit(topK)
   }
 
-  private def gramsOf(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val words = docs
-      .filter(size(toks(col(textCol))) >= n)
-      .select(col(idCol).as("__id"), posexplode(toks(col(textCol))))
-      .toDF("__id", "__pos", "__w")
-    val w = Window.partitionBy("__id").orderBy("__pos")
-    val leads = (1 until n).map(k => lead("__w", k).over(w))
-    val context = concat_ws(" ", (col("__w") +: leads.dropRight(1)): _*)
-    words
-      .withColumn("__w2", leads.last)
-      .withColumn("__ctx", context)
-      .filter(col("__w2").isNotNull)
-      .select(col("__id"), col("__ctx").as("__w"), col("__w2"))
-  }
+  /** (id, context, next) n-gram stream of a corpus, one row per n-gram
+    * position: the context is the n−1 preceding tokens joined by " ".
+    * One map pass — the token_windows kernel emits each row's windows,
+    * the context as one byte span — so there is no posexplode, no
+    * exchange or sort on the doc id and no window. Docs with fewer than
+    * n tokens emit nothing. */
+  private[graft] def gramsOf(docs: DataFrame, idCol: String,
+                             textCol: String, n: Int): DataFrame =
+    windows(docs, idCol, textCol, n)
+      .select(col("__id"), col("ctx").as("__w"), col(s"w$n").as("__w2"))
+
+  /** (id, w1, w2, w3) trigram-position stream: [[gramsOf]]'s windows
+    * with the tokens kept as separate columns, so the backoff levels
+    * can key on (w1,w2), (w2,w3), (w2), (w3). */
+  private[graft] def triStream(docs: DataFrame, idCol: String,
+                               textCol: String): DataFrame =
+    windows(docs, idCol, textCol, 3).select("__id", "w1", "w2", "w3")
+      .toDF("__id", "__w1", "__w2", "__w3")
+
+  private def windows(docs: DataFrame, idCol: String, textCol: String,
+                      n: Int): DataFrame =
+    docs.select(col(idCol).as("__id"),
+      graft.expressions.ShingleExpressions.token_windows(col(textCol), n))
 }

@@ -143,4 +143,28 @@ class FrameSpec extends AnyFunSuite {
     assert(f.ordered.select("v").collect().map(_.getString(0)).toSeq ==
       Seq("a", "b", "c"))
   }
+
+  test("zipIdx appends a dense _idx and keeps every row, as the external-Row form did") {
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("img", ArrayType(FloatType)), StructField("s", StringType)))
+    val rows = (0 until 200).map { i =>
+      Row((i * 7919L) % 1009L,
+        if (i % 13 == 0) null else Seq(i.toFloat, -0.0f, Float.NaN),
+        if (i % 5 == 0) null else s"r$i ü")
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val sorted = df.repartitionByRange(col("k")).sortWithinPartitions(col("k"))
+    val got = Frame.zipIdx(sorted)
+    // the form it replaced: every row through an external Row and back
+    val idxSchema = StructType(schema.fields :+ StructField(Frame.IDX, LongType, nullable = false))
+    val old = spark.createDataFrame(
+      sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }, idxSchema)
+    assert(got.schema == idxSchema)
+    val idx = got.select(Frame.IDX).collect().map(_.getLong(0)).sorted.toSeq
+    assert(idx == (0L until 200L))
+    assert(got.exceptAll(old).isEmpty && old.exceptAll(got).isEmpty)
+    // _idx follows the key order
+    val keys = got.orderBy(Frame.IDX).select("k").collect().map(_.getLong(0)).toSeq
+    assert(keys == keys.sorted)
+  }
 }

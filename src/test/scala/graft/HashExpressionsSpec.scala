@@ -203,7 +203,13 @@ class HashExpressionsSpec extends AnyFunSuite {
       (rng.nextInt(12).toLong, rng.nextInt(300).toLong,
         math.rint(rng.nextDouble() * 1e6) / 1e6)
     }.distinct
-    val df = rows.toDF("query_id", "neighbor_id", "score")
+    // null and NaN scores do not rank: the heap drops them, so the
+    // window reference below sees only the scored rows
+    val unscored = (0 until 12).flatMap(q => Seq((q.toLong, 1000L + q, Double.NaN)))
+      .toDF("query_id", "neighbor_id", "score")
+      .unionByName((0 until 12).map(q => (q.toLong, 2000L + q)).toDF("query_id", "neighbor_id")
+        .withColumn("score", lit(null).cast("double")))
+    val df = rows.toDF("query_id", "neighbor_id", "score").unionByName(unscored)
     val agg = df.groupBy("query_id")
       .agg(graft.expressions.TopKAggregate.bounded_topk(
         struct((-col("score")).as("__o"), col("neighbor_id")),
@@ -214,7 +220,8 @@ class HashExpressionsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> (r.getLong(1), r.getDouble(2))).toMap
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id").asc)
-    val win = df.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+    val win = df.filter(col("score").isNotNull && !isnan(col("score")))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(agg == win)
   }

@@ -272,15 +272,15 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("x19 LM scoring joins bigrams on equality keys and partitions the doc window (no global sort, no cross product)") {
+  test("x19 LM scoring builds its bigrams per row with the token_windows kernel (no window, no cross product)") {
     val df = SparkEntry.queries("x19_lm_perplexity")(spark, d)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p.take(2000))
-    // the per-doc position window is partitioned (a global window would
-    // print 'Window [' with an empty partition spec and warn)
-    assert(p.contains("Window"), p.take(2000))
-    assert(p.contains("hashpartitioning(__id"), p.take(2000))
+    // each row's bigram positions come from the per-row kernel: no
+    // (doc, position) window sorts the corpus's tokens on the doc id
+    assert(!p.contains("Window"), p.take(2000))
+    assert(p.contains("token_windows"), p.take(2000))
   }
 
   test("q33 ORC round-trip pushes the key filter into the ORC scan") {

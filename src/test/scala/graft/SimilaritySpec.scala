@@ -141,7 +141,7 @@ class SimilaritySpec extends AnyFunSuite {
     // a NaN component makes every cosine against this vector NaN (a
     // zero-NORM vector instead errors at the division under ANSI mode,
     // so it can never reach the rerank); under the negated-ord heap an
-    // unfiltered NaN would rank FIRST — the rankTopK filter must drop it
+    // unfiltered NaN would rank FIRST — the heap must drop it
     val e = graft.Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 50).select("vec_id", "embedding")
     val bad = Seq((99999L, Array.fill(64)(Float.NaN))).toDF("vec_id", "embedding")
